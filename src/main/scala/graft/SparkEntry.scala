@@ -30,6 +30,10 @@ object SparkEntry {
     * semantics as exceptAll), half the passes, one shuffle (r7).
     */
   private[graft] def symDiffAndCount(a: DataFrame, b: DataFrame): (Long, Long) = {
+    // the ±1 tag would replace an input's own __t column and drop it
+    // from the grouping key — a silently wrong answer, so refuse
+    require(!a.columns.contains("__t") && !b.columns.contains("__t"),
+      "symDiffAndCount: inputs must not have a column named __t")
     val cols = a.columns.toSeq.map(col)
     val row = a.withColumn("__t", lit(1L))
       .unionByName(b.select(cols: _*).withColumn("__t", lit(-1L)))
@@ -40,6 +44,39 @@ object SparkEntry {
         coalesce(sum(col("__ca")), lit(0L)).as("ca"))
       .collect()(0)
     (row.getLong(0), row.getLong(1))
+  }
+
+  /** q_bloom_incremental's (n_new, n_missed, n_survive) over a
+    * [[Dedup.bloomFlag]]ged batch of (doc_id, text): contract check
+    * AND survivor count in ONE action over ONE left join (r7;
+    * previously two actions over a persisted frame). Keyed on the
+    * bloom's ACTUAL domain — the 8-byte Dedup.normKey hash, not raw
+    * text (the contract is defined over the hash; a text key would
+    * shuffle the whole corpus for the same guarantee). oldKeys is
+    * DISTINCT, so the left join multiplies nothing and `__hit` null ⟺
+    * the hash is absent from the corpus — exactly
+    * incrementalDedupFlagged's anti-join arm, so n_survive = unflagged
+    * rows + flagged rows that verify novel. A null `maybe_dup` is
+    * neither flagged nor unflagged: the operator's where(maybe_dup) /
+    * where(!maybe_dup) both drop it, so the coalesces count it in
+    * neither arm (EdgeSpec pins fold == operator).
+    */
+  private[graft] def bloomIncrementalCounts(old: DataFrame,
+      flagged: DataFrame): (Long, Long, Long) = {
+    val oldKeys = old.select(Dedup.normKey(col("text")).as("__h")).distinct()
+      .withColumn("__hit", lit(true))
+    val unflagged = coalesce(!col("maybe_dup"), lit(false))
+    val isFlagged = coalesce(col("maybe_dup"), lit(false))
+    val row = flagged
+      .withColumn("__h", Dedup.normKey(col("text")))
+      .join(oldKeys, Seq("__h"), "left")
+      .agg(count(lit(1)).cast("long").as("n_new"),
+        sum(when(unflagged && coalesce(col("__hit"), lit(false)), 1L)
+          .otherwise(0L)).cast("long").as("n_missed"),
+        sum(when(unflagged || (isFlagged && col("__hit").isNull), 1L)
+          .otherwise(0L)).cast("long").as("n_survive"))
+      .collect()(0)
+    (row.getLong(0), row.getLong(1), row.getLong(2))
   }
 
   /** ANN query vectors, collected ONCE per (sf dir) and memoized for
@@ -1210,31 +1247,7 @@ object SparkEntry {
       // LOWERS the false-positive rate; the oracled values are
       // fp-independent
       val flagged = Dedup.bloomFlag(old, nw, "text", expectedOldItems = 1 << 20)
-      // Contract check AND survivor count in ONE action over ONE
-      // left join (r7; previously two actions over a persisted
-      // frame). Keyed on the bloom's ACTUAL domain — the 8-byte
-      // Dedup.normKey hash, not raw text (the contract is defined
-      // over the hash; a text key would shuffle the whole corpus for
-      // the same guarantee). oldKeys is DISTINCT, so the left join
-      // multiplies nothing and `__hit` null ⟺ the hash is absent
-      // from the corpus — exactly incrementalDedupFlagged's
-      // anti-join arm, so n_survive = unflagged rows + flagged rows
-      // that verify novel (the operator itself stays covered by
-      // BloomDedupSpec; the oracled values are unchanged).
-      val oldKeys = old.select(Dedup.normKey(col("text")).as("__h")).distinct()
-        .withColumn("__hit", lit(true))
-      val row = flagged
-        .withColumn("__h", Dedup.normKey(col("text")))
-        .join(oldKeys, Seq("__h"), "left")
-        .agg(count(lit(1)).cast("long").as("n_new"),
-          sum(when(!col("maybe_dup") && coalesce(col("__hit"), lit(false)), 1L)
-            .otherwise(0L)).cast("long").as("n_missed"),
-          sum(when(!col("maybe_dup") || col("__hit").isNull, 1L)
-            .otherwise(0L)).cast("long").as("n_survive"))
-        .collect()(0)
-      val total = row.getLong(0)
-      val missed = row.getLong(1)
-      val survivors = row.getLong(2)
+      val (total, missed, survivors) = bloomIncrementalCounts(old, flagged)
       Seq((total, total - survivors, missed, survivors))
         .toDF("n_new", "n_dup", "n_missed", "n_survive")
     }),

@@ -1180,18 +1180,27 @@ object CompressedSearch {
     */
   private[graft] val MaxSelectedBlockIds = 4096
 
-  /** The payload-FREE half of the two-phase block selection: committed
-    * blocks under `pred`, projected to (blockId, codecId, symtab,
-    * bloomEnc) only — column pruning reaches the parquet scan, so the
-    * store's heaviest column (payload, ~95% of bytes) is never read
-    * here (plan-asserted in CompressedSearchSpec).
+  /** Committed `blocks` under `pred` with the token index's `bloomEnc`
+    * adjoined — the pre-scan's frame.
     */
+  private def blockFrame(spark: SparkSession, outDir: String,
+      blocks: DataFrame, partIds: Option[Set[Int]], pred: Column): DataFrame =
+    TokenIndex.withBloom(spark, outDir,
+      TokenDecoder.committedOf(spark, outDir, blocks, partIds).where(pred))
+
+  /** The payload-FREE projection of a [[blockFrame]]: (blockId, codecId,
+    * symtab, bloomEnc) only — column pruning reaches the parquet scan,
+    * so the store's heaviest column (payload, ~95% of bytes) is never
+    * read here (plan-asserted in CompressedSearchSpec).
+    */
+  private def metaColumns(blocks: DataFrame): DataFrame =
+    blocks.select("blockId", "codecId", "symtab", "bloomEnc")
+
+  /** The payload-free half of the two-phase block selection. */
   private[graft] def blockMetaFrame(spark: SparkSession, outDir: String,
       partIds: Option[Set[Int]], pred: Column): DataFrame =
-    TokenIndex.withBloom(spark, outDir,
-        TokenDecoder.committedBlocks(spark, outDir, partIds).where(pred)
-          .select("blockId", "codecId", "symtab"))
-      .select("blockId", "codecId", "symtab", "bloomEnc")
+    metaColumns(blockFrame(spark, outDir,
+      StoreTables.read(spark, s"$outDir/blocks", StoreTables.Blocks), partIds, pred))
 
   /** TWO-PHASE block selection (the Abadi-style late-materialization
     * move applied to our own store): a payload-free pre-scan
@@ -1208,21 +1217,32 @@ object CompressedSearch {
     * by construction. The JVM-side rejection stays in the decode path
     * either way, so the IN filter is an accelerator, never a
     * correctness dependency.
+    *
+    * The pruned payload scan reads the pre-scan's own `blocks` relation
+    * (one resolve, one file listing) ALONE: the survivors are
+    * live blocks already (the pre-scan applied the commit joins and
+    * the token bloom), and a runId-prefixed blockId names exactly one
+    * block row, so re-running the lineage/marker/index joins would
+    * only repeat three scans and three broadcasts per call; `pred`
+    * stays on it as a pushed row-group filter. Its `bloomEnc` is null
+    * ("may contain"): every survivor already passed the bloom. The
+    * empty and over-cap arms keep the pre-scan's [[blockFrame]].
     */
   private def selectBlocks(spark: SparkSession, outDir: String,
       partIds: Option[Set[Int]], pred: Column,
       reject: (Int, Array[Byte], Array[Byte]) => Boolean): DataFrame = {
     import spark.implicits._
-    val survivors = blockMetaFrame(spark, outDir, partIds, pred)
+    val blocks = StoreTables.read(spark, s"$outDir/blocks", StoreTables.Blocks)
+    val base = blockFrame(spark, outDir, blocks, partIds, pred)
+    val survivors = metaColumns(base)
       .as[(String, Int, Array[Byte], Array[Byte])]
       .filter { case (_, cid, st, bloom) => !reject(cid, st, bloom) }
       .map(_._1)
       .take(MaxSelectedBlockIds + 1)
-    val base = TokenIndex.withBloom(spark, outDir,
-      TokenDecoder.committedBlocks(spark, outDir, partIds).where(pred))
     if (survivors.isEmpty) base.where(lit(false))
     else if (survivors.length <= MaxSelectedBlockIds)
-      base.where(col("blockId").isInCollection(survivors.toSeq))
+      blocks.where(col("blockId").isInCollection(survivors.toSeq) && pred)
+        .withColumn("bloomEnc", lit(null).cast("binary"))
     else base
   }
 

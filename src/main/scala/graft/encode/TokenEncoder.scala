@@ -371,10 +371,11 @@ object TokenEncoder {
     * otherwise every idempotent re-run would re-scan the whole input
     * just to rediscover they are empty).
     */
-  /** Read a store-metadata parquet dir, tolerating the crash artifact
-    * of a dir that exists with NO committed files (only _temporary
-    * from a killed write job) — that state must read as "nothing
-    * committed", not wedge every resume with an AnalysisException.
+  /** [[auditStore]]'s tolerant read: schema INFERRED from the files,
+    * so the fsck can report on stores whose tables do not fit
+    * [[StoreTables]]' schemas at all. A dir that exists with NO
+    * committed files (only _temporary from a killed write job) reads
+    * as None. Every other reader uses the fixed schemas.
     */
   private[encode] def safeReadParquet(spark: SparkSession, path: String,
       mergeSchema: Boolean = false): Option[org.apache.spark.sql.DataFrame] =
@@ -397,20 +398,18 @@ object TokenEncoder {
     */
   def committedPartIds(spark: SparkSession, outDir: String): Set[Int] = {
     import spark.implicits._
-    safeReadParquet(spark, s"$outDir/completed")
-      .map(_.select("partId").distinct().as[Int].collect().toSet)
+    StoreTables.readCommitted(spark, s"$outDir/completed", StoreTables.Completed)
+      .map(_.select("partId").as[Int].collect().toSet)
       .getOrElse(Set.empty)
   }
 
-  /** The (partId, runId) commit markers — the reader-side filter. */
+  /** The (partId, runId) commit markers — the reader-side filter. Not
+    * deduplicated: its consumers only test a pair's existence.
+    */
   private[encode] def completedPairs(spark: SparkSession,
-                                     outDir: String): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    safeReadParquet(spark, s"$outDir/completed")
-      .map(_.select(col("partId"), col("runId")).distinct())
-      .getOrElse(spark.range(0).select(col("id").cast("int").as("partId"),
-        lit("").as("runId")))
-  }
+                                     outDir: String): DataFrame =
+    StoreTables.readCommitted(spark, s"$outDir/completed", StoreTables.Completed)
+      .getOrElse(StoreTables.empty(spark, StoreTables.Completed))
 
   /** The partition plan is pinned to the output directory: computed
     * (from a sample) on the FIRST run and persisted as plan.json, then
@@ -517,7 +516,7 @@ object TokenEncoder {
       // readback validation and avoids recomputing the encode.
       // Filtering on this run's id excludes stale blocks from crashed
       // (uncommitted) runs.
-      val written = spark.read.parquet(s"$outDir/blocks")
+      val written = StoreTables.read(spark, s"$outDir/blocks", StoreTables.Blocks)
         .where($"runId" === runId)
       val lineage = written.select(
         lit(cfg.inputFile).as("inputFile"),
@@ -544,7 +543,7 @@ object TokenEncoder {
       // rows a previous CRASHED run landed for the same partIds,
       // double-counting totalTokens/rawBytes in callers aggregating
       // the return (Bench, CorpusPipelineCli).
-      spark.read.parquet(s"$outDir/lineage")
+      StoreTables.read(spark, s"$outDir/lineage", StoreTables.Lineage)
         .where($"blockId".startsWith(runId + "-")).as[LineageRecord]
     } finally if (cfg.cacheInput) cached.unpersist(blocking = false)
   }
@@ -557,7 +556,7 @@ object TokenEncoder {
   def vacuum(spark: SparkSession, outDir: String): Long = {
     import spark.implicits._
     val blocksPath = s"$outDir/blocks"
-    val blocks = spark.read.parquet(blocksPath)
+    val blocks = StoreTables.read(spark, blocksPath, StoreTables.Blocks)
     val total = blocks.count()
     // the reader's own "live" definition (lineage + commit marker), so
     // vacuum also reclaims a crashed run's blocks whose lineage landed
@@ -568,7 +567,8 @@ object TokenEncoder {
     val tmp = s"$outDir/blocks_vacuum_tmp"
     live.write.mode("overwrite").option("compression", "uncompressed").parquet(tmp)
     // readback validation BEFORE touching the live table
-    require(spark.read.parquet(tmp).count() == keep, "vacuum rewrite readback mismatch")
+    require(StoreTables.read(spark, tmp, StoreTables.Blocks).count() == keep,
+      "vacuum rewrite readback mismatch")
     // two renames with checked results; on a failed second rename the
     // original table is restored — committed data is never the only
     // casualty of a partial swap
@@ -679,10 +679,10 @@ object TokenEncoder {
     cleanBlocks.write.mode("append")
       .option("compression", "uncompressed")
       .parquet(s"$outDir/blocks")
-    spark.read.parquet(s"$inDir/lineage")
+    StoreTables.read(spark, s"$inDir/lineage", StoreTables.Lineage)
       .join(cleanBlocks.select("blockId"), Seq("blockId"), "left_semi")
       .write.mode("append").parquet(s"$outDir/lineage")
-    spark.read.parquet(s"$inDir/completed")
+    StoreTables.read(spark, s"$inDir/completed", StoreTables.Completed)
       .where(keep)
       .write.mode("append").parquet(s"$outDir/completed")
   }
@@ -751,16 +751,16 @@ object TokenEncoder {
       case None =>
         savePlan(plans.head.get, outDir)
         inDirs.zip(markerPairs).foreach { case (d, pairs) =>
-          // committedBlocks backfills legacy stores' missing zone/bloom
-          // columns with the no-pruning sentinels, so mixed-era inputs
-          // merge into one uniform schema
+          // committedBlocks reads the fixed blocks schema, so mixed-era
+          // inputs merge into one uniform schema (a legacy file's absent
+          // zone/bloom columns land as null: no pruning)
           val live = TokenDecoder.committedBlocks(spark, d, None)
           // payloads are already codec+zstd compressed (same reasoning
           // as run()'s block write)
           live.write.mode("append").option("compression", "uncompressed")
             .parquet(s"$outDir/blocks")
           // lineage keyed by blockId: crashed-run orphan rows never travel
-          spark.read.parquet(s"$d/lineage")
+          StoreTables.read(spark, s"$d/lineage", StoreTables.Lineage)
             .join(live.select("blockId"), Seq("blockId"), "left_semi")
             .write.mode("append").parquet(s"$outDir/lineage")
           // markers from the already-collected pairs — a marked-but-empty
@@ -773,7 +773,7 @@ object TokenEncoder {
         // small lineage table — a readback validation of the copy —
         // instead of re-executing the committedBlocks scan+joins per
         // input just to count
-        val sm = spark.read.parquet(s"$outDir/lineage")
+        val sm = StoreTables.read(spark, s"$outDir/lineage", StoreTables.Lineage)
           .agg(count(lit(1)), coalesce(sum("rowCount"), lit(0L))).first()
         MergeResult(sm.getLong(0), sm.getLong(1), rowLevel = true, None)
       case Some(why) =>
@@ -1168,25 +1168,36 @@ object TokenDecoder {
     * this filter readers would see both copies).
     */
   private[encode] def committedBlocks(spark: SparkSession, outDir: String,
-                              partIds: Option[Set[Int]]): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col, lit}
+                              partIds: Option[Set[Int]]): DataFrame =
+    committedOf(spark, outDir,
+      StoreTables.read(spark, s"$outDir/blocks", StoreTables.Blocks), partIds)
+
+  /** [[committedBlocks]] over `blocks`, a read of `outDir`'s blocks
+    * table the caller keeps: a caller that scans the table again (the
+    * two-phase selection's payload scan) resolves it once, and both
+    * scans see one file listing.
+    */
+  private[encode] def committedOf(spark: SparkSession, outDir: String,
+      blocks: DataFrame, partIds: Option[Set[Int]]): DataFrame = {
     // fail LOUDLY on a store whose lineage exists but whose commit
     // markers don't fit the (partId, runId) protocol — silently
     // decoding such a store as zero rows would read as data loss (and
     // vacuum would delete every block as "uncommitted"). Two shapes:
     // a `completed` dir missing the runId column is definitively a
-    // pre-marker-protocol store; lineage with NO `completed` dir at
-    // all is either legacy or a first run crashed before its markers
-    // — both need the same answer (re-encode / resume), never an
-    // empty read.
-    TokenEncoder.safeReadParquet(spark, s"$outDir/completed") match {
-      case Some(c) if !c.columns.contains("runId") =>
+    // pre-marker-protocol store; lineage with NO committed `completed`
+    // file at all is either legacy or a first run crashed before its
+    // markers — both need the same answer (re-encode / resume), never
+    // an empty read. Both checks are driver-side (a listing and one
+    // footer read); only the second, crash-shaped case runs a job.
+    val lineagePath = s"$outDir/lineage"
+    StoreTables.dataFiles(spark, s"$outDir/completed").headOption match {
+      case Some(f) if !StoreTables.footerHasColumn(spark, f, "runId") =>
         throw new IllegalStateException(
           s"token store at $outDir predates the commit-marker protocol: " +
           "completed/ lacks the runId column. Re-encode the store (or " +
           "backfill (partId, runId) markers from lineage) before reading.")
       case None
-        if TokenEncoder.safeReadParquet(spark, s"$outDir/lineage")
+        if StoreTables.readCommitted(spark, lineagePath, StoreTables.Lineage)
           .exists(!_.isEmpty) =>
         throw new IllegalStateException(
           s"token store at $outDir has lineage but no completed/ markers — " +
@@ -1196,38 +1207,20 @@ object TokenDecoder {
           "zero rows for real data.")
       case _ => ()
     }
-    // mergeSchema: a pre-zone-map store RESUMED by current code is a
-    // MIXED store (legacy files without minTok/maxTok next to new files
-    // with them); without the merge, Spark could infer the schema from
-    // a legacy footer and silently drop the new files' zone columns.
-    val all0 = spark.read.option("mergeSchema", "true")
-      .parquet(s"$outDir/blocks")
-    // Pre-zone-map stores lack minTok/maxTok entirely: backfill the
-    // no-pruning sentinels so every intersects-[lo,hi] predicate keeps
-    // the block (correct, just unpruned). In a MIXED store the merged
-    // schema gives legacy files NULL zone values; they are NOT
-    // coalesced here — that would wrap the columns in coalesce() and
-    // kill filter pushdown for pure-new stores too. Consumers stay
-    // null-safe instead: CompressedSearch's zone predicate keeps null
-    // rows (isNull OR compare, still parquet-pushable) and the decode
-    // boundary (readBlocks) coalesces to the sentinels just before
-    // .as[EncodedBlock], whose non-nullable Int fields would otherwise
-    // throw on legacy rows.
-    val all1 =
-      if (all0.columns.contains("minTok")) all0
-      else all0.withColumn("minTok", lit(Int.MinValue))
-        .withColumn("maxTok", lit(Int.MaxValue))
-    // same convention for the doc-id bloom: a store written before the
-    // column existed reads as null = "may contain anything" (correct,
-    // just unpruned). Mixed stores get per-file nulls from mergeSchema.
-    val all =
-      if (all1.columns.contains("docBloomEnc")) all1
-      else all1.withColumn("docBloomEnc", lit(null).cast("binary"))
-    val pruned = partIds.fold(all)(ids =>
-      all.where(col("partId").isInCollection(ids.map(Int.box))))
-    val committed = spark.read.parquet(s"$outDir/lineage")
-      .select("blockId").distinct()
-    pruned.join(committed, Seq("blockId"), "left_semi")
+    // fixed schema: a legacy file's absent zone-map / doc-bloom columns
+    // read NULL = no pruning. They are never coalesced here — that
+    // would wrap the columns in coalesce() and kill filter pushdown.
+    // Consumers stay null-safe instead: CompressedSearch's zone
+    // predicate keeps null rows (isNull OR compare, still
+    // parquet-pushable), DocBloom/TokBloom treat a null filter as "may
+    // contain anything", and the decode boundary (readBlocks) coalesces
+    // to the sentinels just before .as[EncodedBlock].
+    val pruned = partIds.fold(blocks)(ids =>
+      blocks.where(col("partId").isInCollection(ids.map(Int.box))))
+    // left-semi right sides only test existence: no distinct needed
+    pruned
+      .join(StoreTables.read(spark, lineagePath, StoreTables.Lineage)
+        .select("blockId"), Seq("blockId"), "left_semi")
       .join(broadcast(TokenEncoder.completedPairs(spark, outDir)),
         Seq("partId", "runId"), "left_semi")
   }
@@ -1243,7 +1236,7 @@ object TokenDecoder {
     * TokenRow immediately) while letting the parquet scan's
     * ReadSchema drop the dead columns. The minTok/maxTok coalesce is
     * the legacy-store sentinel backfill (EncodedBlock's Int fields
-    * cannot hold the nulls a mixed pre-zone-map store carries).
+    * cannot hold the nulls a pre-zone-map file's rows read as).
     */
   private def decodeProjection(df: org.apache.spark.sql.DataFrame)(
       implicit enc: org.apache.spark.sql.Encoder[EncodedBlock]): Dataset[EncodedBlock] =

@@ -62,14 +62,15 @@ object TokenIndex {
       }
       .toDF("blockId", "n_distinct", "bloomEnc")
     rows.write.mode("overwrite").parquet(path(outDir))
-    spark.read.parquet(path(outDir)).count()
+    StoreTables.read(spark, path(outDir), StoreTables.TokIdx).count()
   }
 
-  /** The index table if one exists and is readable; None degrades
-    * every consumer to the unpruned walk.
+  /** The index table if it holds committed files; None (no index, or
+    * only a crashed build's `_temporary`) degrades every consumer to
+    * the unpruned walk.
     */
   def load(spark: SparkSession, outDir: String): Option[DataFrame] =
-    TokenEncoder.safeReadParquet(spark, path(outDir))
+    StoreTables.readCommitted(spark, path(outDir), StoreTables.TokIdx)
       .map(_.select("blockId", "bloomEnc"))
 
   /** An index bigger than this opts OUT of pruning: the adjoin below

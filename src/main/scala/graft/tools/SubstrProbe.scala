@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Stage-by-stage noop timing of the ExactSubstr trim pipeline:
-  *   runMain graft.tools.SubstrProbe <sfDir>
+  *   runMain graft.dedup.SubstrProbe <sfDir>
   * Times (cold, warm) each sub-plan of the production (non-portable)
   * substrDedupTrim at k=8 so the residual cost named in
   * OPTIMIZATION_r07.md ("Not yet optimized") is attributable to a

@@ -131,4 +131,34 @@ class EdgeSpec extends SparkSpecBase {
     val (e, en) = graft.SparkEntry.symDiffAndCount(a.limit(0), b)
     assert(e == 3L && en == 0L)
   }
+
+  test("symDiffAndCount refuses an input that already has a __t column") {
+    val s = spark
+    import s.implicits._
+    val t = Seq((1L, 2L)).toDF("id", "__t")
+    intercept[IllegalArgumentException](graft.SparkEntry.symDiffAndCount(t, t))
+  }
+
+  test("q_bloom_incremental's folded counts equal the operator on null text") {
+    val s = spark
+    import s.implicits._
+    import graft.dedup.Dedup
+    val old = Seq((1L, "alpha beta"), (2L, "gamma delta"), (3L, null: String))
+      .toDF("doc_id", "text")
+    val batch = Seq((10L, "alpha beta"), (11L, "brand new"), (12L, null: String),
+      (13L, "ALPHA  beta")).toDF("doc_id", "text")
+    def check(flagged: org.apache.spark.sql.DataFrame): Unit = {
+      val (n, missed, survive) = graft.SparkEntry.bloomIncrementalCounts(old, flagged)
+      assert(n == flagged.count())
+      assert(missed == 0L)
+      assert(survive == Dedup.incrementalDedupFlagged(old, flagged, "text").count())
+    }
+    // the real probe, with null text in both the corpus and the batch
+    check(Dedup.bloomFlag(old, batch, "text", expectedOldItems = 1 << 10))
+    // an abstaining probe (null maybe_dup): the operator's where(maybe_dup)
+    // and where(!maybe_dup) both drop such a row, so the fold must too
+    check(batch.withColumn("maybe_dup",
+      when(col("doc_id") === 11L, lit(null).cast("boolean"))
+        .otherwise(col("doc_id") =!= 11L)))
+  }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.encode.{TokenDecoder, TokenEncoder}
+import graft.encode.{CompressedSearch, TokenDecoder, TokenEncoder, TokenIndex}
 import graft.encode.TokenEncoder.EncodeConfig
 import graft.model.TokenRow
 import graft.stats.TokenStatsAgg
@@ -13,6 +13,14 @@ import graft.synth.TokenSynth
 class PipelineSpec extends SparkSpecBase {
 
   private val N = 6000L
+
+  /** Measured Spark jobs per call: a fresh encode (plan sample, block
+    * write and readback, lineage and marker commits), then a full
+    * decode and a countTokens on the committed, indexed store.
+    */
+  private val EncodeJobBudget = 7
+  private val DecodeJobBudget = 4
+  private val CountJobBudget = 6
 
   private def synth = TokenSynth.dataset(spark, N, parallelism = 4)
 
@@ -109,6 +117,87 @@ class PipelineSpec extends SparkSpecBase {
     new java.io.File(s"$out/completed/_temporary").mkdirs()
     new java.io.File(s"$out/lineage/_temporary").mkdirs()
     assert(TokenEncoder.committedPartIds(spark, out).isEmpty)
+    def rm(f: java.io.File): Unit = {
+      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
+      f.delete(); ()
+    }
+    val cfg = EncodeConfig(targetRowsPerPart = 1000)
+    // completed/ holding only a killed marker write's _temporary, next
+    // to committed lineage: still the loud "no markers" failure, never
+    // an empty read of a store that visibly holds data
+    val store = tmpDir("crash-completed")
+    TokenEncoder.run(synth, store, cfg)
+    rm(new java.io.File(s"$store/completed"))
+    new java.io.File(s"$store/completed/_temporary/0").mkdirs()
+    val err = intercept[IllegalStateException] {
+      TokenDecoder.read(spark, store).count()
+    }
+    assert(err.getMessage.contains("lineage but no completed/ markers"))
+    // tokidx/ holding only a crashed build's _temporary: no index, so
+    // search degrades to the unpruned walk with the brute-force answer
+    val indexed = tmpDir("crash-tokidx")
+    TokenEncoder.run(synth, indexed, cfg)
+    new java.io.File(s"${TokenIndex.path(indexed)}/_temporary/0").mkdirs()
+    assert(TokenIndex.load(spark, indexed).isEmpty)
+    val (lo, hi) = (100, 116)
+    val want = synth.collect()
+      .map(_.tokens.count(t => t >= lo && t <= hi).toLong).sum
+    assert(want > 0L)
+    assert(CompressedSearch.countTokens(spark, indexed, lo, hi)
+      .first().getLong(0) == want)
+    assert(CompressedSearch.searchDocs(spark, indexed, lo, hi)
+      .agg(org.apache.spark.sql.functions.sum("n_hits")).first().getLong(0) == want)
+  }
+
+  /** Spark jobs launched by `body`. The listener counts jobs carrying a
+    * per-call local property (broadcast threads inherit it); a marker
+    * job run afterwards drains the asynchronous listener bus — its
+    * start event is delivered after every event `body` posted.
+    */
+  private def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val key = "graft.test.jobs"
+    val tag = java.util.UUID.randomUUID().toString
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(key)).orNull match {
+          case `tag` => n.incrementAndGet(); ()
+          case v if v == s"$tag-marker" => drained.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, tag)
+      try body finally sc.setLocalProperty(key, s"$tag-marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+    n.get
+  }
+
+  test("encode, decode and countTokens stay within their Spark-job budgets") {
+    // the committed-block path reads graft's own fixed table schemas:
+    // a schema-inferring read (one footer job each) or a redundant
+    // shuffle on this path shows up here as extra jobs per call
+    val out = tmpDir("job-budget")
+    val encodeJobs = jobsOf {
+      TokenEncoder.run(synth, out, EncodeConfig(targetRowsPerPart = 1000)); ()
+    }
+    assert(encodeJobs <= EncodeJobBudget, s"encode ran $encodeJobs jobs")
+    TokenIndex.build(spark, out)
+    val decodeJobs = jobsOf { TokenDecoder.read(spark, out).count(); () }
+    assert(decodeJobs <= DecodeJobBudget, s"decode ran $decodeJobs jobs")
+    val countJobs = jobsOf {
+      CompressedSearch.countTokens(spark, out, 100, 116).collect(); ()
+    }
+    assert(countJobs <= CountJobBudget, s"countTokens ran $countJobs jobs")
   }
 
   test("savePlan refuses to replace a different pinned plan") {
