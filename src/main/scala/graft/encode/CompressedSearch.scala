@@ -181,17 +181,9 @@ object CompressedSearch {
                      lo: Int = Int.MinValue,
                      hi: Int = Int.MaxValue): DataFrame = {
     import spark.implicits._
-    // a restricted range gets the two-phase selection (rejected
-    // blocks' payload bytes unread); the full-range histogram has
-    // nothing to reject — every block contributes — so it keeps the
-    // single metadata-light scan with no pre-scan overhead
-    val blocks =
-      if (lo == Int.MinValue && hi == Int.MaxValue)
-        TokenDecoder.committedBlocks(spark, outDir, None).where(zone(lo, hi))
-      else selectBlocks(spark, outDir, None, zone(lo, hi),
+    selectBlocks(spark, outDir, None, zone(lo, hi),
         (cid, st, bloom) => dictRejects(cid, st, lo, hi) ||
           !graft.codec.TokBloom.mayIntersectRange(bloom, lo, hi))
-    blocks
       .select("codecId", "postCodec", "symtab", "payload", "totalTokens")
       .as[(Int, Int, Array[Byte], Array[Byte], Long)]
       .flatMap { case (cid, post, st, pay, nTokL) =>
@@ -975,7 +967,8 @@ object CompressedSearch {
     * term(d,t) = idf * tf*(k1+1) / (tf + k1*(1 - b + b*dl/avgdl)).
     *
     * Scale shape: N and avgdl come from block METADATA only (one
-    * parquet agg over blockRows/totalTokens); document frequencies
+    * agg over the cached live-block frame's blockRows/totalTokens,
+    * [[TokenDecoder.liveBlocks]]); document frequencies
     * come from a pruned pass that pre-aggregates per block (the
     * exchange is |query| rows per surviving block); scoring is a
     * second pruned pass emitting one row per MATCHING doc, and the
@@ -997,7 +990,7 @@ object CompressedSearch {
     import spark.implicits._
     require(query0.nonEmpty, "bm25TopK: empty query")
     val query = query0.distinct
-    val meta = TokenDecoder.committedBlocks(spark, outDir, None)
+    val meta = TokenDecoder.liveBlocks(spark, outDir)
       .agg(sum("blockRows").cast("long"), sum("totalTokens").cast("long"))
       .first()
     require(!meta.isNullAt(0) && meta.getLong(0) > 0,
@@ -1180,27 +1173,20 @@ object CompressedSearch {
     */
   private[graft] val MaxSelectedBlockIds = 4096
 
-  /** Committed `blocks` under `pred` with the token index's `bloomEnc`
-    * adjoined — the pre-scan's frame.
+  /** The payload-free half of the two-phase block selection: (blockId,
+    * codecId, symtab, bloomEnc) of the live blocks under `partIds` and
+    * `pred`, read from the store's cached live-block frame
+    * ([[TokenDecoder.liveBlocks]]). The frame's build projects no
+    * payload, so the store's heaviest column (~95% of bytes) is never
+    * read for it (plan-asserted in CompressedSearchSpec).
     */
-  private def blockFrame(spark: SparkSession, outDir: String,
-      blocks: DataFrame, partIds: Option[Set[Int]], pred: Column): DataFrame =
-    TokenIndex.withBloom(spark, outDir,
-      TokenDecoder.committedOf(spark, outDir, blocks, partIds).where(pred))
-
-  /** The payload-FREE projection of a [[blockFrame]]: (blockId, codecId,
-    * symtab, bloomEnc) only — column pruning reaches the parquet scan,
-    * so the store's heaviest column (payload, ~95% of bytes) is never
-    * read here (plan-asserted in CompressedSearchSpec).
-    */
-  private def metaColumns(blocks: DataFrame): DataFrame =
-    blocks.select("blockId", "codecId", "symtab", "bloomEnc")
-
-  /** The payload-free half of the two-phase block selection. */
   private[graft] def blockMetaFrame(spark: SparkSession, outDir: String,
-      partIds: Option[Set[Int]], pred: Column): DataFrame =
-    metaColumns(blockFrame(spark, outDir,
-      StoreTables.read(spark, s"$outDir/blocks", StoreTables.Blocks), partIds, pred))
+      partIds: Option[Set[Int]], pred: Column): DataFrame = {
+    val live = TokenDecoder.liveBlocks(spark, outDir)
+    partIds.fold(live)(ids => live.where(col("partId").isInCollection(ids.map(Int.box))))
+      .where(pred)
+      .select("blockId", "codecId", "symtab", "bloomEnc")
+  }
 
   /** TWO-PHASE block selection (the Abadi-style late-materialization
     * move applied to our own store): a payload-free pre-scan
@@ -1218,32 +1204,34 @@ object CompressedSearch {
     * either way, so the IN filter is an accelerator, never a
     * correctness dependency.
     *
-    * The pruned payload scan reads the pre-scan's own `blocks` relation
-    * (one resolve, one file listing) ALONE: the survivors are
-    * live blocks already (the pre-scan applied the commit joins and
-    * the token bloom), and a runId-prefixed blockId names exactly one
-    * block row, so re-running the lineage/marker/index joins would
-    * only repeat three scans and three broadcasts per call; `pred`
-    * stays on it as a pushed row-group filter. Its `bloomEnc` is null
-    * ("may contain"): every survivor already passed the bloom. The
-    * empty and over-cap arms keep the pre-scan's [[blockFrame]].
+    * The pre-scan reads the store's cached live-block frame, so an
+    * unchanged store pays no lineage/marker/index join per call: a
+    * frame scan, the `reject` filter and a bounded `take`. The pruned
+    * payload scan reads `blocks` ALONE: the survivors are live blocks
+    * already (the frame is committedBlocks plus the bloom), and a
+    * runId-prefixed blockId names exactly one block row; `pred` stays
+    * on it as a pushed row-group filter. Its `bloomEnc` is null ("may
+    * contain"): every survivor already passed the bloom. No survivor
+    * gives an empty IN list, so that arm scans nothing. Only the
+    * over-cap arm joins again: committed blocks under `pred` with the
+    * bloom adjoined.
     */
   private def selectBlocks(spark: SparkSession, outDir: String,
       partIds: Option[Set[Int]], pred: Column,
       reject: (Int, Array[Byte], Array[Byte]) => Boolean): DataFrame = {
     import spark.implicits._
-    val blocks = StoreTables.read(spark, s"$outDir/blocks", StoreTables.Blocks)
-    val base = blockFrame(spark, outDir, blocks, partIds, pred)
-    val survivors = metaColumns(base)
+    val survivors = blockMetaFrame(spark, outDir, partIds, pred)
       .as[(String, Int, Array[Byte], Array[Byte])]
       .filter { case (_, cid, st, bloom) => !reject(cid, st, bloom) }
       .map(_._1)
       .take(MaxSelectedBlockIds + 1)
-    if (survivors.isEmpty) base.where(lit(false))
-    else if (survivors.length <= MaxSelectedBlockIds)
-      blocks.where(col("blockId").isInCollection(survivors.toSeq) && pred)
+    if (survivors.length > MaxSelectedBlockIds)
+      TokenIndex.withBloom(spark, outDir,
+        TokenDecoder.committedBlocks(spark, outDir, partIds).where(pred))
+    else
+      StoreTables.read(spark, s"$outDir/blocks", StoreTables.Blocks)
+        .where(col("blockId").isInCollection(survivors.toSeq) && pred)
         .withColumn("bloomEnc", lit(null).cast("binary"))
-    else base
   }
 
   /** The ONE zone-pruned, dict-rejected block walk behind every

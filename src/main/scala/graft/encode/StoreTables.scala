@@ -55,6 +55,26 @@ private[graft] object StoreTables {
       .map(_.getPath).toSeq.sortBy(_.toString)
   }
 
+  /** The store's snapshot signature: (path, length, mtime) of every
+    * entry of `blocks/`, `lineage/`, `completed/` and `tokidx/` — the
+    * four tables the live-block answer depends on — in one Hadoop-FS
+    * listing per dir, so it holds on every store filesystem. graft
+    * never rewrites a data file in place (every write job names fresh
+    * files), so any commit, resume, index build, vacuum or re-encode
+    * changes it. A missing dir lists as empty.
+    */
+  def signature(spark: SparkSession, outDir: String): Seq[(String, Long, Long)] = {
+    val root = new Path(outDir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Seq("blocks", "lineage", "completed", "tokidx").flatMap { t =>
+      val entries =
+        try fs.listStatus(new Path(root, t)).toSeq
+        catch { case _: java.io.FileNotFoundException => Seq.empty }
+      entries.map(s => (s.getPath.toString, s.getLen, s.getModificationTime))
+        .sortBy(_._1)
+    }
+  }
+
   /** [[read]] when the table has committed data; None reads as
     * "nothing committed".
     */

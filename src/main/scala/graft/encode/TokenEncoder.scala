@@ -2,6 +2,7 @@ package graft.encode
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.codec.{BlockCodec, ByteBuf, ByteReader}
 import graft.model.{EncodedBlock, LineageRecord, TokenRow}
 
@@ -1168,17 +1169,7 @@ object TokenDecoder {
     * this filter readers would see both copies).
     */
   private[encode] def committedBlocks(spark: SparkSession, outDir: String,
-                              partIds: Option[Set[Int]]): DataFrame =
-    committedOf(spark, outDir,
-      StoreTables.read(spark, s"$outDir/blocks", StoreTables.Blocks), partIds)
-
-  /** [[committedBlocks]] over `blocks`, a read of `outDir`'s blocks
-    * table the caller keeps: a caller that scans the table again (the
-    * two-phase selection's payload scan) resolves it once, and both
-    * scans see one file listing.
-    */
-  private[encode] def committedOf(spark: SparkSession, outDir: String,
-      blocks: DataFrame, partIds: Option[Set[Int]]): DataFrame = {
+                              partIds: Option[Set[Int]]): DataFrame = {
     // fail LOUDLY on a store whose lineage exists but whose commit
     // markers don't fit the (partId, runId) protocol — silently
     // decoding such a store as zero rows would read as data loss (and
@@ -1215,6 +1206,7 @@ object TokenDecoder {
     // parquet-pushable), DocBloom/TokBloom treat a null filter as "may
     // contain anything", and the decode boundary (readBlocks) coalesces
     // to the sentinels just before .as[EncodedBlock].
+    val blocks = StoreTables.read(spark, s"$outDir/blocks", StoreTables.Blocks)
     val pruned = partIds.fold(blocks)(ids =>
       blocks.where(col("partId").isInCollection(ids.map(Int.box))))
     // left-semi right sides only test existence: no distinct needed
@@ -1223,6 +1215,92 @@ object TokenDecoder {
         .select("blockId"), Seq("blockId"), "left_semi")
       .join(broadcast(TokenEncoder.completedPairs(spark, outDir)),
         Seq("partId", "runId"), "left_semi")
+  }
+
+  /** Stores whose [[liveBlocks]] frame stays cached; the least
+    * recently used one past this is unpersisted.
+    */
+  private[graft] val LiveFrameStores = 8
+
+  private final case class LiveFrame(signature: Seq[(String, Long, Long)],
+                                     frame: DataFrame)
+
+  // keyed by (session, outDir); access order = LRU
+  private val liveFrames =
+    new java.util.LinkedHashMap[(SparkSession, String), LiveFrame](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[(SparkSession, String), LiveFrame]): Boolean =
+        size > LiveFrameStores && { e.getValue.frame.unpersist(blocking = false); true }
+    }
+  private val frameSeq = new java.util.concurrent.atomic.AtomicLong()
+
+  /** The store's live-block METADATA frame: [[committedBlocks]] with
+    * the token index's `bloomEnc` adjoined, projected to `blockId,
+    * partId, codecId, symtab, minTok, maxTok, blockRows, totalTokens,
+    * bloomEnc` (and `frameId`, below) — the snapshot a table format
+    * keeps between queries (Delta's log snapshot, Iceberg's cached
+    * manifests), so a search's pre-scan reads one cached frame instead
+    * of re-running the lineage/marker/index joins per call. It IS committedBlocks
+    * plus the bloom, not a second liveness rule.
+    *
+    * Cached (MEMORY_AND_DISK) per (session, outDir), at most
+    * [[LiveFrameStores]] stores. Every call re-lists the store's
+    * [[StoreTables.signature]] first; a changed signature (or a cache
+    * dropped under it, e.g. by `spark.catalog.clearCache()`) unpersists
+    * the old frame and rebuilds, so committedBlocks' protocol checks run
+    * again on any change to `completed/` or `lineage/` and a build
+    * that throws caches nothing. Each build's plan carries its own
+    * `frameId` literal: the cache manager is shared by every session
+    * of the context and matches plans, not Datasets, so another build
+    * over the same paths (a newer snapshot, another session) must
+    * never resolve to this one's rows.
+    *
+    * The frame lives in a sibling of `spark` ([[frameSession]]): the
+    * same runtime conf with adaptive execution off. Under AQE, a scan
+    * of a cached plan that holds exchanges (the commit joins'
+    * broadcasts) first materializes the whole cache in a job of its
+    * own; without it the first pre-scan fills the cache as it reads,
+    * so a cold call runs no more jobs than the uncached pre-scan did.
+    */
+  private[encode] def liveBlocks(spark: SparkSession, outDir: String): DataFrame = {
+    val sig = StoreTables.signature(spark, outDir)
+    val key = (spark, outDir)
+    liveFrames.synchronized {
+      Option(liveFrames.get(key)) match {
+        case Some(f) if f.signature == sig &&
+            f.frame.storageLevel != StorageLevel.NONE => f.frame
+        case stale =>
+          stale.foreach { f =>
+            liveFrames.remove(key)
+            f.frame.unpersist(blocking = false)
+          }
+          val fs = frameSession(spark)
+          val frame = TokenIndex.withBloom(fs, outDir, committedBlocks(fs, outDir, None))
+            .select(col("blockId"), col("partId"), col("codecId"), col("symtab"),
+              col("minTok"), col("maxTok"), col("blockRows"), col("totalTokens"),
+              col("bloomEnc"), lit(frameSeq.incrementAndGet()).as("frameId"))
+            .persist(StorageLevel.MEMORY_AND_DISK)
+          liveFrames.put(key, LiveFrame(sig, frame))
+          frame
+      }
+    }
+  }
+
+  // one per caller session (weak keys), reused by every build: a new
+  // session's first analysis costs ~100 ms of a cold call
+  private val frameSessions = new java.util.WeakHashMap[SparkSession, SparkSession]()
+
+  /** `spark`'s sibling with its current runtime conf (so the frame
+    * reads the store exactly as `spark` would) and adaptive execution
+    * off. Called under the `liveFrames` lock.
+    */
+  private def frameSession(spark: SparkSession): SparkSession = {
+    val s = frameSessions.computeIfAbsent(spark, _ => spark.newSession())
+    spark.conf.getAll.foreach { case (k, v) =>
+      if (!s.conf.getOption(k).contains(v)) s.conf.set(k, v)
+    }
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    s
   }
 
   /** The typed decode boundary, with column pruning preserved (r7):

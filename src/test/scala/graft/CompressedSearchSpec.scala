@@ -845,4 +845,165 @@ class CompressedSearchSpec extends SparkSpecBase {
       .collect()(0).getLong(0) ==
       ds.collect().map(r => brute(r.tokens, 424297, 424297)).sum)
   }
+
+  /** BM25 scores of every hit doc, replayed on the raw rows in the
+    * same fixed-point order as bm25TopK (k1 = 1.2, b = 0.75).
+    */
+  private def bruteBm25(rows: Seq[TokenRow], query: Array[Int]): Map[String, Long] = {
+    val (k1, b) = (1.2, 0.75)
+    val nDocs = rows.length.toLong
+    val avgdl = rows.map(_.tokens.length.toLong).sum.toDouble / nDocs
+    val idf = query.map { t =>
+      val d = rows.count(_.tokens.contains(t)).toDouble
+      math.log((nDocs - d + 0.5) / (d + 0.5) + 1)
+    }
+    rows.flatMap { r =>
+      val terms = query.indices.flatMap { j =>
+        val tf = r.tokens.count(_ == query(j)).toDouble
+        if (tf == 0) None
+        else Some(math.floor(idf(j) * (tf * (k1 + 1)) /
+          (tf + k1 * (1 - b + b * r.tokens.length / avgdl)) * 1e6 + 0.5).toLong)
+      }
+      if (terms.isEmpty) None else Some(r.doc_id -> terms.sum)
+    }.toMap
+  }
+
+  /** countTokens, searchDocs and (every hit of) bm25TopK on `dir` equal
+    * brute force over `rows`.
+    */
+  private def assertLiveAnswers(session: org.apache.spark.sql.SparkSession,
+      dir: String, rows: Seq[TokenRow], step: String): Unit = {
+    val (lo, hi) = (100, 116)
+    val query = Array(100, 105, 7)
+    val want = rows.map(r => brute(r.tokens, lo, hi)).sum
+    assert(want > 0L, s"no hits to check after $step")
+    assert(CompressedSearch.countTokens(session, dir, lo, hi).first().getLong(0) ==
+      want, s"countTokens after $step")
+    val hits = CompressedSearch.searchDocs(session, dir, lo, hi).collect()
+      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+    assert(hits == rows.map(r => (r.doc_id, r.source) -> brute(r.tokens, lo, hi))
+      .filter(_._2 > 0).toMap, s"searchDocs after $step")
+    val ranked = CompressedSearch.bm25TopK(session, dir, query, rows.length).collect()
+      .map(r => r.getString(0) -> r.getLong(2)).toMap
+    assert(ranked == bruteBm25(rows, query), s"bm25TopK after $step")
+  }
+
+  test("the cached live-block frame follows every change to the store") {
+    import spark.implicits._
+    val cfg = TokenEncoder.EncodeConfig(targetRowsPerPart = 100)
+    val ds = graft.synth.TokenSynth.dataset(spark, 600, parallelism = 4)
+    val rows = ds.collect().toSeq
+    val dir = tmpDir("graft-liveframe")
+    // a half-committed store (PipelineSpec's partial-commit setup) is
+    // searched, then resumed
+    val plan = TokenEncoder.partitionPlan(ds, cfg.targetRowsPerPart)
+    val dataParts = rows.map(TokenEncoder.partIdOf(plan, _)).toSet
+    val half = dataParts.toSeq.sorted.take(dataParts.size / 2).toSet
+    val written = TokenEncoder.encodeBlocks(ds, plan, cfg, Some(half))
+    written.write.mode("append").parquet(s"$dir/blocks")
+    val blocks = spark.read.parquet(s"$dir/blocks")
+    blocks.select(lit("synthetic").as("inputFile"), col("partId"), col("blockId"),
+        col("blockRows").as("rowCount"), col("totalTokens"), col("checksum"),
+        col("codecId"), col("postCodec"), col("rawBytes"), col("encodedBytes"),
+        lit(1.0).as("ratio"), col("encodeMillis"))
+      .write.mode("append").parquet(s"$dir/lineage")
+    blocks.select("partId", "runId").distinct()
+      .write.mode("append").parquet(s"$dir/completed")
+    assertLiveAnswers(spark, dir,
+      rows.filter(r => half(TokenEncoder.partIdOf(plan, r))), "a partial commit")
+    TokenEncoder.run(ds, dir, cfg)
+    assertLiveAnswers(spark, dir, rows, "the resume")
+    // orphan blocks of a run that never committed change no answer
+    TokenEncoder.encodeBlocks(ds, plan, cfg, Some(half))
+      .write.mode("append").parquet(s"$dir/blocks")
+    assertLiveAnswers(spark, dir, rows, "appending orphan blocks")
+    graft.encode.TokenIndex.build(spark, dir)
+    assertLiveAnswers(spark, dir, rows, "an index build")
+    assert(TokenEncoder.vacuum(spark, dir) > 0L)
+    assertLiveAnswers(spark, dir, rows, "vacuum")
+    // different rows re-encoded at the same path
+    TokenEncoder.rmTree(new java.io.File(dir))
+    val shifted = rows.map(r => r.copy(tokens = r.tokens.map(_ + 3)))
+    TokenEncoder.run(spark.createDataset(shifted), dir, cfg)
+    assertLiveAnswers(spark, dir, shifted, "a re-encode at the same path")
+  }
+
+  test("a store with lineage but no commit markers throws on every search") {
+    val dir = tmpDir("graft-liveframe-nomarkers")
+    val ds = graft.synth.TokenSynth.dataset(spark, 400, parallelism = 4)
+    TokenEncoder.run(ds, dir, TokenEncoder.EncodeConfig(targetRowsPerPart = 100))
+    assert(CompressedSearch.countTokens(spark, dir, 100, 116).first().getLong(0) ==
+      ds.collect().map(r => brute(r.tokens, 100, 116)).sum)
+    TokenEncoder.rmTree(new java.io.File(s"$dir/completed"))
+    val errs = Seq.fill(2)(intercept[IllegalStateException] {
+      CompressedSearch.countTokens(spark, dir, 100, 116).collect()
+    }.getMessage)
+    assert(errs.forall(_.contains("lineage but no completed/ markers")), errs)
+    assert(errs.distinct.size == 1, errs)
+  }
+
+  test("over-cap selection: more survivors than the driver cap skip the IN list") {
+    import spark.implicits._
+    val n = CompressedSearch.MaxSelectedBlockIds + 104
+    // every doc holds 7, so every one-row block survives [0, 10]
+    val rows = (0 until n).map { i =>
+      val toks = Array(i % 50, 7, 1000 + i)
+      TokenRow(f"cap-$i%05d", toks, toks.length, "s")
+    }
+    val dir = tmpDir("graft-overcap")
+    TokenEncoder.run(spark.createDataset(rows), dir,
+      TokenEncoder.EncodeConfig(blockRows = 1))
+    val (lo, hi) = (0, 10)
+    assert(CompressedSearch.countTokens(spark, dir, lo, hi).first().getLong(0) ==
+      rows.map(r => brute(r.tokens, lo, hi)).sum)
+    val search = CompressedSearch.searchDocs(spark, dir, lo, hi)
+    val plan = search.queryExecution.executedPlan.toString
+    assert(!plan.contains("In(blockId") && !plan.contains("blockId IN"),
+      s"over-cap selection must not push a blockId list:\n$plan")
+    assert(search.collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap ==
+      rows.map(r => (r.doc_id, r.source) -> brute(r.tokens, lo, hi)).toMap)
+  }
+
+  test("live-block frames are bounded and scoped to their session") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val bound = TokenDecoder.LiveFrameStores
+    val before = sc.getPersistentRDDs.keySet
+    val stores = (0 until bound + 2).map { i =>
+      val ds = graft.synth.TokenSynth.dataset(spark, 40 + i, parallelism = 2)
+      val dir = tmpDir(s"graft-liveframe-lru-$i")
+      TokenEncoder.run(ds, dir, TokenEncoder.EncodeConfig(targetRowsPerPart = 20))
+      (dir, ds.collect().toSeq)
+    }
+    for ((dir, rows) <- stores) {
+      assert(CompressedSearch.countTokens(spark, dir, 100, 116).first().getLong(0) ==
+        rows.map(r => brute(r.tokens, 100, 116)).sum)
+      // evicted frames are unpersisted
+      val added = sc.getPersistentRDDs.keySet -- before
+      assert(added.size <= bound, s"${added.size} frames cached, bound $bound")
+    }
+    assert((sc.getPersistentRDDs.keySet -- before).nonEmpty, "no frame was cached")
+    // a second session searches with frames of its own: after the store
+    // is replaced under the first session's frame, no session may read
+    // that frame's rows
+    val dir = tmpDir("graft-liveframe-sessions")
+    val rows = graft.synth.TokenSynth.dataset(spark, 600, parallelism = 4).collect().toSeq
+    TokenEncoder.run(spark.createDataset(rows), dir,
+      TokenEncoder.EncodeConfig(targetRowsPerPart = 100))
+    val other = spark.newSession()
+    assertLiveAnswers(spark, dir, rows, "a first search")
+    assertLiveAnswers(other, dir, rows, "a first search in a new session")
+    // replaced the way another application's encode lands: moved into
+    // place, so no Spark write in this context refreshes its cache
+    val shifted = rows.map(r => r.copy(tokens = r.tokens.map(_ + 5)))
+    val staged = tmpDir("graft-liveframe-staged")
+    TokenEncoder.run(spark.createDataset(shifted), staged,
+      TokenEncoder.EncodeConfig(targetRowsPerPart = 100))
+    TokenEncoder.rmTree(new java.io.File(dir))
+    java.nio.file.Files.move(java.nio.file.Paths.get(staged), java.nio.file.Paths.get(dir))
+    val fresh = spark.newSession()
+    assertLiveAnswers(fresh, dir, shifted, "a replaced store, in a third session")
+    assertLiveAnswers(other, dir, shifted, "a replaced store, in the second session")
+    assertLiveAnswers(spark, dir, shifted, "a replaced store, in the first session")
+  }
 }
