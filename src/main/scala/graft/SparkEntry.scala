@@ -109,7 +109,7 @@ object SparkEntry {
     */
   /** The DEFAULT path is what the static oracle SQL references, so it
     * must stay fixed for Verify runs. Every OTHER runner that executes
-    * these queries (Bench, QueryTime, ExplainCli, the test suite)
+    * these queries (Bench, QueryProbe, the test suite)
     * overrides `graft.side.dir` so a later bench/test run can never
     * clobber the side files a pending DuckDB compare still needs.
     */
@@ -1880,14 +1880,10 @@ object SparkEntry {
           .tokenFrequency(s, encodedStoreBench(s))
           .orderBy(col("n_occ").desc, col("token"))
           .limit(30)),
-      "q_minhash_pairs" -> ((s, d) => {
-        val staged = Dedup.stageSignatures(t(s, d, "documents"),
-          "doc_id", "text", 2, s"$sideDir/minhash_stage")
-        Dedup.minhashVerifyShingled(staged,
-          Dedup.minhashCandidatesSigned(staged, k = 64, bands = 0, threshold = 0.3),
-          threshold = 0.3)
-          .orderBy("id_a", "id_b")
-      }),
+      "q_minhash_pairs" -> ((s, d) =>
+        Dedup.minhashPairsStaged(t(s, d, "documents"), "doc_id", "text",
+          s"$sideDir/minhash_stage", shingleN = 2, threshold = 0.3)
+          .orderBy("id_a", "id_b")),
       "q_simhash_pairs" -> ((s, d) =>
         // uncapped like the Verify form, so both time the same plan
         Dedup.simhashPairs(t(s, d, "documents"), "doc_id", "text",

@@ -273,15 +273,13 @@ object Dedup {
     * components by iterative min-label propagation — each vertex
     * repeatedly adopts the smallest label among itself and its
     * neighbors until a sweep changes nothing, so every member ends up
-    * labeled with its component's minimum id. O(component diameter)
-    * sweeps; near-dup graphs are dense clumps with tiny diameters, so
-    * this converges in 2-3 sweeps in practice. Each sweep is one
+    * labeled with its component's minimum id. A pointer-jumping hop
+    * per sweep bounds the sweeps at O(log diameter); near-dup graphs
+    * are dense clumps with tiny diameters, so this converges in 2-3
+    * sweeps in practice. Graphs under `smallGraphCap` edges skip the
+    * loop for an exact driver union-find. Each sweep is one
     * shuffle join on the pair list (bare 8-byte ids), localCheckpointed
-    * so the iterative plan's lineage stays flat. (At extreme skew —
-    * one vertex in millions of pairs — the alternating
-    * small-star/large-star formulation [Kiveris et al., CC in
-    * MapReduce, public] bounds the hot vertex; the propagation loop
-    * here shares its shuffle structure.)
+    * so the iterative plan's lineage stays flat.
     *
     * Returns (id, cluster) for every id that appears in a pair;
     * singletons are their own implicit cluster (absent from output).
@@ -341,13 +339,10 @@ object Dedup {
   }
 
   /** [[connectedComponents]] plus the number of sweeps actually run
-    * (including the final no-change sweep that proves convergence) —
-    * the data-driven signal for choosing between label propagation
-    * (sweeps ≈ log2(diameter) with the r7 pointer-jumping hop; best
-    * on the dense low-diameter clumps near-dup graphs produce) and
-    * [[connectedComponentsStar]] (O(log²n) rounds regardless of
-    * shape; the extreme-skew/diameter fallback). See tools.CcDiagCli,
-    * which reports both on a given corpus.
+    * (including the final no-change sweep that proves convergence;
+    * ≈ log2(diameter) with the pointer-jumping hop, 0 for the exact
+    * small-graph solve) — the signal that a graph's components are
+    * approaching the `maxIter` budget.
     */
   def connectedComponentsCounted(pairs: DataFrame, maxIter: Int = 20,
                           checkpointDir: Option[String] = None,
@@ -489,136 +484,27 @@ object Dedup {
   val lastCcSweepMs =
     new java.util.concurrent.atomic.AtomicReference[List[Long]](Nil)
 
-  /** Connected components by ALTERNATING STAR CONTRACTION (Kiveris et
-    * al., "Connected Components in MapReduce and Beyond", public) —
-    * the extreme-skew scale form of [[connectedComponents]]. Label
-    * propagation's per-sweep join fans a hot vertex (one doc paired
-    * with millions) into a single reduce group every sweep; star
-    * rounds instead REWIRE the edge list toward component minima —
-    * large-star points each node's larger neighbors at its
-    * neighborhood minimum, small-star contracts the smaller ones — so
-    * the hot vertex's degree collapses geometrically instead of being
-    * re-reduced whole, and rounds are O(log^2 n) worst-case on any
-    * graph shape. Same contract as connectedComponents: returns
-    * (id, cluster=component min) for every id in a pair; refuses
-    * rather than returning a non-converged result; property-tested
-    * equal to the propagation form.
-    *
-    * Each round is two self-describing shuffles on bare ids; the edge
-    * set strictly shrinks toward the star forest {(v, root)}, and
-    * convergence = a round that changes nothing (exact two-sided
-    * anti-join emptiness test, not a hash heuristic).
-    */
-  def connectedComponentsStar(pairs: DataFrame, maxIter: Int = 50,
-                              checkpointDir: Option[String] = None): DataFrame =
-    connectedComponentsStarCounted(pairs, maxIter, checkpointDir)._1
-
-  /** [[connectedComponentsStar]] plus the number of (large+small)-star
-    * rounds actually run — counterpart of
-    * [[connectedComponentsCounted]] for the diagnostic CLI.
-    */
-  def connectedComponentsStarCounted(pairs: DataFrame, maxIter: Int = 50,
-                              checkpointDir: Option[String] = None): (DataFrame, Int) = {
-    checkpointDir.foreach(pairs.sparkSession.sparkContext.setCheckpointDir)
-    def cp(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(eager = true)
-      else df.localCheckpoint(true)
-    // canonical (hi, lo) orientation, self-loops dropped
-    def canon(df: DataFrame): DataFrame =
-      df.select(greatest(col("a"), col("b")).as("a"),
-          least(col("a"), col("b")).as("b"))
-        .where(col("a") =!= col("b"))
-        .distinct()
-    def bidirect(e: DataFrame): DataFrame =
-      e.select(col("a").as("u"), col("b").as("v"))
-        .union(e.select(col("b").as("u"), col("a").as("v")))
-    // large-star: from each node u, point every LARGER neighbor v at
-    // m = min(Γ(u) ∪ {u}) — m < v always, so output is canonical
-    def largeStar(e: DataFrame): DataFrame = {
-      val bi = bidirect(e)
-      val mins = bi.groupBy("u").agg(min(col("v")).as("mn"))
-        .select(col("u"), least(col("mn"), col("u")).as("m"))
-      canon(bi.join(mins, Seq("u"))
-        .where(col("v") > col("u"))
-        .select(col("v").as("a"), col("m").as("b")))
-    }
-    // small-star: from each node u, contract every SMALLER neighbor
-    // (and u itself) onto m = min of those neighbors
-    def smallStar(e: DataFrame): DataFrame = {
-      val lows = bidirect(e).where(col("v") < col("u"))
-      val mins = lows.groupBy("u").agg(min(col("v")).as("m"))
-      canon(lows.join(mins, Seq("u"))
-        .select(col("v").as("a"), col("m").as("b"))
-        .union(mins.select(col("u").as("a"), col("m").as("b"))))
-    }
-    var edges = cp(canon(
-      pairs.select(col("id_a").as("a"), col("id_b").as("b"))))
-    var iter = 0
-    var edgeCount = edges.count()
-    var converged = edgeCount == 0 // no edges => nothing to do
-    var ok = false
-    try {
-      while (iter < maxIter && !converged) {
-        val next = cp(smallStar(largeStar(edges)))
-        // exact set-equality (both sides are distinct sets, so equal
-        // counts + one empty difference suffice): the star forest is
-        // the unique fixed point, so an unchanged round IS convergence.
-        // The previous round's count carries over — one scan per
-        // round, not two.
-        val nextCount = next.count()
-        converged = nextCount == edgeCount && next.exceptAll(edges).isEmpty
-        edges.unpersist(blocking = false)
-        edges = next
-        edgeCount = nextCount
-        iter += 1
-      }
-      if (!converged)
-        throw new IllegalArgumentException(
-          s"connectedComponentsStar did not converge in $maxIter rounds")
-      ok = true
-      // fixed point is a star forest {(v, root)}: members point at the
-      // root; roots label themselves. The returned plan reads the
-      // final checkpoint — which is why the cleanup below must not
-      // release it on the success path.
-      (edges.select(col("a").as("id"), col("b").as("cluster"))
-        .union(edges.select(col("b").as("id"), col("b").as("cluster")).distinct())
-        .distinct(), iter)
-    } finally {
-      // refusal/failure only: the success return is BACKED by the
-      // final checkpoint (a truncated-lineage Dataset cannot be
-      // recomputed once its blocks are dropped)
-      if (!ok) edges.unpersist(blocking = false)
-    }
-  }
-
   /** Near-dup removal with CANONICAL cluster semantics: one survivor
     * (the minimum id) per transitive near-dup cluster — the
     * fixed-point form of `removeNearDuplicates` (whose greedy
     * pair-loser rule can over-remove on chains: in a path a-b-c the
     * greedy form drops both b and c even though c never paired with
     * the survivor a; this form keeps exactly one per component).
+    * Every non-minimal cluster member is a loser; the anti-join keeps
+    * the min-id survivors plus all singletons.
     */
-  /** Shared tail of the CC removal wrappers: every non-minimal
-    * cluster member is a loser; anti-join keeps min-id survivors plus
-    * all singletons.
-    */
-  private def dropClusterLosers(df: DataFrame, idCol: String,
-                                pairs: DataFrame,
-                                checkpointDir: Option[String] = None): DataFrame = {
+  def removeNearDuplicatesCC(df: DataFrame, idCol: String, textCol: String,
+                             shingleN: Int = 3, k: Int = 64, bands: Int = 0,
+                             threshold: Double = 0.7,
+                             maxBucket: Int = 64,
+                             checkpointDir: Option[String] = None): DataFrame = {
+    val pairs = minhashPairs(df, idCol, textCol, shingleN, k, bands,
+      threshold, maxBucket)
     val losers = connectedComponents(pairs, checkpointDir = checkpointDir)
       .where(col("id") =!= col("cluster"))
       .select(col("id").as(idCol)).distinct()
     df.join(losers, Seq(idCol), "left_anti")
   }
-
-  def removeNearDuplicatesCC(df: DataFrame, idCol: String, textCol: String,
-                             shingleN: Int = 3, k: Int = 64, bands: Int = 0,
-                             threshold: Double = 0.7,
-                             maxBucket: Int = 64,
-                             checkpointDir: Option[String] = None): DataFrame =
-    dropClusterLosers(df, idCol,
-      minhashPairs(df, idCol, textCol, shingleN, k, bands, threshold, maxBucket),
-      checkpointDir)
 
   /** Diagnostic: what the maxBucket skew cap silently drops — bucket
     * count, capped-bucket count, and rows over the cap. Surfaces the
@@ -727,23 +613,6 @@ object Dedup {
       .where(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
   }
-
-  /** Staged form of `removeNearDuplicatesCC` — the 100-TB shape: ONE
-    * corpus read stages (id, sh, sig), every downstream branch
-    * (banding, pre-filter, verify) reads the small staged table, and
-    * components resolve over bare id pairs.
-    */
-  def removeNearDuplicatesCCStaged(df: DataFrame, idCol: String,
-                                   textCol: String, stagePath: String,
-                                   shingleN: Int = 3, k: Int = 64,
-                                   bands: Int = 0, threshold: Double = 0.7,
-                                   maxBucket: Int = 64,
-                                   capObs: Option[org.apache.spark.sql.Observation] = None,
-                                   checkpointDir: Option[String] = None): DataFrame =
-    dropClusterLosers(df, idCol,
-      minhashPairsStaged(df, idCol, textCol, stagePath, shingleN,
-        k, bands, threshold, maxBucket, capObs = capObs),
-      checkpointDir)
 
   /** Hot-block diagnostic for the exact-jaccard path: per the same
     * (block, length-bucket) keys jaccardWithinShingled joins on,
@@ -1226,8 +1095,8 @@ object Dedup {
     // copies of the explode — the window hashing ran twice. Deriving
     // both from __poss keeps the branches on ONE canonical aggregate
     // subtree, so ReuseExchange computes the explode once
-    // (FinalPlanCli-verified). isNotNull on both branches for the
-    // same canonical-equality reason.
+    // (verified with `QueryProbe final`). isNotNull on both branches
+    // for the same canonical-equality reason.
     val perDoc0 =
       if (portable) {
         val ex = df.where(col(idCol).isNotNull).select(col(idCol),

@@ -127,6 +127,15 @@ class ConnectedComponentsSpec extends SparkSpecBase {
     }
   }
 
+  // smallGraphCap = 0 forces the iterative pointer-jumping arm; the
+  // default cap takes the exact driver union-find on graphs this small.
+  // The two tests below keep the names they had when they checked the
+  // alternating-star form; that form is gone, and the same graphs now
+  // exercise the iterative arm against the union-find.
+  private def iterativeAndDriver(pairs: org.apache.spark.sql.DataFrame) =
+    (Dedup.connectedComponents(pairs, smallGraphCap = 0).collect().toSet,
+      Dedup.connectedComponents(pairs).collect().toSet)
+
   test("alternating-star CC equals label propagation on random graphs") {
     val s = spark
     import s.implicits._
@@ -135,40 +144,26 @@ class ConnectedComponentsSpec extends SparkSpecBase {
       val pairs = Seq.fill(120)((rng.nextInt(150).toLong, rng.nextInt(150).toLong))
         .filter { case (a, b) => a != b }
         .toDF("id_a", "id_b")
-      val plain = Dedup.connectedComponents(pairs)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val star = Dedup.connectedComponentsStar(pairs)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(star == plain, s"seed $seed")
+      val (iterative, driver) = iterativeAndDriver(pairs)
+      assert(iterative.nonEmpty && iterative == driver, s"seed $seed")
     }
+    val none = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
+    assert(Dedup.connectedComponents(none, smallGraphCap = 0).count() == 0)
   }
 
   test("alternating-star CC handles a hot vertex and string ids") {
     val s = spark
     import s.implicits._
-    // one hub paired with everyone (the skew shape that motivates the
-    // star form) plus a separate chain
+    // one hub paired with everyone (the skew shape: the hub's label
+    // fans into one reduce group every sweep) plus a separate chain
     val hub = (1 to 200).map(i => ("hub", f"doc_$i%03d"))
     val chain = Seq(("x1", "x2"), ("x2", "x3"), ("x3", "x4"))
     val pairs = (hub ++ chain).toDF("id_a", "id_b")
-    val cc = Dedup.connectedComponentsStar(pairs)
-      .collect().map(r => (r.getString(0), r.getString(1))).toMap
+    val (iterative, driver) = iterativeAndDriver(pairs)
+    val cc = iterative.map(r => (r.getString(0), r.getString(1))).toMap
     assert(cc("hub") == "doc_001" && cc("doc_200") == "doc_001")
     assert(cc("x1") == "x1" && cc("x4") == "x1")
-    val plain = Dedup.connectedComponents(pairs)
-      .collect().map(r => (r.getString(0), r.getString(1))).toMap
-    assert(cc == plain)
-  }
-
-  test("alternating-star CC refuses under maxIter, empty pairs are empty") {
-    val s = spark
-    import s.implicits._
-    intercept[IllegalArgumentException] {
-      Dedup.connectedComponentsStar(
-        Seq(("a", "b")).toDF("id_a", "id_b"), maxIter = 0).collect()
-    }
-    val none = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
-    assert(Dedup.connectedComponentsStar(none).count() == 0)
+    assert(iterative == driver)
   }
 
   test("reliable-checkpoint CC equals the localCheckpoint default") {
