@@ -16,10 +16,11 @@ import graft.model.ColumnStats
   *    narrow relative to magnitude, FSST when 4-gram repetition is
   *    high (both new here; the reference has no sub-file codecs)
   *
-  * Selection computes cheap stats, narrows to <=5 candidate codecs,
-  * encodes each, and keeps the smallest — deterministic and
-  * near-optimal; encode kernels are fast enough that trying 2-3
-  * candidates costs less than a mis-pick at scale.
+  * Selection computes cheap stats and narrows to <=5 candidate codecs.
+  * BitPack/FOR/Dict/Plain are sized by formula and only the smallest of
+  * them is encoded; RLE/DeltaFor/MiniPack/Pfor are trial-encoded; FSST
+  * is trial-encoded only when a sampled estimate says it can win. The
+  * smallest encoding is kept — deterministic and near-optimal.
   */
 object BlockCodec {
 
@@ -37,8 +38,8 @@ object BlockCodec {
 
   private val CardCap = 1 << 16
 
-  /** zstd post-pass level (env-overridable for experiments). */
-  val ZstdLevel: Int = sys.env.getOrElse("GRAFT_ZSTD_LEVEL", "3").toInt
+  /** zstd post-pass level, shared by every zstd-wrapped column. */
+  val ZstdLevel: Int = 3
 
   /** One pass over the block: min/max, capped exact cardinality, runs,
     * sampled 4-gram repetition share.
@@ -191,8 +192,8 @@ object BlockCodec {
     var best: Encoded = null
     var bestSize = Long.MaxValue
     // BitPack/FOR/Dict sizes are (near-)exact from stats: fully encode
-    // only the best of those three; RLE/DeltaFor are cheap single-pass
-    // trials; FSST gets a sampled estimate gate
+    // only the best of those three; RLE/DeltaFor/MiniPack/Pfor are
+    // cheap single-pass trials; FSST gets a sampled estimate gate
     val cands = candidates(s)
     val (fsstCands, rest) = cands.partition(_ == CodecIds.Fsst)
     val (formulaCands, trialCands) = rest.partition(c =>
@@ -206,11 +207,16 @@ object BlockCodec {
         if (size < bestSize) { bestSize = size; best = e; bestId = cid }
       }
     }
-    if (fsstCands.nonEmpty && FsstCodec.estimateBytes(values, n) < bestSize) {
-      val e = FsstCodec.encode(values, n)
-      if (e != null) {
-        val size = e.symtab.length.toLong + e.payload.length.toLong
-        if (size < bestSize) { bestSize = size; best = e; bestId = CodecIds.Fsst }
+    if (fsstCands.nonEmpty) {
+      val (est, whole) = FsstCodec.estimate(values, n)
+      if (est < bestSize) {
+        // a block no larger than the estimate's sample was encoded whole
+        // by the estimate: reuse that encoding instead of a second trial
+        val e = if (whole != null) whole else FsstCodec.encode(values, n)
+        if (e != null) {
+          val size = e.symtab.length.toLong + e.payload.length.toLong
+          if (size < bestSize) { bestSize = size; best = e; bestId = CodecIds.Fsst }
+        }
       }
     }
     if (best == null) { best = PlainCodec.encode(values, n); bestId = CodecIds.Plain }

@@ -1,11 +1,11 @@
 package graft.codec
 
-import scala.collection.mutable.ArrayBuffer
+import java.nio.{ByteBuffer, ByteOrder}
 
 /** Simplified FSST-style symbol-table compression over token streams.
   *
-  * Real FSST (Boncz/Lang/Neumann, VLDB 2020 — public paper; see
-  * PAPERS.md) compresses strings with a 255-entry table of 1-8 byte
+  * Real FSST (Boncz/Neumann/Leis, PVLDB 13(11), 2020 — public paper;
+  * see PAPERS.md) compresses strings with a 255-entry table of 1-8 byte
   * symbols plus an escape code. Tokens are ints, not strings, so we
   * first serialize the block's token stream as unsigned LEB128 varints
   * and run FSST-style training/encoding over that byte stream —
@@ -18,7 +18,13 @@ import scala.collection.mutable.ArrayBuffer
   * Codes 0..254 = symbols, 255 = escape (next byte is a literal).
   * Training: 4 rounds of greedy parse + pair-concatenation candidate
   * generation, keep top-255 by gain = freq * length (deterministic
-  * tie-break on byte content).
+  * tie-break on `Arrays.toString` of the symbol bytes).
+  *
+  * As in the paper, counting is over fixed-size arrays: singles in a
+  * 512-slot array, adjacent pairs in a dense 512 x 512 array reset
+  * through the list of pairs a round touched. A symbol is at most 8
+  * bytes, so candidates are (length, packed little-endian bytes)
+  * values, never strings or boxed keys.
   */
 object FsstCodec extends IntCodec {
   val id = CodecIds.Fsst
@@ -29,42 +35,38 @@ object FsstCodec extends IntCodec {
   private val MaxSymLen = 8
   private val SampleBytes = 1 << 16
   private val Rounds = 4
+  /** Parse codes: 0..254 symbols, 256 + b the literal byte b. */
+  private val CodeSpace = 512
+  /** Tokens of the prefix `estimateBytes` encodes. */
+  private val EstimateSample = 16384
 
-  /** Tokens -> unsigned LEB128 byte stream. */
-  private def toVarintBytes(values: Array[Int], n: Int): Array[Byte] = {
-    val out = new ByteBuf(n * 2 + 16)
-    var i = 0
-    while (i < n) { out.writeVarInt(values(i)); i += 1 }
-    out.toArray
-  }
+  private val Masks: Array[Long] = Array.tabulate(MaxSymLen + 1)(l =>
+    if (l == 8) -1L else (1L << (8 * l)) - 1L)
 
-  /** A trained table: symbols bucketed by first byte, longest first —
-    * greedy parse touches one array cell + a few key compares per
-    * position instead of up to 8 hash lookups.
+  /** Continuation bits of a k-byte varint, by k. */
+  private val VarintCont: Array[Long] = Array.tabulate(6)(k =>
+    (0 until math.max(k - 1, 0)).foldLeft(0L)((m, j) => m | (0x80L << (8 * j))))
+
+  /** Tokens -> unsigned LEB128 bytes, valid up to the returned length
+    * and followed by at least 8 zero bytes, so a parse can always load
+    * an 8-byte window. Each token is one 8-byte store of its 7-bit
+    * groups, advanced by its varint length.
     */
-  private final class Table(val syms: Array[Array[Byte]]) {
-    // per first-byte: parallel arrays of (packed key, length, code),
-    // sorted by length descending
-    val bucketKeys: Array[Array[Long]] = new Array(256)
-    val bucketLens: Array[Array[Int]] = new Array(256)
-    val bucketCodes: Array[Array[Int]] = new Array(256)
-    locally {
-      val tmp = Array.fill(256)(new ArrayBuffer[(Long, Int, Int)]())
-      var c = 0
-      while (c < syms.length) {
-        val s = syms(c)
-        tmp(s(0) & 0xFF) += ((packKey(s, 0, s.length), s.length, c))
-        c += 1
-      }
-      var b = 0
-      while (b < 256) {
-        val sorted = tmp(b).sortBy(-_._2)
-        bucketKeys(b) = sorted.map(_._1).toArray
-        bucketLens(b) = sorted.map(_._2).toArray
-        bucketCodes(b) = sorted.map(_._3).toArray
-        b += 1
-      }
+  private def toVarintBytes(values: Array[Int], n: Int): (Array[Byte], Int) = {
+    val out = new Array[Byte](n * 5 + 8)
+    val view = littleEndian(out)
+    var len = 0
+    var i = 0
+    while (i < n) {
+      val v = values(i).toLong
+      val k = 1 + (31 - Integer.numberOfLeadingZeros(values(i) | 1)) / 7
+      val groups = (v & 0x7FL) | ((v & 0x3F80L) << 1) | ((v & 0x1FC000L) << 2) |
+        ((v & 0xFE00000L) << 3) | ((v & 0xF0000000L) << 4)
+      view.putLong(len, groups | VarintCont(k))
+      len += k
+      i += 1
     }
+    (out, len)
   }
 
   private def packKey(b: Array[Byte], off: Int, len: Int): Long = {
@@ -74,105 +76,211 @@ object FsstCodec extends IntCodec {
     k
   }
 
-  /** Greedy longest-match parse; emits codes (0..254) or 256+byte for
-    * literals.
+  /** A trained table. Greedy parse takes the longest symbol that
+    * matches at a position: symbols of 2+ bytes are grouped by their
+    * first two bytes, longest first, and each 2-byte prefix indexes its
+    * group directly; a position no group matches falls back to the
+    * 1-byte symbol of its first byte, else the escape.
     */
-  private def parse(bytes: Array[Byte], table: Table, out: IntBuf): Unit = {
-    val n = bytes.length
-    var p = 0
-    while (p < n) {
-      val b0 = bytes(p) & 0xFF
-      val keys = table.bucketKeys(b0)
-      var matched = -1
-      var mLen = 0
-      if (keys.length > 0) {
-        val lens = table.bucketLens(b0)
+  private final class Table(val syms: Array[Array[Byte]]) {
+    val symKeys: Array[Long] = syms.map(s => packKey(s, 0, s.length))
+    /** per byte: the parse result of its 1-byte symbol, else its literal */
+    private val single: Array[Int] = Array.tabulate(256)(b => (256 + b) | (1 << 9))
+    /** per 2-byte prefix: its group number (1-based), 0 = none */
+    private val group = new Array[Byte](1 << 16)
+    /** group g spans multi*(groupEnd(g - 1) until groupEnd(g)) */
+    private val groupEnd = new Array[Int](MaxSymbols + 1)
+    private val multiKeys = new Array[Long](syms.count(_.length >= 2))
+    private val multiLens = new Array[Int](multiKeys.length)
+    private val multiCodes = new Array[Int](multiKeys.length)
+    locally {
+      // (prefix, longest first, code) in one sortable long
+      val order = new Array[Long](multiKeys.length)
+      var j = 0
+      var c = 0
+      while (c < syms.length) {
+        val l = syms(c).length
+        if (l == 1) single(syms(c)(0) & 0xFF) = c | (1 << 9)
+        else { order(j) = ((symKeys(c) & 0xFFFF) << 16) | ((MaxSymLen - l) << 8) | c; j += 1 }
+        c += 1
+      }
+      java.util.Arrays.sort(order)
+      var g = 0
+      j = 0
+      while (j < order.length) {
+        val code = (order(j) & 0xFF).toInt
+        multiKeys(j) = symKeys(code); multiLens(j) = syms(code).length; multiCodes(j) = code
+        val pfx = (order(j) >>> 16).toInt
+        if (group(pfx) == 0) { g += 1; group(pfx) = g.toByte }
+        groupEnd(g) = j + 1
+        j += 1
+      }
+    }
+
+    /** Parse step at `p < n`: `code | length << 9`, where a literal
+      * byte b is code 256 + b of length 1.
+      */
+    def next(view: ByteBuffer, p: Int, n: Int): Int = {
+      val w = view.getLong(p)
+      val g = group((w & 0xFFFF).toInt) & 0xFF
+      if (g != 0) {
         val avail = n - p
-        // packed window once per position (8 bytes max)
-        val wLen = math.min(8, avail)
-        val window = packKey(bytes, p, wLen)
-        var i = 0
-        while (i < keys.length && matched < 0) {
-          val l = lens(i)
-          if (l <= avail) {
-            val mask = if (l == 8) -1L else (1L << (8 * l)) - 1L
-            if ((window & mask) == keys(i)) { matched = table.bucketCodes(b0)(i); mLen = l }
-          }
+        var i = groupEnd(g - 1)
+        val end = groupEnd(g)
+        while (i < end) {
+          val l = multiLens(i)
+          if (l <= avail && (w & Masks(l)) == multiKeys(i)) return multiCodes(i) | (l << 9)
           i += 1
         }
       }
-      if (matched >= 0) { out.add(matched); p += mLen }
-      else { out.add(256 + b0); p += 1 }
+      single((w & 0xFF).toInt)
     }
   }
 
-  private def train(bytes: Array[Byte]): Table = {
-    val sample =
-      if (bytes.length <= SampleBytes) bytes
-      else java.util.Arrays.copyOf(bytes, SampleBytes)
+  private def littleEndian(bytes: Array[Byte]): ByteBuffer =
+    ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
+
+  /** Per-thread counting arrays, allocated once: a round resets only
+    * the pair slots it touched.
+    */
+  private final class Counts {
+    val singles = new Array[Int](CodeSpace)
+    val pairs = new Array[Int](CodeSpace * CodeSpace)
+    var touched = new Array[Int](4096)
+    var nTouched = 0
+  }
+  private val counts = ThreadLocal.withInitial[Counts](() => new Counts)
+
+  /** Greedy-parse `bytes(0 until n)` with `table`, counting each code
+    * and each adjacent pair of codes.
+    */
+  private def countParse(bytes: Array[Byte], n: Int, table: Table, cs: Counts): Unit = {
+    val view = littleEndian(bytes)
+    val singles = cs.singles
+    val pairs = cs.pairs
+    var prev = -1
+    var p = 0
+    while (p < n) {
+      val r = table.next(view, p, n)
+      val c = r & (CodeSpace - 1)
+      singles(c) += 1
+      if (prev >= 0) {
+        val k = prev * CodeSpace + c
+        if (pairs(k) == 0) {
+          if (cs.nTouched == cs.touched.length)
+            cs.touched = java.util.Arrays.copyOf(cs.touched, cs.touched.length * 2)
+          cs.touched(cs.nTouched) = k
+          cs.nTouched += 1
+        }
+        pairs(k) += 1
+      }
+      prev = c
+      p += r >>> 9
+    }
+  }
+
+  /** Candidate symbols of one round, deduplicated by content with the
+    * maximum gain kept: parallel (gain, length, packed bytes) arrays.
+    */
+  private final class Candidates(capacity: Int) {
+    val gains = new Array[Long](capacity)
+    val lens = new Array[Int](capacity)
+    val keys = new Array[Long](capacity)
+    var size = 0
+    private val bits = 32 - Integer.numberOfLeadingZeros(math.max(2 * capacity - 1, 1))
+    private val slots = new Array[Int](1 << bits) // candidate index + 1; 0 = empty
+
+    def add(gain: Long, len: Int, key: Long): Unit = {
+      val h = (key * 0x9E3779B97F4A7C15L) ^ len
+      var slot = ((h ^ (h >>> 32)).toInt * 0x9E3779B1) >>> (32 - bits)
+      while (slots(slot) != 0) {
+        val i = slots(slot) - 1
+        if (lens(i) == len && keys(i) == key) {
+          if (gains(i) < gain) gains(i) = gain
+          return
+        }
+        slot = (slot + 1) & ((1 << bits) - 1)
+      }
+      gains(size) = gain; lens(size) = len; keys(size) = key
+      size += 1
+      slots(slot) = size
+    }
+
+    def bytes(i: Int): Array[Byte] = {
+      val b = new Array[Byte](lens(i))
+      var j = 0
+      while (j < b.length) { b(j) = (keys(i) >>> (8 * j)).toByte; j += 1 }
+      b
+    }
+
+    private val names = new Array[String](capacity)
+    /** `Arrays.toString` of the symbol bytes, built on first use. */
+    private def name(i: Int): String = {
+      if (names(i) == null) names(i) = java.util.Arrays.toString(bytes(i))
+      names(i)
+    }
+
+    /** The table order: gain descending, then name ascending. */
+    def before(a: Int, b: Int): Boolean =
+      gains(a) > gains(b) || (gains(a) == gains(b) && name(a).compareTo(name(b)) < 0)
+
+    /** The first `k` candidates in table order, through a bounded
+      * heap whose head is the last one kept.
+      */
+    def top(k: Int): Array[Int] = {
+      val heap = new java.util.PriorityQueue[Integer](k, (a: Integer, b: Integer) =>
+        if (a.intValue == b.intValue) 0 else if (before(a, b)) 1 else -1)
+      var c = 0
+      while (c < size) {
+        if (heap.size < k) heap.add(c)
+        else if (before(c, heap.peek)) { heap.poll(); heap.add(c) }
+        c += 1
+      }
+      heap.toArray(Array.empty[Integer]).map(_.intValue).sortWith(before)
+    }
+  }
+
+  /** Candidates from one round's counts — every code used, and every
+    * pair seen at least twice that fits in 8 bytes — resetting the
+    * counts on the way.
+    */
+  private def candidates(table: Table, cs: Counts): Candidates = {
+    val cands = new Candidates(CodeSpace + cs.nTouched)
+    def len(c: Int): Int = if (c >= 256) 1 else table.syms(c).length
+    def key(c: Int): Long = if (c >= 256) (c - 256).toLong else table.symKeys(c)
+    var c = 0
+    while (c < CodeSpace) {
+      val cnt = cs.singles(c)
+      if (cnt > 0) { cands.add(cnt.toLong * len(c), len(c), key(c)); cs.singles(c) = 0 }
+      c += 1
+    }
+    var t = 0
+    while (t < cs.nTouched) {
+      val k = cs.touched(t)
+      val cnt = cs.pairs(k)
+      cs.pairs(k) = 0
+      if (cnt >= 2) {
+        val c1 = k / CodeSpace
+        val c2 = k % CodeSpace
+        val l1 = len(c1)
+        val l = l1 + len(c2)
+        if (l <= MaxSymLen) cands.add(cnt.toLong * l, l, key(c1) | (key(c2) << (8 * l1)))
+      }
+      t += 1
+    }
+    cs.nTouched = 0
+    cands
+  }
+
+  private def train(bytes: Array[Byte], n: Int): Table = {
+    val sampleN = math.min(n, SampleBytes)
+    val cs = counts.get()
     var table = new Table(Array.empty)
     var round = 0
     while (round < Rounds) {
-      val codes = new IntBuf(sample.length)
-      parse(sample, table, codes)
-      // count singles and adjacent pairs
-      val nCodeSpace = 512
-      val count1 = new Array[Int](nCodeSpace)
-      val count2 = new java.util.HashMap[java.lang.Long, Integer]()
-      var i = 0
-      while (i < codes.size) {
-        count1(codes(i)) += 1
-        if (i + 1 < codes.size) {
-          val key = codes(i).toLong * nCodeSpace + codes(i + 1)
-          val old = count2.get(key)
-          count2.put(key, if (old == null) 1 else old + 1)
-        }
-        i += 1
-      }
-      def codeBytes(c: Int): Array[Byte] =
-        if (c >= 256) Array((c - 256).toByte) else table.syms(c)
-      // candidates: existing symbols, frequent single bytes, frequent pairs
-      // gain ~ bytes covered (freq * len); singles gain freq * 1
-      val cands = new ArrayBuffer[(Long, Array[Byte])]()
-      var c = 0
-      while (c < nCodeSpace) {
-        if (count1(c) > 0) {
-          val b = if (c >= 256 || c < table.syms.length) codeBytes(c) else null
-          if (b != null) cands += ((count1(c).toLong * b.length, b))
-        }
-        c += 1
-      }
-      val it = count2.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        val cnt = e.getValue.intValue()
-        if (cnt >= 2) {
-          val k = e.getKey.longValue()
-          val c1 = (k / nCodeSpace).toInt
-          val c2 = (k % nCodeSpace).toInt
-          val valid1 = c1 >= 256 || c1 < table.syms.length
-          val valid2 = c2 >= 256 || c2 < table.syms.length
-          if (valid1 && valid2) {
-            val b1 = codeBytes(c1); val b2 = codeBytes(c2)
-            if (b1.length + b2.length <= MaxSymLen) {
-              val b = new Array[Byte](b1.length + b2.length)
-              System.arraycopy(b1, 0, b, 0, b1.length)
-              System.arraycopy(b2, 0, b, b1.length, b2.length)
-              cands += ((cnt.toLong * b.length, b))
-            }
-          }
-        }
-      }
-      // dedupe by byte content, keep max gain; deterministic ordering
-      val best = new java.util.HashMap[String, (Long, Array[Byte])]()
-      cands.foreach { case (g, b) =>
-        val key = java.util.Arrays.toString(b)
-        val old = best.get(key)
-        if (old == null || old._1 < g) best.put(key, (g, b))
-      }
-      val sorted = best.values().toArray(Array.empty[(Long, Array[Byte])])
-        .sortBy { case (g, b) => (-g, java.util.Arrays.toString(b)) }
-      table = new Table(sorted.take(MaxSymbols).map(_._2))
+      countParse(bytes, sampleN, table, cs)
+      val cands = candidates(table, cs)
+      table = new Table(cands.top(MaxSymbols).map(cands.bytes))
       round += 1
     }
     table
@@ -182,41 +290,44 @@ object FsstCodec extends IntCodec {
     * bytes-per-token. Used by auto-selection to skip the (expensive)
     * full FSST trial when another codec is already clearly smaller.
     */
-  def estimateBytes(values: Array[Int], n: Int): Long = {
-    val sampleN = math.min(n, 16384)
-    if (sampleN == 0) return 1L
-    var i = 0
-    while (i < sampleN) { if (values(i) < 0) return Long.MaxValue; i += 1 }
-    val sample = java.util.Arrays.copyOf(values, sampleN)
-    val e = encode(sample, sampleN)
-    if (e == null) return Long.MaxValue
+  def estimateBytes(values: Array[Int], n: Int): Long = estimate(values, n)._1
+
+  /** `estimateBytes`, and the block's own encoding when the sample is
+    * the whole block (`n <= 16384`), else null.
+    */
+  def estimate(values: Array[Int], n: Int): (Long, Encoded) = {
+    val sampleN = math.min(n, EstimateSample)
+    if (sampleN == 0) return (1L, null)
+    val e = encode(values, sampleN)
+    if (e == null) return (Long.MaxValue, null)
     // extrapolate payload only; the symbol table is a fixed cost, not
     // a per-token one
     val perTok = e.payload.length.toDouble / sampleN
-    math.ceil(perTok * n).toLong + e.symtab.length
+    (math.ceil(perTok * n).toLong + e.symtab.length, if (sampleN == n) e else null)
   }
 
   def encode(values: Array[Int], n: Int): Encoded = {
     var i = 0
     while (i < n) { if (values(i) < 0) return null; i += 1 }
-    val bytes = toVarintBytes(values, n)
-    if (bytes.length == 0)
+    val (bytes, len) = toVarintBytes(values, n)
+    if (len == 0)
       return Encoded(Array[Byte](0), Array.emptyByteArray)
-    val table = train(bytes)
-    val codes = new IntBuf(bytes.length / 2 + 16)
-    parse(bytes, table, codes)
-    val out = new ByteBuf(codes.size + 16)
-    var j = 0
-    while (j < codes.size) {
-      val c = codes(j)
-      if (c >= 256) { out.writeByte(Escape); out.writeByte(c - 256) }
-      else out.writeByte(c)
-      j += 1
+    val table = train(bytes, len)
+    val view = littleEndian(bytes)
+    val out = new Array[Byte](2 * len)
+    var o = 0
+    var p = 0
+    while (p < len) {
+      val r = table.next(view, p, len)
+      val c = r & (CodeSpace - 1)
+      if (c >= 256) { out(o) = Escape.toByte; out(o + 1) = (c - 256).toByte; o += 2 }
+      else { out(o) = c.toByte; o += 1 }
+      p += r >>> 9
     }
     val st = new ByteBuf(300)
     st.writeByte(table.syms.length)
     table.syms.foreach { s => st.writeByte(s.length); st.writeBytes(s) }
-    Encoded(st.toArray, out.toArray)
+    Encoded(st.toArray, java.util.Arrays.copyOf(out, o))
   }
 
   def decode(symtab: Array[Byte], payload: Array[Byte], n: Int): Array[Int] = {

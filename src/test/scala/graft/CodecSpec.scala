@@ -209,6 +209,31 @@ class CodecSpec extends AnyFunSuite {
     assert(graft.codec.StringCols.pureSource(one).contains("s"))
   }
 
+  test("fsst: a block within the estimate's sample reuses the estimate's encoding") {
+    Seq(1, 100, 5000, 16384).foreach { n =>
+      val data = phrases(n)
+      val e = FsstCodec.encode(data, n)
+      val (est, whole) = FsstCodec.estimate(data, n)
+      assert(whole != null, s"n=$n")
+      assert(whole.symtab.sameElements(e.symtab) && whole.payload.sameElements(e.payload), s"n=$n")
+      // the estimate is that encoding's size, up to the ceil of its
+      // per-token extrapolation (payload / n * n can round up past payload)
+      val size = e.symtab.length.toLong + e.payload.length
+      assert(est == FsstCodec.estimateBytes(data, n))
+      assert(est == math.ceil(e.payload.length.toDouble / n * n).toLong + e.symtab.length, s"n=$n")
+      assert(est >= size && est <= size + 1, s"n=$n: $est vs $size")
+      // when auto-selection picks FSST it stores exactly that encoding
+      val auto = BlockCodec.encodeAuto(data, n)
+      if (auto.codecId == CodecIds.Fsst) {
+        val pay = if (auto.postCodec == 1) BlockCodec.unzstd(auto.payload) else auto.payload
+        assert(auto.symtab.sameElements(e.symtab) && pay.sameElements(e.payload), s"n=$n")
+      }
+    }
+    assert(BlockCodec.encodeAuto(phrases(5000), 5000).codecId == CodecIds.Fsst)
+    val big = phrases(16385)
+    assert(FsstCodec.estimate(big, big.length)._2 == null)
+  }
+
   test("stats are exact on a known stream") {
     val data = Array(5, 5, 5, 1, 1, 9, 9, 9, 9)
     val s = BlockCodec.stats(data, data.length)
