@@ -1,8 +1,14 @@
 package graft.encode
 
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.simple.SimpleGroup
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
-import org.apache.spark.sql.types.{BinaryType, IntegerType, StringType, StructType}
+import org.apache.spark.sql.execution.datasources.parquet.SparkToParquetSchemaConverter
+import org.apache.spark.sql.types.{BinaryType, DoubleType, IntegerType, LongType,
+  StringType, StructType}
 import graft.model.{EncodedBlock, LineageRecord}
 
 /** The token store's four parquet tables and their FIXED schemas — the
@@ -19,8 +25,9 @@ import graft.model.{EncodedBlock, LineageRecord}
   * contain anything, the decode boundary coalesces to the sentinels).
   *
   * Crash artefacts are told apart by LISTING, not by a failed read: a
-  * dir whose only entries are `_temporary` (a killed write job),
-  * `_SUCCESS` or checksum files holds no committed data.
+  * dir whose only entries are `_temporary` (a killed write job), a
+  * `.`-prefixed temporary file (a killed [[writeFile]]), `_SUCCESS` or
+  * checksum files holds no committed data.
   */
 private[graft] object StoreTables {
 
@@ -53,6 +60,55 @@ private[graft] object StoreTables {
         s.isFile && !n.startsWith("_") && !n.startsWith(".")
       }
       .map(_.getPath).toSeq.sortBy(_.toString)
+  }
+
+  /** Commits `rows` (each fitting `schema`, in its field order) to the
+    * table dir `dir` as ONE parquet file written from the driver — no
+    * Spark job. The file is written through the Hadoop FileSystem under
+    * a `.`-prefixed temporary name, which Spark's file index and
+    * [[dataFiles]] both skip, then renamed into place: readers see all
+    * of the rows or none, and a killed write leaves only a hidden
+    * leftover. The parquet schema comes from Spark's own converter and
+    * the footer carries Spark's row-metadata key, so fixed-schema and
+    * inferring reads see exactly what a Spark write of `schema`
+    * produces. Columns are the flat types of `lineage/` and
+    * `completed/`; anything else is refused.
+    */
+  def writeFile(spark: SparkSession, dir: String, schema: StructType,
+                rows: Iterable[Row]): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val parquetType = new SparkToParquetSchemaConverter(spark.sessionState.conf)
+      .convert(schema)
+    val name = s"part-00000-${java.util.UUID.randomUUID()}-c000.snappy.parquet"
+    val dst = new Path(dir, name)
+    val tmp = new Path(dir, s".$name.tmp")
+    val fs = dst.getFileSystem(conf)
+    fs.mkdirs(dst.getParent)
+    val writer = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(tmp, conf))
+      .withConf(conf)
+      .withType(parquetType)
+      .withCompressionCodec(CompressionCodecName.SNAPPY)
+      .withExtraMetaData(java.util.Map.of(
+        "org.apache.spark.sql.parquet.row.metadata", schema.json))
+      .build()
+    try rows.foreach { r =>
+      val g = new SimpleGroup(parquetType)
+      var i = 0
+      while (i < schema.length) {
+        if (!r.isNullAt(i)) schema(i).dataType match {
+          case IntegerType => g.add(i, r.getInt(i))
+          case LongType => g.add(i, r.getLong(i))
+          case DoubleType => g.add(i, r.getDouble(i))
+          case StringType => g.add(i, r.getString(i))
+          case t => throw new IllegalArgumentException(
+            s"writeFile: unsupported column ${schema(i).name}: $t")
+        }
+        i += 1
+      }
+      writer.write(g)
+    } finally writer.close()
+    if (!fs.rename(tmp, dst))
+      throw new java.io.IOException(s"cannot rename $tmp to $dst")
   }
 
   /** The store's snapshot signature: (path, length, mtime) of every

@@ -1,6 +1,6 @@
 package graft.encode
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.codec.{BlockCodec, ByteBuf, ByteReader}
@@ -10,21 +10,23 @@ import graft.model.{EncodedBlock, LineageRecord, TokenRow}
   * north_star).
   *
   * Layout on disk (`outDir/`):
-  *   blocks/    — EncodedBlock rows (parquet, appended per wave)
-  *   lineage/   — LineageRecord rows (parquet, appended AFTER the
-  *                blocks of a wave are durably written)
-  *   completed/ — (partId, runId) commit markers, appended LAST
+  *   blocks/    — EncodedBlock rows (parquet, appended per run)
+  *   lineage/   — LineageRecord rows (parquet, one driver-written file
+  *                per run, renamed in AFTER the run's blocks are
+  *                durably written)
+  *   completed/ — (partId, runId) commit markers, one file per run,
+  *                renamed in LAST
   *
   * `completed/` holds the COMMIT MARKERS: a partId is complete iff a
   * (partId, runId) marker exists, written strictly after that run's
-  * blocks and lineage jobs (lineage alone is NOT commitment — its
-  * append is a multi-file job and a crash mid-append leaves a partial
-  * set visible). Readers keep blocks that have a lineage row AND a
-  * marked (partId, runId); resume re-encodes unmarked partitions —
-  * no duplicates, no skips.
+  * blocks and lineage (lineage alone is NOT commitment — a crash
+  * between the two commits leaves lineage without markers, and the
+  * row-level store copies append lineage as multi-file jobs). Readers
+  * keep blocks that have a lineage row AND a marked (partId, runId);
+  * resume re-encodes unmarked partitions — no duplicates, no skips.
   * This emulates Iceberg snapshot semantics on plain parquet (no
   * Iceberg jar ships in this environment — SURVEY.md §7.0); the seam
-  * is confined to `commitLineage`/`committedPartIds`.
+  * is confined to `run`'s commit tail and `committedPartIds`.
   *
   * Partitioning: partId = base(source) + xxhash64-style(doc_id) mod
   * salts(source), where salts(source) ~ rows(source)/targetRowsPerPart
@@ -484,9 +486,26 @@ object TokenEncoder {
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
   }
 
-  /** Full encode with resume: skips partitions already committed in the
-    * lineage table, appends blocks, then commits lineage last.
-    * Returns the lineage written this run.
+  /** Full encode with resume: skips partitions already committed
+    * (marked in `completed/`), appends this run's blocks with one Spark
+    * write job, then commits from the driver in the protocol's order:
+    *  1. lineage — read back from the WRITTEN block files (the runId
+    *     filter leaves out stale blocks of crashed runs, column pruning
+    *     leaves the payloads unread) with one `collect`, then written to
+    *     `lineage/` as one file ([[StoreTables.writeFile]]);
+    *  2. markers — one (partId, runId) row per pending partId, written
+    *     to `completed/` as one file the same way.
+    * Each file becomes visible by a rename, so no Spark write job runs
+    * after the block write. A crash before the lineage rename leaves an
+    * unmarked run's blocks (plus at most a hidden temporary file), and
+    * one between the two renames leaves lineage without markers: either
+    * way the partIds stay unmarked, readers ignore the attempt and a
+    * re-run encodes them under a new runId.
+    *
+    * Returns exactly this run's lineage (the collected rows). Driver
+    * memory: one lineage row (~150 B) per block of this run — a
+    * 10^12-token run at the default 2M-token blocks has 5×10^5 blocks,
+    * ~75 MB — plus the pending partIds, which the driver holds anyway.
     */
   def run(ds: Dataset[TokenRow], outDir: String,
           cfg: EncodeConfig = EncodeConfig()): Dataset[LineageRecord] = {
@@ -516,7 +535,7 @@ object TokenEncoder {
       // lineage derived from the *written* files — doubles as a
       // readback validation and avoids recomputing the encode.
       // Filtering on this run's id excludes stale blocks from crashed
-      // (uncommitted) runs.
+      // (uncommitted) runs, so the rows are exactly this run's lineage.
       val written = StoreTables.read(spark, s"$outDir/blocks", StoreTables.Blocks)
         .where($"runId" === runId)
       val lineage = written.select(
@@ -528,24 +547,16 @@ object TokenEncoder {
         when($"encodedBytes" > 0, $"rawBytes".cast("double") / $"encodedBytes")
           .otherwise(lit(1.0)).as("ratio"),
         $"encodeMillis"
-      ).as[LineageRecord]
-      lineage.write.mode("append").parquet(s"$outDir/lineage")
+      ).as[LineageRecord].collect().toSeq
+      StoreTables.writeFile(spark, s"$outDir/lineage", StoreTables.Lineage,
+        lineage.map(Row.fromTuple))
       // COMMIT: mark every pending partId (block-producing and empty
-      // alike) complete under THIS runId — written strictly after the
-      // blocks and lineage jobs, so a marker implies its data is fully
-      // visible. A crash before/inside this write re-encodes the
-      // unmarked partIds under a new runId; readers filter on marked
-      // (partId, runId) pairs, so the stale attempt never surfaces.
-      pending.toSeq.sorted.toDF("partId")
-        .withColumn("runId", lit(runId))
-        .write.mode("append").parquet(s"$outDir/completed")
-      // return ONLY this run's lineage (blockIds are runId-prefixed).
-      // A pending-partId semi-join alone would also sweep in orphan
-      // rows a previous CRASHED run landed for the same partIds,
-      // double-counting totalTokens/rawBytes in callers aggregating
-      // the return (Bench, CorpusPipelineCli).
-      StoreTables.read(spark, s"$outDir/lineage", StoreTables.Lineage)
-        .where($"blockId".startsWith(runId + "-")).as[LineageRecord]
+      // alike) complete under THIS runId — renamed into place strictly
+      // after the blocks and lineage, so a marker implies its data is
+      // fully visible
+      StoreTables.writeFile(spark, s"$outDir/completed", StoreTables.Completed,
+        pending.toSeq.sorted.map(Row(_, runId)))
+      spark.createDataset(lineage)
     } finally if (cfg.cacheInput) cached.unpersist(blocking = false)
   }
 
@@ -766,8 +777,8 @@ object TokenEncoder {
             .write.mode("append").parquet(s"$outDir/lineage")
           // markers from the already-collected pairs — a marked-but-empty
           // partId stays marked, so run()-resume over the merge is a no-op
-          spark.createDataset(pairs).toDF("partId", "runId")
-            .write.mode("append").parquet(s"$outDir/completed")
+          StoreTables.writeFile(spark, s"$outDir/completed",
+            StoreTables.Completed, pairs.map { case (p, r) => Row(p, r) })
         }
         // counts from the COPIED lineage (one row per live block,
         // rowCount = blockRows): a single agg over the merged store's

@@ -1,6 +1,6 @@
 package graft
 
-import graft.encode.{CompressedSearch, TokenDecoder, TokenEncoder, TokenIndex}
+import graft.encode.{CompressedSearch, StoreTables, TokenDecoder, TokenEncoder, TokenIndex}
 import graft.encode.TokenEncoder.EncodeConfig
 import graft.model.TokenRow
 import graft.stats.TokenStatsAgg
@@ -15,12 +15,13 @@ class PipelineSpec extends SparkSpecBase {
   private val N = 6000L
 
   /** Measured Spark jobs per call: a fresh encode (plan sample, block
-    * write and readback, lineage and marker commits), then a full
+    * write, one lineage readback collect; the lineage and marker
+    * commits are driver-written files, no jobs), then a full
     * decode and a countTokens on the committed, indexed store — first
     * cold (it builds the store's live-block frame), then warm (the
     * unchanged store's frame is reused).
     */
-  private val EncodeJobBudget = 7
+  private val EncodeJobBudget = 6
   private val DecodeJobBudget = 4
   private val CountJobBudget = 6
   private val WarmCountJobBudget = 3
@@ -50,6 +51,15 @@ class PipelineSpec extends SparkSpecBase {
     val lineage = TokenEncoder.run(synth, out, EncodeConfig(targetRowsPerPart = 1000))
     assert(lineage.count() > 0)
     assertSameTable(synth, TokenDecoder.read(spark, out))
+    // the run commits lineage and markers as ONE file each, and an
+    // inferring read of either sees the table's fixed schema
+    for ((t, schema) <- Seq("lineage" -> StoreTables.Lineage,
+                            "completed" -> StoreTables.Completed)) {
+      assert(StoreTables.dataFiles(spark, s"$out/$t").size == 1, t)
+      assert(spark.read.parquet(s"$out/$t").schema.map(f => (f.name, f.dataType)) ==
+        schema.map(f => (f.name, f.dataType)), t)
+    }
+    assert(TokenDecoder.auditStore(spark, out).collect().forall(_.getAs[Boolean]("ok")))
     // column pruning survives the typed decode boundary (r7): the
     // blocks scan must not read the columns decode never touches —
     // docBloomEnc (real per-block bloom bytes) and the byte-count/
@@ -140,6 +150,18 @@ class PipelineSpec extends SparkSpecBase {
     // search degrades to the unpruned walk with the brute-force answer
     val indexed = tmpDir("crash-tokidx")
     TokenEncoder.run(synth, indexed, cfg)
+    // a commit killed mid-file leaves a hidden, truncated temporary
+    // next to the committed file: readers, resume and the audit all
+    // skip it exactly like _temporary
+    for (t <- Seq("lineage", "completed")) {
+      val f = StoreTables.dataFiles(spark, s"$indexed/$t").head
+      val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(f.toUri))
+      java.nio.file.Files.write(java.nio.file.Paths.get(s"$indexed/$t/.${f.getName}-killed.tmp"),
+        bytes.take(bytes.length / 2))
+    }
+    assertSameTable(synth, TokenDecoder.read(spark, indexed))
+    assert(TokenEncoder.run(synth, indexed, cfg).count() == 0)
+    assert(TokenDecoder.auditStore(spark, indexed).collect().forall(_.getAs[Boolean]("ok")))
     new java.io.File(s"${TokenIndex.path(indexed)}/_temporary/0").mkdirs()
     assert(TokenIndex.load(spark, indexed).isEmpty)
     val (lo, hi) = (100, 116)
@@ -240,7 +262,9 @@ class PipelineSpec extends SparkSpecBase {
     val plan = TokenEncoder.partitionPlan(ds, cfg.targetRowsPerPart)
     // partitions that actually hold data (overflow slots may be empty)
     val dataParts = ds.collect().map(r => TokenEncoder.partIdOf(plan, r)).toSet
-    // simulate a first run that only committed half the partitions
+    // simulate a first run that only committed half the partitions,
+    // its lineage and markers Spark write jobs (as in every store
+    // written before run() committed from the driver)
     val half = dataParts.toSeq.sorted.take(dataParts.size / 2).toSet
     val blocks = TokenEncoder.encodeBlocks(ds, plan, cfg, Some(half))
     blocks.write.mode("append").parquet(s"$out/blocks")
@@ -258,6 +282,8 @@ class PipelineSpec extends SparkSpecBase {
     written.select($"partId", $"runId").distinct()
       .write.mode("append").parquet(s"$out/completed")
     assert(TokenEncoder.committedPartIds(spark, out) == half)
+    val sparkFiles = Seq("lineage", "completed")
+      .map(t => t -> StoreTables.dataFiles(spark, s"$out/$t").size).toMap
     // resume
     val resumed = TokenEncoder.run(ds, out, cfg)
     val resumedParts = resumed.select("partId").distinct().as[Int].collect().toSet
@@ -268,6 +294,21 @@ class PipelineSpec extends SparkSpecBase {
     assert(back.select("doc_id").distinct().count() == back.count())
     // idempotent: a third run encodes nothing
     assert(TokenEncoder.run(ds, out, cfg).count() == 0)
+    // the Spark-written first commit and the driver-written resume
+    // commit (one file per table) read as one store: it audits clean
+    // and merges at the row level with a store sharing its plan
+    for (t <- Seq("lineage", "completed"))
+      assert(StoreTables.dataFiles(spark, s"$out/$t").size ==
+        sparkFiles(t) + 1, t)
+    assert(TokenDecoder.auditStore(spark, out).collect().forall(_.getAs[Boolean]("ok")))
+    val other = tmpDir("resume-other")
+    val extra = TokenSynth.dataset(spark, 500, seed = 7L)
+    TokenEncoder.savePlan(plan, other)
+    TokenEncoder.run(extra, other, cfg)
+    val merged = s"${tmpDir("resume-merge")}/st"
+    assert(TokenEncoder.mergeStores(spark, Seq(out, other), merged).rowLevel)
+    assertSameTable(ds.union(extra), TokenDecoder.read(spark, merged))
+    assert(TokenDecoder.auditStore(spark, merged).collect().forall(_.getAs[Boolean]("ok")))
   }
 
   test("uncommitted blocks (crash between blocks and lineage) are ignored and re-encoded") {
