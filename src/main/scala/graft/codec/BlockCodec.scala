@@ -185,8 +185,10 @@ object BlockCodec {
     }
   }
 
-  /** Encode with auto-selection; optionally zstd the winning payload. */
-  def encodeAuto(values: Array[Int], n: Int, zstd: Boolean = true): BlockEncoded = {
+  /** Encode with auto-selection, then zstd the winning payload where
+    * that makes it smaller.
+    */
+  def encodeAuto(values: Array[Int], n: Int): BlockEncoded = {
     val s = stats(values, n)
     var bestId = CodecIds.Plain
     var best: Encoded = null
@@ -224,7 +226,7 @@ object BlockCodec {
     var finalPost = 0
     var finalSym = best.symtab
     var finalPay = best.payload
-    if (zstd && best.payload.length > 64) {
+    if (best.payload.length > 64) {
       val z = com.github.luben.zstd.Zstd.compress(best.payload, ZstdLevel)
       if (z.length < finalPay.length) { finalPost = 1; finalPay = z }
     }
@@ -233,7 +235,7 @@ object BlockCodec {
     // zstd over byte-aligned raw values can beat zstd over the packed
     // stream on STRUCTURED wide data (e.g. high-card hashed ids with
     // byte-level regularity). Compare the two FINAL on-disk sizes.
-    if (zstd && finalId == CodecIds.BitPack && n > 16 &&
+    if (finalId == CodecIds.BitPack && n > 16 &&
         Bits.widthInt(s.max) > 24) {
       val p = PlainCodec.encode(values, n)
       val pz = com.github.luben.zstd.Zstd.compress(p.payload, ZstdLevel)

@@ -141,20 +141,6 @@ object Dedup {
     df.sparkSession.read.parquet(stagePath)
   }
 
-  /** Full minhash near-dup pipeline over ONE staged corpus read. */
-  def minhashPairsStaged(df: DataFrame, idCol: String, textCol: String,
-                         stagePath: String, shingleN: Int = 3, k: Int = 64,
-                         bands: Int = 0, threshold: Double = 0.7,
-                         maxBucket: Int = 64,
-                         estMargin: Double = 0.18,
-                         capObs: Option[org.apache.spark.sql.Observation] = None): DataFrame = {
-    val staged = stageSignatures(df, idCol, textCol, shingleN, stagePath)
-    minhashVerifyShingled(staged,
-      minhashCandidatesSigned(staged, k, bands, threshold, maxBucket,
-        estMargin, capObs),
-      threshold)
-  }
-
   /** Exact-Jaccard verification of candidate pairs against a prepared
     * (id, sh, ...) table.
     */

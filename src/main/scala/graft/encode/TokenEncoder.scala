@@ -52,7 +52,6 @@ object TokenEncoder {
       targetRowsPerPart: Int = 50000,
       blockTokens: Int = 1 << 21, // ~2M tokens = 8MB raw per block
       blockRows: Int = 1 << 16,
-      zstd: Boolean = true,
       inputFile: String = "synthetic",
       // cache the input across the plan/encode passes; disable for
       // parquet-backed inputs where a pruned re-scan is cheaper than
@@ -333,7 +332,7 @@ object TokenEncoder {
     val tokBuf = a.tokBuf
     val nTok = a.nTok
     val nRows = a.nRows
-    val be = BlockCodec.encodeAuto(tokBuf, nTok, cfgB.zstd)
+    val be = BlockCodec.encodeAuto(tokBuf, nTok)
     val lensEnc = lens.toArray
     val idsEnc = graft.codec.StringCols.encodeDocIds(docIds.toArray, nRows)
     val srcsEnc = graft.codec.StringCols.encodeSources(srcs.toArray, nRows)

@@ -16,7 +16,8 @@ import org.apache.spark.sql.execution.FormattedMode
   *             hides before execution are visible.
   *
   * Without a query list every query runs, in name order.
-  * SPARK_GRAFT_BENCH_MODE=1 uses the bench variants (`benchQueries`).
+  * SPARK_GRAFT_BENCH_MODE=1 runs the bench mode (`benchQueries`): the
+  * same query bodies with the oracle switch off, so nothing is dumped.
   */
 object QueryProbe {
   private val Modes = Set("time", "plan", "final")
@@ -26,8 +27,10 @@ object QueryProbe {
       "usage: QueryProbe <time|plan|final> <sfDir> [q,...]")
     val mode = args(0)
     val sfDir = args(1)
-    // query construction already writes side-channel dumps (dumpSide
-    // is eager), so keep them away from Verify's oracle side files
+    // building a query in oracle mode already writes its side-channel
+    // dumps (they are eager; bench mode dumps nothing), and both modes
+    // write signature/shingle stages there, so keep them away from
+    // Verify's oracle side files
     sys.props("graft.side.dir") =
       java.nio.file.Files.createTempDirectory("graft-qprobe-side").toString
     val spark = Sessions.create("graft-qprobe", defaultCpus = "32",

@@ -44,7 +44,7 @@ class CompressedSearchSpec extends SparkSpecBase {
 
   test("countInRange through encodeAuto including the zstd post-pass") {
     for ((name, vals) <- regimes) {
-      val be = BlockCodec.encodeAuto(vals, vals.length, zstd = true)
+      val be = BlockCodec.encodeAuto(vals, vals.length)
       val got = CompressedSearch.countInRange(be.codecId, be.postCodec,
         be.symtab, be.payload, vals.length, 100, 116)
       assert(got == brute(vals, 100, 116), s"$name (codec ${be.codecId})")

@@ -122,7 +122,8 @@ class PlanSpec extends SparkSpecBase {
   }
 
   test("q_ann_pq shortlist is a per-partition top-C merge, never a full sort") {
-    // bench form (no oracle dump) — the plan the production search runs
+    // bench mode (oracle off, so no side dump): the plan of the
+    // production Pq.searchRerank
     val df = SparkEntry.benchQueries("q_ann_pq")(spark, dir)
     val p = df.queryExecution.executedPlan.toString
     // orderBy(adc).limit(C) must compile to TakeOrderedAndProject:

@@ -137,7 +137,7 @@ class Round2Spec extends SparkSpecBase {
     assert(recall >= 0.95, s"recall $recall over ${truth.size} true pairs")
   }
 
-  test("minhashPairsStaged equals the unstaged pipeline") {
+  test("staged minhash step chain equals the unstaged pipeline") {
     val s = spark
     import s.implicits._
     val rng = new scala.util.Random(23)
@@ -151,8 +151,12 @@ class Round2Spec extends SparkSpecBase {
     def canon(d: org.apache.spark.sql.DataFrame) =
       d.orderBy("id_a", "id_b").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    val staged = canon(Dedup.minhashPairsStaged(df, "id", "text",
-      tmpDir("mh-stage") + "/sig", shingleN = 2, threshold = 0.3))
+    // q_minhash_pairs' chain: stage once, band off the stage, verify
+    // off the stage
+    val sig = Dedup.stageSignatures(df, "id", "text", 2,
+      tmpDir("mh-stage") + "/sig")
+    val staged = canon(Dedup.minhashVerifyShingled(sig,
+      Dedup.minhashCandidatesSigned(sig, threshold = 0.3), threshold = 0.3))
     val direct = canon(Dedup.minhashPairs(df, "id", "text",
       shingleN = 2, threshold = 0.3))
     assert(staged == direct && direct.nonEmpty)

@@ -1,115 +1,6 @@
 package graft
 
-import org.apache.spark.sql.Row
-import org.apache.spark.sql.types._
-
 import graft.dedup.Dedup
-
-/** Round-5 additions: SemDeDup-style semantic dedup over an embedding
-  * column (planted-structure correctness; the value-for-value path is
-  * the q_semantic_dedup oracle row).
-  */
-class SemanticDedupSpec extends SparkSpecBase {
-
-  /** `n` vectors near `center` (tiny deterministic jitter) + the rest
-    * far away on distinct axes.
-    */
-  private def df(rows: Seq[(Long, Array[Float])]) = {
-    val schema = StructType(Seq(
-      StructField("id", LongType, nullable = false),
-      StructField("vec", ArrayType(FloatType), nullable = false)))
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.map { case (i, v) => Row(i, v.toSeq) }),
-      schema)
-  }
-
-  private def axis(dim: Int, i: Int, scale: Float = 1f): Array[Float] = {
-    val a = new Array[Float](dim); a(i) = scale; a
-  }
-
-  test("planted semantic clusters: min id survives, isolated points kept") {
-    val dim = 8
-    // cluster A: ids 10,11,12 all ≈ e0; cluster B: ids 20,21 ≈ e1;
-    // isolated: ids 30 (e2), 31 (e3)
-    def jitter(base: Array[Float], eps: Float, at: Int): Array[Float] = {
-      val v = base.clone(); v(at) = v(at) + eps; v
-    }
-    val e0 = axis(dim, 0); val e1 = axis(dim, 1)
-    val rows = Seq(
-      10L -> e0, 11L -> jitter(e0, 0.05f, 4), 12L -> jitter(e0, -0.04f, 5),
-      20L -> e1, 21L -> jitter(e1, 0.06f, 6),
-      30L -> axis(dim, 2), 31L -> axis(dim, 3))
-    // k=1: one cell — no boundary effects; threshold 0.9 separates the
-    // planted clusters (within-cluster cos ≈ 0.998, cross ≈ 0)
-    val out = Dedup.semanticDedup(df(rows), "id", "vec",
-      threshold = 0.9, k = 1)
-    assert(out.select("id").collect().map(_.getLong(0)).sorted.toSeq ==
-      Seq(10L, 20L, 30L, 31L))
-  }
-
-  test("cell boundaries bound the comparison set (documented recall trade)") {
-    val dim = 4
-    // two far-apart clumps force k=2 k-means to split them; a planted
-    // near-dup PAIR straddling nothing (both in one clump) is pruned,
-    // while the clumps themselves never cross-compare
-    val e0 = axis(dim, 0); val e1 = axis(dim, 1)
-    val rows = Seq(
-      1L -> e0, 2L -> { val v = e0.clone(); v(2) = 0.03f; v },
-      5L -> e1, 6L -> { val v = e1.clone(); v(3) = 0.02f; v })
-    val out = Dedup.semanticDedup(df(rows), "id", "vec",
-      threshold = 0.9, k = 2)
-    assert(out.select("id").collect().map(_.getLong(0)).sorted.toSeq ==
-      Seq(1L, 5L))
-  }
-
-  test("no pairs above threshold -> everything survives") {
-    val dim = 6
-    val rows = (0 until 5).map(i => i.toLong -> axis(dim, i))
-    val out = Dedup.semanticDedup(df(rows), "id", "vec",
-      threshold = 0.5, k = 2)
-    assert(out.count() == 5)
-  }
-
-  test("multi-probe p=2 recovers a boundary-straddling near-dup pair") {
-    val dim = 4
-    def unit(a: Float, b: Float, j: Float): Array[Float] = {
-      val v = Array(a, b, j, 0f)
-      val n = math.sqrt(v.map(x => x * x.toDouble).sum).toFloat
-      v.map(_ / n)
-    }
-    val e0 = axis(dim, 0); val e1 = axis(dim, 1)
-    // two clumps pin the k=2 centroids near e0/e1; the planted
-    // near-dup pair (cos ≈ 0.999) sits between them with 300 argmin
-    // on the e0 cell and 301 on the e1 cell — invisible at p=1
-    val clumpA = (0 until 4).map(i =>
-      (100L + i) -> { val v = e0.clone(); v(3) = 0.01f * i; v })
-    val clumpB = (0 until 4).map(i =>
-      (200L + i) -> { val v = e1.clone(); v(3) = 0.01f * i; v })
-    val rows = clumpA ++ clumpB ++ Seq(
-      300L -> unit(0.72f, 0.69f, 0.001f),
-      301L -> unit(0.69f, 0.72f, -0.001f))
-    val p1 = Dedup.semanticDedup(df(rows), "id", "vec",
-      threshold = 0.97, k = 2, probes = 1)
-      .select("id").collect().map(_.getLong(0)).sorted.toSeq
-    assert(p1 == Seq(100L, 200L, 300L, 301L)) // pair straddles, missed
-    val p2 = Dedup.semanticDedup(df(rows), "id", "vec",
-      threshold = 0.97, k = 2, probes = 2)
-      .select("id").collect().map(_.getLong(0)).sorted.toSeq
-    assert(p2 == Seq(100L, 200L, 300L)) // runner-up cell meets the pair
-    // assignTop contract: first element IS the argmin cell; distances
-    // ascend, so p=1 semantics embed in the multi-probe assignment
-    val idx = graft.sim.Ivf.train(df(rows), "vec", 2)
-    val one = graft.sim.Ivf.assign(df(rows), "vec", idx)
-      .select("id", "ivf_cell").collect()
-      .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    graft.sim.Ivf.assignTop(df(rows), "vec", idx, 2)
-      .select("id", "ivf_cells").collect().foreach { r =>
-        val cs = r.getSeq[Int](1)
-        assert(cs.length == 2 && cs.distinct.length == 2)
-        assert(cs.head == one(r.getLong(0)))
-      }
-  }
-}
 
 class TfidfSpec extends SparkSpecBase {
 
@@ -549,170 +440,5 @@ class TfidfSpec extends SparkSpecBase {
       .collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
     assert(pos.forall { case (id, _, _) => out(id) })
     assert(neg.forall { case (id, _, _) => !out(id) })
-  }
-}
-
-class BpeSpec extends SparkSpecBase {
-  import graft.text.Bpe
-
-  test("train: Sennrich example merges in deterministic tie-broken order") {
-    val hist = Seq(("low", 5L), ("lower", 2L), ("newest", 6L),
-      ("widest", 3L))
-    val m = Bpe.train(hist, numMerges = 10)
-    // pair counts: (e,s)=9 (s,t)=9 (t,Eow)=9 (l,o)=7 (o,w)=7 ...
-    // ties break lexicographically: e<s<t, so es, then est, then
-    // est+Eow, then the 7-count chain l-o, lo-w
-    assert(m.merges.take(3) == Vector(("e", "s"), ("es", "t"),
-      ("est", Bpe.Eow)))
-    assert(m.merges.slice(3, 5) == Vector(("l", "o"), ("lo", "w")))
-    // vocab: UNK first, then sorted alphabet, then merge outputs
-    assert(m.vocab(Bpe.Unk) == 0)
-    assert(m.vocab.contains("est" + Bpe.Eow))
-  }
-
-  test("encodeWord applies merges by rank; unseen char maps to UNK") {
-    val hist = Seq(("low", 5L), ("lower", 2L), ("newest", 6L),
-      ("widest", 3L))
-    // with exactly the first 3 merges, "newest" = n e w est+Eow
-    val m3 = Bpe.train(hist, numMerges = 3)
-    val est = Bpe.encodeWord("newest", m3)
-    assert(est.toSeq == Seq(m3.vocab("n"), m3.vocab("e"), m3.vocab("w"),
-      m3.vocab("est" + Bpe.Eow)))
-    // with 10 merges the whole word fuses into one symbol
-    val m = Bpe.train(hist, numMerges = 10)
-    assert(Bpe.encodeWord("newest", m).length == 1)
-    // 'z' never appeared in training
-    assert(Bpe.encodeWord("z", m).contains(m.unkId))
-  }
-
-  test("corpus round trip: encode then decode = normalized text") {
-    val s = spark
-    import s.implicits._
-    val docs = Seq(
-      (1L, "the quick brown fox jumps over the lazy dog"),
-      (2L, "the   quick\tbrown\nfox"), // whitespace normalizes
-      (3L, ""),
-      (4L, "ünïcödé wörds and ASCII mixed"),
-      (5L, "emoji 😀😀 survive as code points"),
-      (6L, "literal </w> markup must not forge a boundary"),
-      (7L, "single")
-    ).toDF("doc_id", "text")
-    val m = Bpe.trainOn(docs, "text", maxWords = 1000, numMerges = 50)
-    val enc = Bpe.encode(docs, "doc_id", "text", m)
-    val rt = Bpe.decode(enc, "doc_id", "tokens", m)
-      .orderBy("doc_id").collect().map(_.getString(1))
-    val expect = docs.orderBy("doc_id").collect().map(
-      _.getString(1).split("\\s+").filter(_.nonEmpty).mkString(" "))
-    assert(rt.toSeq == expect.toSeq)
-  }
-
-  test("histogram cut does not break lossless coverage of tail words") {
-    val s = spark
-    import s.implicits._
-    // head words carry the mass; tail words never enter the histogram
-    // but their CHARS do (full-corpus alphabet) -> still lossless
-    val docs = ((0 until 30).map(i => (i.toLong, "common words repeat")) ++
-      Seq((100L, "zymurgy xylophone quixotic"))).toDF("doc_id", "text")
-    val m = Bpe.trainOn(docs, "text", maxWords = 3, numMerges = 20)
-    val enc = Bpe.encode(docs, "doc_id", "text", m)
-    val rt = Bpe.decode(enc, "doc_id", "tokens", m)
-      .where($"doc_id" === 100L).collect()(0).getString(1)
-    assert(rt == "zymurgy xylophone quixotic")
-  }
-
-  test("tokenTable feeds the columnar encode pipeline end-to-end") {
-    val s = spark
-    import s.implicits._
-    val docs = Seq(
-      (1L, "alpha beta gamma alpha beta", "web"),
-      (2L, "beta gamma delta", "web"),
-      (3L, "alpha alpha alpha", "books")
-    ).toDF("doc_id", "text", "source")
-    val m = Bpe.trainOn(docs, "text", maxWords = 100, numMerges = 30)
-    val tt = Bpe.tokenTable(docs, "doc_id", "text", "source", m)
-      .as[graft.model.TokenRow]
-    val out = java.nio.file.Files.createTempDirectory("bpe-enc").toString
-    graft.encode.TokenEncoder.run(tt, out)
-    val back = graft.encode.TokenDecoder.read(s, out)
-      .collect().map(r => r.doc_id -> r.tokens.toSeq).toMap
-    val orig = tt.collect().map(r => r.doc_id -> r.tokens.toSeq).toMap
-    assert(back == orig) // raw text -> BPE ids -> columnar -> back
-  }
-}
-
-class HtmlExtractSpec extends SparkSpecBase {
-  import graft.functions.HtmlExtract
-
-  test("blocks: headings, paragraphs, inline tags, stats") {
-    val bs = HtmlExtract.blocks(
-      "<html><body><h1>Big News</h1><p>Hello <b>bold</b> world</p>" +
-        "<div>Menu: <a href='/x'>home</a> <a href='/y'>about us</a></div>" +
-        "</body></html>")
-    assert(bs.map(_.text) ==
-      Seq("Big News", "Hello bold world", "Menu: home about us"))
-    assert(bs(0).heading && !bs(1).heading)
-    assert(bs(1).nWords == 3 && bs(1).anchorWords == 0)
-    assert(bs(2).nWords == 4 && bs(2).anchorWords == 3) // home, about, us
-  }
-
-  test("script/style dropped; </scripty> cannot close <script>") {
-    val bs = HtmlExtract.blocks(
-      "<p>keep</p><script>var a = '<p>no</p>'; x()</scripty> still js" +
-        "</SCRIPT><p>after</p><style>p { color: red }</style>")
-    assert(bs.map(_.text) == Seq("keep", "after"))
-  }
-
-  test("comments, doctype, CDATA, quoted '>' in attributes") {
-    val bs = HtmlExtract.blocks(
-      "<!DOCTYPE html><!-- a comment <p>x</p> --><p data-q=\"a > b\">" +
-        "one</p><![CDATA[raw & text]]><p>two</p>")
-    // </p> is a block boundary, so the CDATA text is its own block
-    assert(bs.map(_.text) == Seq("one", "raw & text", "two"))
-  }
-
-  test("entities: named, numeric, hex, nbsp, unknown pass-through") {
-    val bs = HtmlExtract.blocks(
-      "<p>A &amp; B &lt;tag&gt; &#65;&#x42; a&nbsp;b &bogus; &#xZZ; end</p>")
-    assert(bs.map(_.text) == Seq("A & B <tag> AB a b &bogus; &#xZZ; end"))
-  }
-
-  test("malformed input never throws; unterminated constructs eat to EOF") {
-    assert(HtmlExtract.blocks("<p>ok<script>never closed").map(_.text)
-      == Seq("ok"))
-    assert(HtmlExtract.blocks("<!-- never closed <p>x").isEmpty)
-    assert(HtmlExtract.blocks("text < 5 and > 3").map(_.text)
-      == Seq("text < 5 and > 3")) // stray < before space is literal
-    assert(HtmlExtract.blocks("<p att='unterminated").map(_.text) == Nil)
-  }
-
-  test("mainContent drops short and link-dense blocks, keeps headings") {
-    val s = spark
-    import s.implicits._
-    val html =
-      "<h1>Title</h1><p>This paragraph has more than five words in it</p>" +
-        "<div><a href='/'>nav</a> <a href='/'>links</a> <a href='/'>only</a>" +
-        " <a href='/'>menu</a> <a href='/'>bar</a> <a href='/'>here</a></div>" +
-        "<p>tiny</p>"
-    val out = Seq(html).toDF("html")
-      .select(HtmlExtract.mainContent($"html", minWords = 5,
-        maxAnchorPct = 50).as("t"))
-      .collect()(0).getString(0)
-    assert(out == "Title\nThis paragraph has more than five words in it")
-  }
-
-  test("native expression participates in whole-stage codegen") {
-    val s = spark
-    import s.implicits._
-    import org.apache.spark.sql.functions._
-    // a range source (not a LocalTableScan, which folds eagerly)
-    val df = s.range(1)
-      .select(concat(lit("<p>a b "), $"id".cast("string"), lit("</p>"))
-        .as("html"))
-      .select(graft.functions.HtmlExtract.blocksOf($"html").as("b"))
-    val plan = df.queryExecution.executedPlan.toString
-    // the "*(n)" prefix marks a WholeStageCodegen stage
-    assert(plan.contains("*(1) Project"), plan)
-    assert(df.collect()(0).getSeq[org.apache.spark.sql.Row](0).head
-      .getString(0) == "a b 0")
   }
 }
