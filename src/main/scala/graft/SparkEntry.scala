@@ -116,6 +116,21 @@ object SparkEntry {
     */
   private def sideDir: String =
     sys.props.getOrElse("graft.side.dir", "/tmp/graft_oracle_side")
+  /** Runs `build` on a stage dir of its own under the side dir, one
+    * per build of a staged query: a frame built earlier reads its
+    * stage lazily, so a later build must never rewrite it. `build`
+    * writes the stage; the dir is then marked for deletion when the
+    * JVM exits.
+    */
+  private val stageSeq = new java.util.concurrent.atomic.AtomicLong()
+  private def staged(s: SparkSession, name: String)(build: String => DataFrame): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(s"$sideDir/${name}_${stageSeq.incrementAndGet()}")
+    val out = build(p.toString)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    fs.deleteOnExit(fs.makeQualified(p))
+    out
+  }
+
   private def dumpSide(df: DataFrame, name: String): DataFrame = {
     val p = s"$sideDir/$name"
     df.write.mode("overwrite").parquet(p)
@@ -1024,11 +1039,11 @@ object SparkEntry {
       // shingles in DuckDB, verifying the whole verification stage.
       // staged form: ONE corpus read (shingles+signatures staged to
       // the side dir), then banding/pre-filter/verify off the stage
-      val staged = Dedup.stageSignatures(t(s, d, "documents"),
-        "doc_id", "text", 2, s"$sideDir/minhash_stage")
-      val cand = side(Dedup.minhashCandidatesSigned(staged,
+      val sigs = staged(s, "minhash_stage")(
+        Dedup.stageSignatures(t(s, d, "documents"), "doc_id", "text", 2, _))
+      val cand = side(Dedup.minhashCandidatesSigned(sigs,
         k = 64, bands = 0, threshold = 0.3), "minhash_cand")
-      Dedup.minhashVerifyShingled(staged, cand, threshold = 0.3)
+      Dedup.minhashVerifyShingled(sigs, cand, threshold = 0.3)
         .orderBy("id_a", "id_b")
     }),
     "q_simhash_pairs" -> ((s, d) => {
@@ -1045,8 +1060,9 @@ object SparkEntry {
     }),
     "q_jaccard_within" -> ((s, d) =>
       // staged: shingle the corpus once, then probe/verify off the stage
-      Dedup.jaccardWithinStaged(t(s, d, "documents"), "doc_id", "text",
-        "source", s"$sideDir/jaccard_stage", shingleN = 2, threshold = 0.05)
+      staged(s, "jaccard_stage")(
+        Dedup.jaccardWithinStaged(t(s, d, "documents"), "doc_id", "text",
+          "source", _, shingleN = 2, threshold = 0.05))
         .orderBy("id_a", "id_b")),
     "q_dedup_clusters" -> ((s, d) =>
       // transitive near-dup clusters: exact jaccard pairs (the
@@ -1054,9 +1070,9 @@ object SparkEntry {
       // propagation. The oracle recomputes the same pairs in pure SQL
       // and resolves components with a recursive CTE — fully
       // independent, no side channel.
-      Dedup.connectedComponents(
+      Dedup.connectedComponents(staged(s, "jaccard_stage_cc")(
         Dedup.jaccardWithinStaged(t(s, d, "documents"), "doc_id", "text",
-          "source", s"$sideDir/jaccard_stage_cc", shingleN = 2, threshold = 0.05))
+          "source", _, shingleN = 2, threshold = 0.05)))
         .orderBy("id", "cluster")),
     // ---- embeddings / similarity ----------------------------------
     "q_embed_norm" -> ((s, d) =>

@@ -88,11 +88,24 @@ object Dedup {
   private def withSignatures(df: DataFrame, idCol: String, textCol: String,
                              shingleN: Int): DataFrame = {
     graft.functions.MinHashSig.register(df.sparkSession)
-    graft.functions.Shingles.register(df.sparkSession)
-    df.select(col(idCol).as("id"), col(textCol).as("text"))
-      .withColumn("sh", graft.functions.Shingles.shinglesNative(col("text"), shingleN))
-      .where(size(col("sh")) > 0)
+    shingled(df, idCol, textCol, shingleN)
       .withColumn("sig", graft.functions.MinHashSig.minhashSig(col("sh")))
+  }
+
+  /** (id, text, sh) of the rows with at least one shingle, shingling
+    * each text ONCE. A `size(sh) > 0` filter over a projection is
+    * pushed below it with `sh` inlined, so the scan would shingle every
+    * text twice (filter and projection); produced by a one-element
+    * explode instead, `sh` is a generator output the filter cannot be
+    * pushed past.
+    */
+  private def shingled(df: DataFrame, idCol: String, textCol: String,
+                       shingleN: Int): DataFrame = {
+    graft.functions.Shingles.register(df.sparkSession)
+    df.select(col(idCol).as("id"), col(textCol).as("text"),
+        explode(array(graft.functions.Shingles.shinglesNative(col(textCol), shingleN)))
+          .as("sh"))
+      .where(size(col("sh")) > 0)
   }
 
   private def bandedBuckets(withSig: DataFrame, k: Int, bands: Int): DataFrame = {
@@ -214,15 +227,10 @@ object Dedup {
   def minhashVerify(df: DataFrame, cand: DataFrame, idCol: String,
                     textCol: String, shingleN: Int,
                     threshold: Double): DataFrame = {
-    graft.functions.Shingles.register(df.sparkSession)
     // one shingling pass, then the SAME verify body as the staged path
     // (a hand-kept duplicate of that join/threshold block diverged
     // silently once — delegate instead)
-    minhashVerifyShingled(
-      df.select(col(idCol).as("id"),
-          graft.functions.Shingles.shinglesNative(col(textCol), shingleN).as("sh"))
-        .where(size(col("sh")) > 0),
-      cand, threshold)
+    minhashVerifyShingled(shingled(df, idCol, textCol, shingleN), cand, threshold)
   }
 
   /** Near-duplicate pairs via MinHash LSH banding + estimate

@@ -30,15 +30,16 @@ import graft.codec.{Bits, BlockCodec, ByteReader, CodecIds, DictCodec}
   *     walk). Since round 7 the symtab (and token-bloom) rejection
   *     also saves the parquet READ, not just the decode: every
   *     selective walk runs a TWO-PHASE selection ([[selectBlocks]]) —
-  *     a payload-free metadata pre-scan evaluates tiers 1-2 (plus the
-  *     tokidx bloom) and chooses surviving blockIds, then the payload
-  *     scan carries a pushed `blockId IN` filter, so rejected blocks'
-  *     payload bytes are never read (plan-asserted in
-  *     CompressedSearchSpec). Walks whose survivor set exceeds the
-  *     bounded driver cap fall back to the single scan — they read
-  *     most payloads by definition. [[distinctTokens]] additionally
-  *     answers dict blocks from symtabs ALONE via its payload-FREE
-  *     split scan.
+  *     a payload-free pre-selection evaluates tiers 1-2 (plus the
+  *     tokidx bloom) over the store's live-block metadata (for a small
+  *     store a driver snapshot, so no Spark job) and chooses surviving
+  *     blockIds, then the payload scan carries a pushed `blockId IN`
+  *     filter, so rejected blocks' payload bytes are never read
+  *     (plan-asserted in CompressedSearchSpec). Walks whose survivor
+  *     set exceeds the bounded driver cap fall back to the single
+  *     scan — they read most payloads by definition.
+  *     [[distinctTokens]] additionally answers dict blocks from
+  *     symtabs ALONE via its payload-FREE split scan.
   *  3. COMPRESSED-DOMAIN COUNTING — Dict blocks count index codes
   *     against the dictionary's [lo,hi] index span (sorted dict =>
   *     contiguous code range, one unsigned compare per token); RLE
@@ -129,17 +130,45 @@ object CompressedSearch {
     }
   }
 
-  /** The zone-map predicate every store-level scan shares: block token
-    * range intersects [lo, hi]. On new stores minTok/maxTok are real
-    * parquet columns, so this prunes at the scan (PushedFilters);
-    * empty blocks carry (MaxValue, MinValue) and never intersect. The
-    * isNull arms keep the legacy rows of a mixed (resumed
-    * pre-zone-map) store — Or(IsNull, Le) is still parquet-pushable,
+  /** The zone-map predicate every store-level scan shares, defined
+    * once and rendered both as the pushed scan filter ([[column]]) and
+    * as the driver check ([[keeps]]), so the two cannot diverge. A
+    * block is kept when, for at least one `(minAtMost, maxAtLeast)`
+    * bound, minTok <= minAtMost and maxTok >= maxAtLeast. On new
+    * stores minTok/maxTok are real parquet columns, so the column
+    * prunes at the scan (PushedFilters); empty blocks carry (MaxValue,
+    * MinValue) and meet no bound short of the whole int range. A null
+    * minTok/maxTok (the legacy rows of a mixed, resumed pre-zone-map
+    * store) keeps the block — Or(IsNull, Le) is still parquet-pushable,
     * and row groups without nulls prune exactly as before.
     */
-  private def zone(lo: Int, hi: Int) =
-    (col("minTok").isNull || col("minTok") <= hi) &&
-      (col("maxTok").isNull || col("maxTok") >= lo)
+  private[graft] final case class Zone(bounds: Seq[(Int, Int)]) {
+    def column: Column = bounds.map { case (minAtMost, maxAtLeast) =>
+      (col("minTok").isNull || col("minTok") <= minAtMost) &&
+        (col("maxTok").isNull || col("maxTok") >= maxAtLeast)
+    }.reduce(_ || _)
+
+    def keeps(minTok: Option[Int], maxTok: Option[Int]): Boolean =
+      bounds.exists { case (minAtMost, maxAtLeast) =>
+        minTok.forall(_ <= minAtMost) && maxTok.forall(_ >= maxAtLeast)
+      }
+  }
+
+  private[graft] object Zone {
+    /** The block's token range intersects [lo, hi]. */
+    def intersects(lo: Int, hi: Int): Zone = Zone(Seq((hi, lo)))
+
+    /** The block's range holds at least one of `ts` — an Or-chain of
+      * pushable point containments.
+      */
+    def holdsAny(ts: Array[Int]): Zone = Zone(ts.toSeq.map(t => (t, t)))
+
+    /** The block's range holds every one of `ts` (minTok <= min(ts) &&
+      * maxTok >= max(ts)) — necessary for any of its docs to hold all
+      * of `ts`, and strictly stronger than [[intersects]].
+      */
+    def holdsAll(ts: Array[Int]): Zone = Zone(Seq((ts.min, ts.max)))
+  }
 
   /** Total number of tokens with value in [lo, hi] across the store —
     * one row (n_in_range). No row materialization anywhere: zone maps
@@ -151,7 +180,8 @@ object CompressedSearch {
   def countTokens(spark: SparkSession, outDir: String,
                   lo: Int, hi: Int): DataFrame = {
     import spark.implicits._
-    selectBlocks(spark, outDir, None, zone(lo, hi),
+    selectBlocks(spark, outDir, TokenDecoder.liveBlocks(spark, outDir), None,
+        Zone.intersects(lo, hi),
         (cid, st, bloom) => dictRejects(cid, st, lo, hi) ||
           !graft.codec.TokBloom.mayIntersectRange(bloom, lo, hi))
       .select("codecId", "postCodec", "symtab", "payload", "totalTokens",
@@ -181,7 +211,8 @@ object CompressedSearch {
                      lo: Int = Int.MinValue,
                      hi: Int = Int.MaxValue): DataFrame = {
     import spark.implicits._
-    selectBlocks(spark, outDir, None, zone(lo, hi),
+    selectBlocks(spark, outDir, TokenDecoder.liveBlocks(spark, outDir), None,
+        Zone.intersects(lo, hi),
         (cid, st, bloom) => dictRejects(cid, st, lo, hi) ||
           !graft.codec.TokBloom.mayIntersectRange(bloom, lo, hi))
       .select("codecId", "postCodec", "symtab", "payload", "totalTokens")
@@ -260,7 +291,7 @@ object CompressedSearch {
                            hi: Int = Int.MaxValue): DataFrame = {
     import spark.implicits._
     TokenDecoder.committedBlocks(spark, outDir, None)
-      .where(zone(lo, hi))
+      .where(Zone.intersects(lo, hi).column)
       .select("codecId", "postCodec", "symtab", "payload", "totalTokens",
         "blockRows", "sourcesEnc", "lengthsEnc")
       .as[(Int, Int, Array[Byte], Array[Byte], Long, Int,
@@ -705,23 +736,12 @@ object CompressedSearch {
       true
     }
 
-  /** Zone-map CONTAINMENT predicate: the block's token range must
-    * contain EVERY query token (minTok <= min(ts) && maxTok >= max(ts))
-    * — necessary for any of its docs to hold all of `ts`, and strictly
-    * stronger than the intersection prune `zone` uses for ranges. Same
-    * null arms as `zone` for legacy (pre-zone-map) rows; both sides
-    * stay parquet-pushable.
-    */
-  private def zoneAll(ts: Array[Int]) =
-    (col("minTok").isNull || col("minTok") <= ts.min) &&
-      (col("maxTok").isNull || col("maxTok") >= ts.max)
-
   /** Documents containing the EXACT CONTIGUOUS token phrase, with
     * per-document occurrence counts (overlapping occurrences all
     * count; phrases never cross document boundaries). Returns
     * (doc_id, source, n_matches), only matching docs emitted.
     *
-    * The compressed-domain wins compose: zoneAll demands the block
+    * The compressed-domain wins compose: `Zone.holdsAll` demands the block
     * RANGE contain every phrase token (pushed to the parquet scan),
     * dict symtabs reject any block missing one (binary searches only
     * — no payload decode), and only surviving blocks decode for the
@@ -966,11 +986,11 @@ object CompressedSearch {
     * idf(t) = ln((N - df + 0.5)/(df + 0.5) + 1),
     * term(d,t) = idf * tf*(k1+1) / (tf + k1*(1 - b + b*dl/avgdl)).
     *
-    * Scale shape: N and avgdl come from block METADATA only (one
-    * agg over the cached live-block frame's blockRows/totalTokens,
-    * [[TokenDecoder.liveBlocks]]); document frequencies
-    * come from a pruned pass that pre-aggregates per block (the
-    * exchange is |query| rows per surviving block); scoring is a
+    * Scale shape: N and avgdl come from block METADATA only (the
+    * live blocks' blockRows/totalTokens, [[TokenDecoder.liveBlocks]]:
+    * a driver sum over a snapshot, one agg over a frame); document
+    * frequencies come from a pruned pass that pre-aggregates per
+    * block (the exchange is |query| rows per surviving block); scoring is a
     * second pruned pass emitting one row per MATCHING doc, and the
     * global top-k is orderBy+limit — Catalyst's TakeOrdered, a
     * per-partition heap + driver merge of k rows, never a full sort.
@@ -990,17 +1010,14 @@ object CompressedSearch {
     import spark.implicits._
     require(query0.nonEmpty, "bm25TopK: empty query")
     val query = query0.distinct
-    val meta = TokenDecoder.liveBlocks(spark, outDir)
-      .agg(sum("blockRows").cast("long"), sum("totalTokens").cast("long"))
-      .first()
-    require(!meta.isNullAt(0) && meta.getLong(0) > 0,
+    val live = TokenDecoder.liveBlocks(spark, outDir)
+    val (nDocs, nTok) = liveTotals(live)
+    require(nDocs > 0,
       s"bm25TopK: no committed blocks in $outDir (empty store, or an " +
         "encode that never committed — resume it before querying)")
-    val nDocs = meta.getLong(0)
-    val avgdl = meta.getLong(1).toDouble / nDocs
-    // ONE two-phase block selection shared by both passes (the
-    // pre-scan survivor job runs once, not per pass)
-    val blocks = blocksAny(spark, outDir, query)
+    val avgdl = nTok.toDouble / nDocs
+    // ONE two-phase block selection shared by both passes
+    val blocks = blocksAny(spark, outDir, live, query)
     // pass 1: per-token document frequencies, pre-aggregated per block
     val df = blocks
       .flatMap { case (cid, post, st, pay, lensEnc, _, _, nRows, nTok) =>
@@ -1082,19 +1099,29 @@ object CompressedSearch {
       .limit(k)
   }
 
+  /** (rows, tokens) summed over the live blocks: a driver sum over a
+    * snapshot, one aggregate job over a frame.
+    */
+  private def liveTotals(live: TokenDecoder.LiveBlocks): (Long, Long) = live match {
+    case TokenDecoder.LiveRows(rows) =>
+      (rows.iterator.map(_.blockRows.toLong).sum, rows.iterator.map(_.totalTokens).sum)
+    case TokenDecoder.LiveFrame(frame) =>
+      val m = frame.agg(coalesce(sum("blockRows").cast("long"), lit(0L)),
+        coalesce(sum("totalTokens").cast("long"), lit(0L))).first()
+      (m.getLong(0), m.getLong(1))
+  }
+
   /** ANY-token block scan feeding [[bm25TopK]]'s two passes: zone
-    * maps must intersect at least one query token (an Or-chain of
-    * pushable point containments) and a dict block whose symtab holds
-    * NONE of the query tokens rejects from the symtab alone.
+    * maps must hold at least one query token and a dict block whose
+    * symtab holds NONE of the query tokens rejects from the symtab
+    * alone.
     */
   private def blocksAny(spark: SparkSession, outDir: String,
+      live: TokenDecoder.LiveBlocks,
       ts: Array[Int]): Dataset[(Int, Int, Array[Byte], Array[Byte],
       Array[Byte], Array[Byte], Array[Byte], Int, Long)] = {
     import spark.implicits._
-    val zoneAny = ts.map(t =>
-      (col("minTok").isNull || col("minTok") <= t) &&
-        (col("maxTok").isNull || col("maxTok") >= t)).reduce(_ || _)
-    selectBlocks(spark, outDir, None, zoneAny,
+    selectBlocks(spark, outDir, live, None, Zone.holdsAny(ts),
         (cid, st, bloom) => dictRejectsEvery(cid, st, ts) ||
           !graft.codec.TokBloom.mayContainAny(bloom, ts))
       .select("codecId", "postCodec", "symtab", "payload", "lengthsEnc",
@@ -1116,7 +1143,8 @@ object CompressedSearch {
       row: (String, String, Array[Int], Int, Int) => Iterator[T])(
       implicit enc: org.apache.spark.sql.Encoder[T]): Dataset[T] = {
     import spark.implicits._
-    selectBlocks(spark, outDir, None, zoneAll(ts),
+    selectBlocks(spark, outDir, TokenDecoder.liveBlocks(spark, outDir), None,
+        Zone.holdsAll(ts),
         (cid, st, bloom) => dictRejectsAny(cid, st, ts) ||
           !graft.codec.TokBloom.mayContainAll(bloom, ts))
       .select("codecId", "postCodec", "symtab", "payload", "lengthsEnc",
@@ -1169,69 +1197,72 @@ object CompressedSearch {
     * strings, so 4096 keeps the pushed IN filter small and the driver
     * footprint in the hundreds of KB regardless of store size (the
     * bounded-collect convention every metadata pull in this engine
-    * follows).
+    * follows). It also bounds a driver snapshot's rows
+    * ([[TokenDecoder.liveBlocks]]).
     */
   private[graft] val MaxSelectedBlockIds = 4096
 
-  /** The payload-free half of the two-phase block selection: (blockId,
-    * codecId, symtab, bloomEnc) of the live blocks under `partIds` and
-    * `pred`, read from the store's cached live-block frame
-    * ([[TokenDecoder.liveBlocks]]). The frame's build projects no
-    * payload, so the store's heaviest column (~95% of bytes) is never
-    * read for it (plan-asserted in CompressedSearchSpec).
-    */
-  private[graft] def blockMetaFrame(spark: SparkSession, outDir: String,
-      partIds: Option[Set[Int]], pred: Column): DataFrame = {
-    val live = TokenDecoder.liveBlocks(spark, outDir)
-    partIds.fold(live)(ids => live.where(col("partId").isInCollection(ids.map(Int.box))))
-      .where(pred)
-      .select("blockId", "codecId", "symtab", "bloomEnc")
-  }
-
   /** TWO-PHASE block selection (the Abadi-style late-materialization
-    * move applied to our own store): a payload-free pre-scan
-    * ([[blockMetaFrame]]) evaluates the symtab/token-bloom rejection
-    * tiers over metadata columns alone and chooses surviving
+    * move applied to our own store): a payload-free pre-selection
+    * evaluates the partId restriction, the zone map and the
+    * symtab/token-bloom rejection tiers over the store's live-block
+    * metadata ([[TokenDecoder.liveBlocks]]) and chooses surviving
     * blockIds; when few enough, the payload scan is pruned to the
-    * survivors with a pushed `blockId IN (...)` filter — a
+    * survivors with a pushed `blockId IN (...) && zone` filter — a
     * dict/bloom-rejected block's payload BYTES are never read, not
-    * merely never decoded (the r6 gap: tier-2/3 rejection saved
-    * decode CPU but parquet still read every zone-surviving payload).
-    * A non-selective predicate (survivors exceed the driver cap)
-    * falls back to the single-scan form — such a walk reads most
-    * payloads anyway, and the cap keeps the driver list point-sized
-    * by construction. The JVM-side rejection stays in the decode path
-    * either way, so the IN filter is an accelerator, never a
+    * merely never decoded. The JVM-side rejection stays in the decode
+    * path either way, so the IN filter is an accelerator, never a
     * correctness dependency.
     *
-    * The pre-scan reads the store's cached live-block frame, so an
-    * unchanged store pays no lineage/marker/index join per call: a
-    * frame scan, the `reject` filter and a bounded `take`. The pruned
-    * payload scan reads `blocks` ALONE: the survivors are live blocks
-    * already (the frame is committedBlocks plus the bloom), and a
-    * runId-prefixed blockId names exactly one block row; `pred` stays
-    * on it as a pushed row-group filter. Its `bloomEnc` is null ("may
-    * contain"): every survivor already passed the bloom. No survivor
-    * gives an empty IN list, so that arm scans nothing. Only the
-    * over-cap arm joins again: committed blocks under `pred` with the
-    * bloom adjoined.
+    * The pre-selection reads the store's snapshot, so an unchanged
+    * store pays no lineage/marker/index join per call:
+    *  - over driver rows ([[TokenDecoder.LiveRows]], a store within
+    *    the snapshot bounds) it is a driver loop, with no Spark job;
+    *    there are at most [[MaxSelectedBlockIds]] rows, so the
+    *    survivors always fit the IN list;
+    *  - over a cached frame ([[TokenDecoder.LiveFrame]]) it is a frame
+    *    scan, the `reject` filter and a bounded `take`. A
+    *    non-selective predicate (survivors exceed the driver cap) falls
+    *    back to the single-scan form — such a walk reads most payloads
+    *    anyway: committed blocks under the zone with the bloom adjoined.
+    *
+    * The pruned payload scan reads `blocks` ALONE: the survivors are
+    * live blocks already, and a runId-prefixed blockId names exactly
+    * one block row. Its `bloomEnc` is null ("may contain"): every
+    * survivor already passed the bloom. No survivor gives an empty IN
+    * list, so that arm scans nothing.
     */
   private def selectBlocks(spark: SparkSession, outDir: String,
-      partIds: Option[Set[Int]], pred: Column,
+      live: TokenDecoder.LiveBlocks, partIds: Option[Set[Int]], zone: Zone,
       reject: (Int, Array[Byte], Array[Byte]) => Boolean): DataFrame = {
     import spark.implicits._
-    val survivors = blockMetaFrame(spark, outDir, partIds, pred)
-      .as[(String, Int, Array[Byte], Array[Byte])]
-      .filter { case (_, cid, st, bloom) => !reject(cid, st, bloom) }
-      .map(_._1)
-      .take(MaxSelectedBlockIds + 1)
-    if (survivors.length > MaxSelectedBlockIds)
-      TokenIndex.withBloom(spark, outDir,
-        TokenDecoder.committedBlocks(spark, outDir, partIds).where(pred))
-    else
-      StoreTables.read(spark, s"$outDir/blocks", StoreTables.Blocks)
-        .where(col("blockId").isInCollection(survivors.toSeq) && pred)
-        .withColumn("bloomEnc", lit(null).cast("binary"))
+    val survivors = live match {
+      case TokenDecoder.LiveRows(rows) =>
+        Some(rows.collect {
+          case b if partIds.forall(_.contains(b.partId)) &&
+            zone.keeps(b.minTok, b.maxTok) &&
+            !reject(b.codecId, b.symtab, b.bloomEnc) => b.blockId
+        })
+      case TokenDecoder.LiveFrame(frame) =>
+        val ids = partIds.fold(frame)(ids =>
+            frame.where(col("partId").isInCollection(ids.map(Int.box))))
+          .where(zone.column)
+          .select("blockId", "codecId", "symtab", "bloomEnc")
+          .as[(String, Int, Array[Byte], Array[Byte])]
+          .filter { case (_, cid, st, bloom) => !reject(cid, st, bloom) }
+          .map(_._1)
+          .take(MaxSelectedBlockIds + 1)
+        Some(ids).filter(_.length <= MaxSelectedBlockIds)
+    }
+    survivors match {
+      case Some(ids) =>
+        StoreTables.read(spark, s"$outDir/blocks", StoreTables.Blocks)
+          .where(col("blockId").isInCollection(ids.toSeq) && zone.column)
+          .withColumn("bloomEnc", lit(null).cast("binary"))
+      case None =>
+        TokenIndex.withBloom(spark, outDir,
+          TokenDecoder.committedBlocks(spark, outDir, partIds).where(zone.column))
+    }
   }
 
   /** The ONE zone-pruned, dict-rejected block walk behind every
@@ -1247,7 +1278,8 @@ object CompressedSearch {
       row: (String, String, Array[Int], Int, Int) => Iterator[T])(
       implicit enc: org.apache.spark.sql.Encoder[T]): org.apache.spark.sql.Dataset[T] = {
     import spark.implicits._
-    selectBlocks(spark, outDir, partIds, zone(lo, hi),
+    selectBlocks(spark, outDir, TokenDecoder.liveBlocks(spark, outDir), partIds,
+        Zone.intersects(lo, hi),
         (cid, st, bloom) => dictRejects(cid, st, lo, hi) ||
           !graft.codec.TokBloom.mayIntersectRange(bloom, lo, hi))
       .select("codecId", "postCodec", "symtab", "payload", "lengthsEnc",

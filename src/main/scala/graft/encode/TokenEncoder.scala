@@ -1227,73 +1227,202 @@ object TokenDecoder {
         Seq("partId", "runId"), "left_semi")
   }
 
-  /** Stores whose [[liveBlocks]] frame stays cached; the least
-    * recently used one past this is unpersisted.
+  /** Stores whose [[liveBlocks]] snapshot stays cached; the least
+    * recently used one past this is dropped (a frame arm is
+    * unpersisted).
     */
   private[graft] val LiveFrameStores = 8
 
-  private final case class LiveFrame(signature: Seq[(String, Long, Long)],
-                                     frame: DataFrame)
+  /** Per-store byte bound on a driver snapshot: the rows' `symtab` and
+    * `bloomEnc` bytes plus [[SnapshotRowBytes]] each. A dict symtab
+    * reaches ~200 KB at `DictCodec.maxCard`, so the row bound alone
+    * would allow ~800 MB; at 16 MB, [[LiveFrameStores]] snapshots hold
+    * at most 128 MB of driver heap.
+    */
+  private[graft] val SnapshotMaxBytes: Long = 16L << 20
+
+  /** Driver charge per snapshot row for its blockId and fixed-width
+    * fields.
+    */
+  private val SnapshotRowBytes = 128
+
+  // the row bound of a driver snapshot; specs lower it to 0 to keep
+  // every store in the frame arm
+  @volatile private var snapshotRowCap = CompressedSearch.MaxSelectedBlockIds
+
+  /** Sets the row bound of a driver snapshot (specs set 0 to force the
+    * frame arm) and drops every store's snapshot, so the next call
+    * rebuilds under the new bound.
+    */
+  private[graft] def capSnapshotRows(cap: Int): Unit = liveSnapshots.synchronized {
+    snapshotRowCap = cap
+    liveSnapshots.values.forEach(_.blocks.release())
+    liveSnapshots.clear()
+  }
+
+  /** One live block's selection metadata. A null zone bound (a
+    * pre-zone-map file) reads as None and keeps the block.
+    */
+  private[graft] final case class LiveBlock(blockId: String, partId: Int,
+      codecId: Int, symtab: Array[Byte], minTok: Option[Int],
+      maxTok: Option[Int], blockRows: Int, totalTokens: Long,
+      bloomEnc: Array[Byte])
+
+  /** A store's live blocks as of one signature: driver rows when they
+    * fit the snapshot bounds, else a cached frame of the same columns.
+    */
+  private[graft] sealed trait LiveBlocks {
+    // a frame dropped under us (e.g. by spark.catalog.clearCache())
+    // no longer answers from the cache
+    def live: Boolean = this match {
+      case LiveFrame(f) => f.storageLevel != StorageLevel.NONE
+      case LiveRows(_) => true
+    }
+    def release(): Unit = this match {
+      case LiveFrame(f) => f.unpersist(blocking = false); ()
+      case LiveRows(_) => ()
+    }
+  }
+  private[graft] final case class LiveRows(rows: Array[LiveBlock]) extends LiveBlocks
+  private[graft] final case class LiveFrame(frame: DataFrame) extends LiveBlocks
+
+  private final case class LiveEntry(signature: Seq[(String, Long, Long)],
+                                     blocks: LiveBlocks)
 
   // keyed by (session, outDir); access order = LRU
-  private val liveFrames =
-    new java.util.LinkedHashMap[(SparkSession, String), LiveFrame](16, 0.75f, true) {
+  private val liveSnapshots =
+    new java.util.LinkedHashMap[(SparkSession, String), LiveEntry](16, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, String), LiveFrame]): Boolean =
-        size > LiveFrameStores && { e.getValue.frame.unpersist(blocking = false); true }
+          e: java.util.Map.Entry[(SparkSession, String), LiveEntry]): Boolean =
+        size > LiveFrameStores && { e.getValue.blocks.release(); true }
     }
+  // one lock per store while it is being built: concurrent cold calls
+  // on one store build it once, and no call waits on another store's
+  // build
+  private val building =
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), AnyRef]()
   private val frameSeq = new java.util.concurrent.atomic.AtomicLong()
 
-  /** The store's live-block METADATA frame: [[committedBlocks]] with
-    * the token index's `bloomEnc` adjoined, projected to `blockId,
-    * partId, codecId, symtab, minTok, maxTok, blockRows, totalTokens,
-    * bloomEnc` (and `frameId`, below) — the snapshot a table format
-    * keeps between queries (Delta's log snapshot, Iceberg's cached
-    * manifests), so a search's pre-scan reads one cached frame instead
-    * of re-running the lineage/marker/index joins per call. It IS committedBlocks
-    * plus the bloom, not a second liveness rule.
+  /** The store's live-block METADATA: [[committedBlocks]] with the
+    * token index's `bloomEnc` adjoined, projected to `blockId, partId,
+    * codecId, symtab, minTok, maxTok, blockRows, totalTokens, bloomEnc`
+    * ([[liveMeta]]) — the snapshot a table format keeps between
+    * queries (Delta's log snapshot, Iceberg's cached manifests), so a
+    * search selects blocks without re-running the lineage/marker/index
+    * joins per call. It IS committedBlocks plus the bloom, not a second
+    * liveness rule.
     *
-    * Cached (MEMORY_AND_DISK) per (session, outDir), at most
-    * [[LiveFrameStores]] stores. Every call re-lists the store's
-    * [[StoreTables.signature]] first; a changed signature (or a cache
-    * dropped under it, e.g. by `spark.catalog.clearCache()`) unpersists
-    * the old frame and rebuilds, so committedBlocks' protocol checks run
-    * again on any change to `completed/` or `lineage/` and a build
-    * that throws caches nothing. Each build's plan carries its own
-    * `frameId` literal: the cache manager is shared by every session
-    * of the context and matches plans, not Datasets, so another build
-    * over the same paths (a newer snapshot, another session) must
-    * never resolve to this one's rows.
+    * Kept in one of two arms, per (session, outDir), for at most
+    * [[LiveFrameStores]] stores:
+    *  - [[LiveRows]]: the rows on the driver, when the store has at
+    *    most [[CompressedSearch.MaxSelectedBlockIds]] live blocks and
+    *    they fit [[SnapshotMaxBytes]]. Block selection then runs as a
+    *    driver loop, with no Spark job. Nothing stays persisted.
+    *  - [[LiveFrame]]: otherwise, the projection cached
+    *    (MEMORY_AND_DISK), and selection is a scan of it.
+    * A build persists the projection and runs one job over it
+    * ([[fitRows]]), which fills the cache and decides the arm; a store
+    * that fits then drops the cache. So a store over the bounds reads
+    * its metadata once per snapshot, as the pre-scan that filled the
+    * cache did before the driver arm existed.
     *
-    * The frame lives in a sibling of `spark` ([[frameSession]]): the
-    * same runtime conf with adaptive execution off. Under AQE, a scan
-    * of a cached plan that holds exchanges (the commit joins'
+    * Every call re-lists the store's [[StoreTables.signature]] first; a
+    * changed signature (or a frame dropped under it, e.g. by
+    * `spark.catalog.clearCache()`) rebuilds, and the new entry replaces
+    * (and unpersists) the old, so committedBlocks' protocol checks run
+    * again on any change to `completed/` or `lineage/` and a build that
+    * throws keeps nothing. A build holds only its own store's lock,
+    * not the one that guards the entries: concurrent cold calls on one
+    * store wait for one build, and no call waits on another store's.
+    * Each frame's plan carries its own `frameId` literal: the cache manager
+    * is shared by every session of the context and matches plans, not
+    * Datasets, so another build over the same paths (a newer snapshot,
+    * another session) must never resolve to this one's rows.
+    *
+    * Both arms read through a sibling of `spark` ([[frameSession]]):
+    * the same runtime conf with adaptive execution off. Under AQE, a
+    * scan of a cached plan that holds exchanges (the commit joins'
     * broadcasts) first materializes the whole cache in a job of its
-    * own; without it the first pre-scan fills the cache as it reads,
-    * so a cold call runs no more jobs than the uncached pre-scan did.
+    * own; without it the build's job fills the cache as it reads.
     */
-  private[encode] def liveBlocks(spark: SparkSession, outDir: String): DataFrame = {
+  private[graft] def liveBlocks(spark: SparkSession, outDir: String): LiveBlocks = {
     val sig = StoreTables.signature(spark, outDir)
     val key = (spark, outDir)
-    liveFrames.synchronized {
-      Option(liveFrames.get(key)) match {
-        case Some(f) if f.signature == sig &&
-            f.frame.storageLevel != StorageLevel.NONE => f.frame
-        case stale =>
-          stale.foreach { f =>
-            liveFrames.remove(key)
-            f.frame.unpersist(blocking = false)
+    def current: Option[LiveBlocks] =
+      Option(liveSnapshots.get(key)).filter(e => e.signature == sig && e.blocks.live)
+        .map(_.blocks)
+    liveSnapshots.synchronized(current).getOrElse {
+      val lock = building.computeIfAbsent(key, _ => new AnyRef)
+      try lock.synchronized {
+        liveSnapshots.synchronized(current).getOrElse {
+          val built = buildLive(frameSession(spark), outDir)
+          liveSnapshots.synchronized {
+            Option(liveSnapshots.put(key, LiveEntry(sig, built))).foreach(_.blocks.release())
           }
-          val fs = frameSession(spark)
-          val frame = TokenIndex.withBloom(fs, outDir, committedBlocks(fs, outDir, None))
-            .select(col("blockId"), col("partId"), col("codecId"), col("symtab"),
-              col("minTok"), col("maxTok"), col("blockRows"), col("totalTokens"),
-              col("bloomEnc"), lit(frameSeq.incrementAndGet()).as("frameId"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-          liveFrames.put(key, LiveFrame(sig, frame))
-          frame
-      }
+          built
+        }
+      } finally building.remove(key, lock)
     }
+  }
+
+  /** The payload-free projection both [[liveBlocks]] arms hold. */
+  private[graft] def liveMeta(spark: SparkSession, outDir: String): DataFrame =
+    TokenIndex.withBloom(spark, outDir, committedBlocks(spark, outDir, None))
+      .select("blockId", "partId", "codecId", "symtab", "minTok", "maxTok",
+        "blockRows", "totalTokens", "bloomEnc")
+
+  /** One snapshot of the store: [[liveMeta]] persisted under a fresh
+    * `frameId`, then kept as rows if [[fitRows]] finds they fit (the
+    * cache dropped), else as the cached frame. A build that throws
+    * leaves nothing persisted.
+    */
+  private def buildLive(spark: SparkSession, outDir: String): LiveBlocks = {
+    val frame = liveMeta(spark, outDir)
+      .withColumn("frameId", lit(frameSeq.incrementAndGet()))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val rows = try fitRows(frame) catch {
+      case e: Throwable => frame.unpersist(blocking = false); throw e
+    }
+    rows match {
+      case Some(r) => frame.unpersist(blocking = false); LiveRows(r)
+      case None => LiveFrame(frame)
+    }
+  }
+
+  /** `frame`'s rows if there are at most [[snapshotRowCap]] of them
+    * within [[SnapshotMaxBytes]], else None. One job over the persisted
+    * frame, which fills its cache: each of its P partitions returns its
+    * row and byte counts, plus its rows when they fit a 1/P share of
+    * the bytes, so the result never holds more than the byte bound. A
+    * store that fits but whose bytes sit in few partitions takes its
+    * rows in a second job, a read of the cache.
+    */
+  private def fitRows(frame: DataFrame): Option[Array[LiveBlock]] = {
+    val enc = org.apache.spark.sql.Encoders.product[LiveBlock]
+    val rdd = frame.as[LiveBlock](enc).rdd
+    val share = SnapshotMaxBytes / math.max(rdd.getNumPartitions, 1)
+    val cap = snapshotRowCap
+    val parts = rdd.mapPartitions { it =>
+      var n = 0L
+      var bytes = 0L
+      var kept = scala.collection.mutable.ArrayBuffer[LiveBlock]()
+      // the cache holds the whole partition already; reading stops
+      // once the partition alone is over a bound
+      def fits = n <= cap && bytes <= SnapshotMaxBytes
+      while (fits && it.hasNext) {
+        val r = it.next()
+        n += 1
+        bytes += SnapshotRowBytes + Option(r.symtab).fold(0)(_.length) +
+          Option(r.bloomEnc).fold(0)(_.length)
+        if (kept != null) {
+          if (bytes <= share) kept += r else kept = null
+        }
+      }
+      Iterator.single((n, bytes, Option(kept).filter(_ => fits).map(_.toArray)))
+    }.collect()
+    if (parts.map(_._1).sum > cap || parts.map(_._2).sum > SnapshotMaxBytes) None
+    else if (parts.forall(_._3.isDefined)) Some(parts.flatMap(_._3.get))
+    else Some(frame.as[LiveBlock](enc).collect())
   }
 
   // one per caller session (weak keys), reused by every build: a new
@@ -1302,9 +1431,9 @@ object TokenDecoder {
 
   /** `spark`'s sibling with its current runtime conf (so the frame
     * reads the store exactly as `spark` would) and adaptive execution
-    * off. Called under the `liveFrames` lock.
+    * off.
     */
-  private def frameSession(spark: SparkSession): SparkSession = {
+  private def frameSession(spark: SparkSession): SparkSession = frameSessions.synchronized {
     val s = frameSessions.computeIfAbsent(spark, _ => spark.newSession())
     spark.conf.getAll.foreach { case (k, v) =>
       if (!s.conf.getOption(k).contains(v)) s.conf.set(k, v)

@@ -14,6 +14,37 @@ class CompressedSearchSpec extends SparkSpecBase {
   private def brute(vals: Array[Int], lo: Int, hi: Int): Long =
     vals.count(v => v >= lo && v <= hi).toLong
 
+  /** Runs `body` with every store's live blocks kept as a cached frame
+    * (the arm of a store over the snapshot bounds) instead of driver
+    * rows.
+    */
+  private def inArm[T](frame: Boolean)(body: => T): T =
+    if (!frame) body
+    else {
+      TokenDecoder.capSnapshotRows(0)
+      try body finally TokenDecoder.capSnapshotRows(CompressedSearch.MaxSelectedBlockIds)
+    }
+
+  /** Rewrites `dir/blocks` with the zone-map columns dropped from the
+    * files of the rows under `legacy`: the file-level schema mix
+    * TokenEncoder.run's append produces when it resumes a store encoded
+    * before the zone-map columns existed.
+    */
+  private def dropZones(dir: String, legacy: org.apache.spark.sql.Column): Unit = {
+    val blocks = spark.read.parquet(s"$dir/blocks").cache()
+    val old = blocks.where(legacy).drop("minTok", "maxTok")
+    val modern = blocks.where(!legacy)
+    assert(old.count() > 0 && modern.count() > 0, "need both halves")
+    val tmp = tmpDir("graft-csearch-mixed-blocks")
+    old.write.mode("append").option("compression", "uncompressed").parquet(tmp)
+    modern.write.mode("append").option("compression", "uncompressed").parquet(tmp)
+    blocks.unpersist()
+    TokenEncoder.rmTree(new java.io.File(s"$dir/blocks"))
+    java.nio.file.Files.move(java.nio.file.Paths.get(tmp),
+      java.nio.file.Paths.get(s"$dir/blocks"),
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+  }
+
   /** One array per codec regime, engineered so each codec CAN encode it. */
   private val regimes: Seq[(String, Array[Int])] = Seq(
     "runs" -> (Array.fill(2000)(7) ++ Array.fill(500)(113) ++ Array.fill(100)(99999)),
@@ -189,25 +220,9 @@ class CompressedSearchSpec extends SparkSpecBase {
     val ds = graft.synth.TokenSynth.dataset(spark, 300)
     val dir = tmpDir("graft-csearch-mixed")
     TokenEncoder.run(ds, dir, TokenEncoder.EncodeConfig(targetRowsPerPart = 100))
-    // rewrite the blocks dir as a file-level schema MIX: even partIds
-    // without the zone columns (legacy files), odd partIds with them —
-    // exactly what TokenEncoder.run's append produces when it resumes
-    // a store encoded before the zone-map columns existed
-    val blocks = spark.read.parquet(s"$dir/blocks").cache()
-    val legacy = blocks.where(col("partId") % 2 === 0).drop("minTok", "maxTok")
-    val modern = blocks.where(col("partId") % 2 === 1)
-    assert(legacy.count() > 0 && modern.count() > 0, "need both halves")
-    val tmp = tmpDir("graft-csearch-mixed-blocks")
-    legacy.write.mode("append").option("compression", "uncompressed").parquet(tmp)
-    modern.write.mode("append").option("compression", "uncompressed").parquet(tmp)
-    blocks.unpersist()
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm); f.delete()
-    }
-    rm(new java.io.File(s"$dir/blocks"))
-    java.nio.file.Files.move(java.nio.file.Paths.get(tmp),
-      java.nio.file.Paths.get(s"$dir/blocks"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    // even partIds without the zone columns (legacy files), odd partIds
+    // with them
+    dropZones(dir, col("partId") % 2 === 0)
 
     // decode boundary: legacy rows' null zone values coalesce before
     // .as[EncodedBlock]; full round trip survives
@@ -798,10 +813,10 @@ class CompressedSearchSpec extends SparkSpecBase {
     graft.encode.TokenIndex.build(spark, dir)
     val (lo, hi) = (100, 116)
 
-    // (a) the pre-scan itself is payload-FREE at the scan: no parquet
-    // read in its plan projects the payload column
-    val metaPlan = CompressedSearch
-      .blockMetaFrame(spark, dir, None, lit(true))
+    // (a) the live-block metadata both snapshot arms hold is
+    // payload-FREE at the scan: no parquet read in its plan projects
+    // the payload column
+    val metaPlan = TokenDecoder.liveMeta(spark, dir)
       .queryExecution.executedPlan.toString
     val metaSchemas = "ReadSchema: struct<[^>]*".r.findAllIn(metaPlan).toList
     assert(metaSchemas.nonEmpty && metaSchemas.forall(!_.contains("payload")),
@@ -809,9 +824,9 @@ class CompressedSearchSpec extends SparkSpecBase {
 
     // (b) the symtab/bloom tiers genuinely reject blocks the zone
     // filter keeps — the precondition for (c) to prove anything
-    val meta = CompressedSearch.blockMetaFrame(spark, dir, None,
-        (col("minTok").isNull || col("minTok") <= hi) &&
-          (col("maxTok").isNull || col("maxTok") >= lo))
+    val meta = TokenDecoder.liveMeta(spark, dir)
+      .where((col("minTok").isNull || col("minTok") <= hi) &&
+        (col("maxTok").isNull || col("maxTok") >= lo))
       .select("blockId", "codecId", "symtab", "bloomEnc")
       .as[(String, Int, Array[Byte], Array[Byte])]
       .collect()
@@ -889,11 +904,36 @@ class CompressedSearchSpec extends SparkSpecBase {
   }
 
   test("the cached live-block frame follows every change to the store") {
+    // both arms: driver rows, and the cached frame of a store over the
+    // snapshot bounds
+    for (frame <- Seq(false, true)) inArm(frame)(liveFollowsStore(frame))
+  }
+
+  /** Searches a store through a partial commit, a resume, orphan
+    * blocks, an index build, a vacuum, a cache clear and a re-encode at
+    * the same path: after each, the answers equal brute force, the
+    * store's live-block snapshot is a new one wherever the store
+    * changed, and at most the current frame stays persisted.
+    */
+  private def liveFollowsStore(frameArm: Boolean): Unit = {
     import spark.implicits._
+    val sc = spark.sparkContext
+    val persistedBefore = sc.getPersistentRDDs.keySet
     val cfg = TokenEncoder.EncodeConfig(targetRowsPerPart = 100)
     val ds = graft.synth.TokenSynth.dataset(spark, 600, parallelism = 4)
     val rows = ds.collect().toSeq
     val dir = tmpDir("graft-liveframe")
+    var last: TokenDecoder.LiveBlocks = null
+    def check(live: Seq[TokenRow], step: String, rebuilt: Boolean = true): Unit = {
+      assertLiveAnswers(spark, dir, live, step)
+      val now = TokenDecoder.liveBlocks(spark, dir)
+      assert(now.isInstanceOf[TokenDecoder.LiveFrame] == frameArm, step)
+      assert((now ne last) == rebuilt, s"snapshot rebuilt after $step: ${now ne last}")
+      last = now
+      val persisted = sc.getPersistentRDDs.keySet -- persistedBefore
+      assert(persisted.size == (if (frameArm) 1 else 0),
+        s"${persisted.size} frames persisted after $step")
+    }
     // a half-committed store (PipelineSpec's partial-commit setup) is
     // searched, then resumed
     val plan = TokenEncoder.partitionPlan(ds, cfg.targetRowsPerPart)
@@ -909,23 +949,26 @@ class CompressedSearchSpec extends SparkSpecBase {
       .write.mode("append").parquet(s"$dir/lineage")
     blocks.select("partId", "runId").distinct()
       .write.mode("append").parquet(s"$dir/completed")
-    assertLiveAnswers(spark, dir,
-      rows.filter(r => half(TokenEncoder.partIdOf(plan, r))), "a partial commit")
+    check(rows.filter(r => half(TokenEncoder.partIdOf(plan, r))), "a partial commit")
     TokenEncoder.run(ds, dir, cfg)
-    assertLiveAnswers(spark, dir, rows, "the resume")
+    check(rows, "the resume")
     // orphan blocks of a run that never committed change no answer
     TokenEncoder.encodeBlocks(ds, plan, cfg, Some(half))
       .write.mode("append").parquet(s"$dir/blocks")
-    assertLiveAnswers(spark, dir, rows, "appending orphan blocks")
+    check(rows, "appending orphan blocks")
     graft.encode.TokenIndex.build(spark, dir)
-    assertLiveAnswers(spark, dir, rows, "an index build")
+    check(rows, "an index build")
     assert(TokenEncoder.vacuum(spark, dir) > 0L)
-    assertLiveAnswers(spark, dir, rows, "vacuum")
-    // different rows re-encoded at the same path
+    check(rows, "vacuum")
+    // a frame is a Spark cache and is dropped with the others; driver
+    // rows are not, and still match the unchanged store
+    spark.catalog.clearCache()
+    check(rows, "clearCache", rebuilt = frameArm)
+    // a new encode run: different rows re-encoded at the same path
     TokenEncoder.rmTree(new java.io.File(dir))
     val shifted = rows.map(r => r.copy(tokens = r.tokens.map(_ + 3)))
     TokenEncoder.run(spark.createDataset(shifted), dir, cfg)
-    assertLiveAnswers(spark, dir, shifted, "a re-encode at the same path")
+    check(shifted, "a re-encode at the same path")
   }
 
   test("a store with lineage but no commit markers throws on every search") {
@@ -965,7 +1008,6 @@ class CompressedSearchSpec extends SparkSpecBase {
   }
 
   test("live-block frames are bounded and scoped to their session") {
-    import spark.implicits._
     val sc = spark.sparkContext
     val bound = TokenDecoder.LiveFrameStores
     val before = sc.getPersistentRDDs.keySet
@@ -975,17 +1017,25 @@ class CompressedSearchSpec extends SparkSpecBase {
       TokenEncoder.run(ds, dir, TokenEncoder.EncodeConfig(targetRowsPerPart = 20))
       (dir, ds.collect().toSeq)
     }
-    for ((dir, rows) <- stores) {
-      assert(CompressedSearch.countTokens(spark, dir, 100, 116).first().getLong(0) ==
-        rows.map(r => brute(r.tokens, 100, 116)).sum)
-      // evicted frames are unpersisted
-      val added = sc.getPersistentRDDs.keySet -- before
-      assert(added.size <= bound, s"${added.size} frames cached, bound $bound")
+    inArm(frame = true) {
+      for ((dir, rows) <- stores) {
+        assert(CompressedSearch.countTokens(spark, dir, 100, 116).first().getLong(0) ==
+          rows.map(r => brute(r.tokens, 100, 116)).sum)
+        // evicted frames are unpersisted
+        val added = sc.getPersistentRDDs.keySet -- before
+        assert(added.size <= bound, s"${added.size} frames cached, bound $bound")
+      }
+      assert((sc.getPersistentRDDs.keySet -- before).nonEmpty, "no frame was cached")
     }
-    assert((sc.getPersistentRDDs.keySet -- before).nonEmpty, "no frame was cached")
-    // a second session searches with frames of its own: after the store
-    // is replaced under the first session's frame, no session may read
-    // that frame's rows
+    for (frame <- Seq(false, true)) inArm(frame)(replacedUnderSessions())
+  }
+
+  /** A second session searches with snapshots of its own: after the
+    * store is replaced under the first session's snapshot, no session
+    * may read that snapshot's rows.
+    */
+  private def replacedUnderSessions(): Unit = {
+    import spark.implicits._
     val dir = tmpDir("graft-liveframe-sessions")
     val rows = graft.synth.TokenSynth.dataset(spark, 600, parallelism = 4).collect().toSeq
     TokenEncoder.run(spark.createDataset(rows), dir,
@@ -1005,5 +1055,103 @@ class CompressedSearchSpec extends SparkSpecBase {
     assertLiveAnswers(fresh, dir, shifted, "a replaced store, in a third session")
     assertLiveAnswers(other, dir, shifted, "a replaced store, in the second session")
     assertLiveAnswers(spark, dir, shifted, "a replaced store, in the first session")
+  }
+
+  /** The eight search families of the benchmark's query mix, on `dir`. */
+  private def families(dir: String, rows: Seq[TokenRow]): Seq[(String, () => org.apache.spark.sql.DataFrame)] = {
+    val rare = rows.filter(_.source == "social").flatMap(_.tokens).head
+    val news = rows.filter(r => r.source == "news" && r.tokens.distinct.length >= 2).head.tokens.distinct
+    val web = rows.filter(r => r.source == "web" && r.tokens.length >= 3).head.tokens
+    Seq(
+      "count" -> (() => CompressedSearch.countTokens(spark, dir, 100, 116)),
+      "search" -> (() => CompressedSearch.searchDocs(spark, dir, 100, 116)),
+      "search_src" -> (() => CompressedSearch.searchDocsInSource(spark, dir, "social", rare, rare)),
+      "read" -> (() => CompressedSearch.readDocs(spark, dir, 100, 116).toDF()),
+      "phrase" -> (() => CompressedSearch.phraseSearchDocs(spark, dir, web.slice(0, 3))),
+      "conj" -> (() => CompressedSearch.searchDocsWithAll(spark, dir, news.take(2))),
+      "bm25" -> (() => CompressedSearch.bm25TopK(spark, dir, Array(rare, news(0), web(0)), rows.length)),
+      "freq" -> (() => CompressedSearch.tokenFrequency(spark, dir)))
+  }
+
+  test("driver-snapshot and frame arms give the same rows for every family") {
+    import spark.implicits._
+    val rows = graft.synth.TokenSynth.dataset(spark, 600, parallelism = 4).collect().toSeq
+    val dir = tmpDir("graft-arms")
+    TokenEncoder.run(spark.createDataset(rows), dir,
+      TokenEncoder.EncodeConfig(targetRowsPerPart = 100))
+    // legacy null zone maps on the even partIds, token blooms on the
+    // non-dict blocks
+    dropZones(dir, col("partId") % 2 === 0)
+    graft.encode.TokenIndex.build(spark, dir)
+    // the store exercises every tier of the driver loop: null zones,
+    // and blocks the zone keeps but the dict symtab or the bloom rejects
+    val meta = TokenDecoder.liveMeta(spark, dir)
+      .select("codecId", "symtab", "minTok", "maxTok", "bloomEnc")
+      .as[(Int, Array[Byte], Option[Int], Option[Int], Array[Byte])].collect()
+    assert(meta.exists(_._3.isEmpty) && meta.exists(_._3.nonEmpty))
+    assert(meta.exists { case (cid, st, mn, mx, _) =>
+      mn.forall(_ <= 116) && mx.forall(_ >= 100) &&
+        CompressedSearch.dictRejects(cid, st, 100, 116) })
+    val rare = rows.filter(_.source == "social").flatMap(_.tokens).head
+    assert(meta.exists { case (cid, _, mn, mx, bloom) =>
+      cid != CodecIds.Dict && bloom != null && mn.forall(_ <= rare) && mx.forall(_ >= rare) &&
+        !graft.codec.TokBloom.mayContain(bloom, rare) })
+
+    def answers(frame: Boolean): Map[String, Seq[String]] = inArm(frame) {
+      assert(TokenDecoder.liveBlocks(spark, dir).isInstanceOf[TokenDecoder.LiveFrame] == frame)
+      // the pushed survivor list reaches the payload scan in both arms
+      val plan = CompressedSearch.searchDocs(spark, dir, 100, 116)
+        .queryExecution.executedPlan.toString
+      assert(plan.contains("In(blockId") || plan.contains("blockId IN"), plan)
+      assertLiveAnswers(spark, dir, rows, if (frame) "the frame arm" else "the driver arm")
+      val bySource = graft.synth.TokenSynth.sources.map(_._1).map { src =>
+        s"search_src/$src" -> CompressedSearch.searchDocsInSource(spark, dir, src, 100, 116)
+          .collect().map(_.toString).toSeq.sorted
+      }
+      (families(dir, rows).map { case (f, q) => f -> q().collect().map(_.toString).toSeq.sorted } ++
+        bySource).toMap
+    }
+    val driver = answers(frame = false)
+    val frame = answers(frame = true)
+    assert(driver.keySet == frame.keySet)
+    for (f <- driver.keys) {
+      assert(driver(f) == frame(f), f)
+      if (!f.startsWith("search_src/")) assert(driver(f).nonEmpty, s"$f: no rows to compare")
+    }
+  }
+
+  test("a zone map predicate reads the same as a pushed column and as a driver check") {
+    import spark.implicits._
+    import CompressedSearch.Zone
+    val bounds = Seq(None, Some(Int.MinValue), Some(-5), Some(0), Some(7), Some(100),
+      Some(116), Some(117), Some(Int.MaxValue))
+    val blocks = for (mn <- bounds; mx <- bounds) yield (mn, mx)
+    val df = blocks.toDF("minTok", "maxTok")
+    for (z <- Seq(Zone.intersects(100, 116), Zone.intersects(Int.MinValue, Int.MaxValue),
+        Zone.intersects(7, 7), Zone.holdsAny(Array(0, 117)), Zone.holdsAll(Array(116, -5, 7)))) {
+      val pushed = df.where(z.column).as[(Option[Int], Option[Int])].collect().toSeq
+      val driver = blocks.filter { case (mn, mx) => z.keeps(mn, mx) }
+      assert(pushed.sortBy(_.toString) == driver.sortBy(_.toString), z)
+    }
+  }
+
+  test("warm search calls stay within their Spark-job budgets") {
+    // measured on the driver snapshot: block selection runs no job, so
+    // a warm call is its payload scan's jobs; lower these when a change
+    // removes jobs, never raise them to pass
+    val budget = Map("count" -> 2, "search" -> 2, "search_src" -> 2, "read" -> 1,
+      "phrase" -> 2, "conj" -> 3, "bm25" -> 3, "freq" -> 2)
+    import spark.implicits._
+    val rows = graft.synth.TokenSynth.dataset(spark, 600, parallelism = 4).collect().toSeq
+    val dir = tmpDir("graft-warm-jobs")
+    TokenEncoder.run(spark.createDataset(rows), dir,
+      TokenEncoder.EncodeConfig(targetRowsPerPart = 100))
+    graft.encode.TokenIndex.build(spark, dir)
+    for ((f, q) <- families(dir, rows)) {
+      q().collect()
+      val jobs = jobsOf { q().collect(); () }
+      info(s"$f: $jobs warm jobs")
+      assert(jobs <= budget(f), s"warm $f ran $jobs jobs, budget ${budget(f)}")
+    }
   }
 }

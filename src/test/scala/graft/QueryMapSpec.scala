@@ -39,22 +39,34 @@ class QueryMapSpec extends SparkSpecBase {
   private def shape(df: DataFrame): Seq[(String, String)] =
     df.schema.fields.toSeq.map(f => f.name -> f.dataType.simpleString)
 
-  // the bench rows, collected before the verify form is built: both
-  // forms restage the same side-dir stages (minhash_stage), which the
-  // bench frame's lazy plan would otherwise read after the rewrite
-  private def benchRows(q: String): DataFrame = {
-    val df = SparkEntry.benchQueries(q)(spark, dir)
-    spark.createDataFrame(
-      java.util.Arrays.asList(df.collect(): _*), df.schema)
-  }
-
   test("bench forms return the verified rows") {
     sameRows.foreach { q =>
-      val bench = benchRows(q)
+      val bench = SparkEntry.benchQueries(q)(spark, dir)
       val verify = SparkEntry.queries(q)(spark, dir)
       assert(shape(bench) == shape(verify), q)
       val (bad, n) = SparkEntry.symDiffAndCount(bench, verify)
       assert(bad == 0, s"$q: $bad of $n rows differ")
+    }
+  }
+
+  test("a staged query built twice still runs its first frame") {
+    // each build stages under a dir of its own: the second build must
+    // not rewrite the stage the first frame reads lazily
+    for (q <- Seq("q_minhash_pairs", "q_jaccard_within", "q_dedup_clusters")) {
+      val first = SparkEntry.benchQueries(q)(spark, dir)
+      val second = SparkEntry.benchQueries(q)(spark, dir)
+      val (bad, n) = SparkEntry.symDiffAndCount(first, second)
+      assert(bad == 0 && n > 0, s"$q: $bad of $n rows differ")
+    }
+    // and every stage is deleted when the JVM exits
+    val side = new org.apache.hadoop.fs.Path(sys.props("graft.side.dir"))
+    val fs = side.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val stages = fs.listStatus(side).map(_.getPath)
+      .filter(_.getName.matches("(minhash|jaccard)_stage(_cc)?_\\d+"))
+    assert(stages.length >= 6, stages.toSeq)
+    stages.foreach { p =>
+      assert(fs.cancelDeleteOnExit(p), s"$p is not deleted on exit")
+      fs.deleteOnExit(p)
     }
   }
 

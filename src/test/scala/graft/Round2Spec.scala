@@ -162,6 +162,36 @@ class Round2Spec extends SparkSpecBase {
     assert(staged == direct && direct.nonEmpty)
   }
 
+  test("minhashPairs shingles each page once per scan") {
+    val s = spark
+    import s.implicits._
+    val rng = new scala.util.Random(29)
+    val docs = (0 until 40).map { i =>
+      val text =
+        if (i == 0) null
+        else if (i == 1) ""
+        else if (i == 2) "single"
+        else (0 until 20).map(_ => f"w${i / 2}_${rng.nextInt(30)}%02d").mkString(" ")
+      (i.toLong, text)
+    }
+    val path = tmpDir("mh-pages") + "/pages"
+    docs.toDF("id", "text").write.parquet(path)
+    val pages = spark.read.parquet(path)
+    // Catalyst would push `size(sh) > 0` below the projection and
+    // inline `sh`: two shingle calls per scan
+    val plan = Dedup.minhashPairs(pages, "id", "text", shingleN = 2, threshold = 0.3)
+      .queryExecution.executedPlan.toString
+    val scans = "FileScan parquet".r.findAllIn(plan).size
+    val calls = "shingleexpr\\(".r.findAllIn(plan).size
+    assert(scans >= 3 && calls == scans, s"$calls shingle calls over $scans scans:\n$plan")
+    // the same rows survive: exactly the pages with at least one shingle
+    val want = pages.where(size(graft.functions.Shingles.shinglesNative(col("text"), 2)) > 0)
+      .select("id").as[Long].collect().toSet
+    val got = Dedup.stageSignatures(pages, "id", "text", 2, tmpDir("mh-once") + "/sig")
+      .select("id").as[Long].collect().toSet
+    assert(got == want && !got.contains(0L) && !got.contains(1L))
+  }
+
   test("minhashBucketDiag surfaces what the skew cap drops") {
     val s = spark
     import s.implicits._

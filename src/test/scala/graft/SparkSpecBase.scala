@@ -16,6 +16,39 @@ trait SparkSpecBase extends AnyFunSuite {
     else if (f.isDirectory) f.listFiles().map(c => dirSize(c.getPath)).sum
     else 0L
   }
+
+  /** Spark jobs launched by `body`. The listener counts jobs carrying a
+    * per-call local property (broadcast threads inherit it); a marker
+    * job run afterwards drains the asynchronous listener bus — its
+    * start event is delivered after every event `body` posted.
+    */
+  protected def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val key = "graft.test.jobs"
+    val tag = java.util.UUID.randomUUID().toString
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(key)).orNull match {
+          case `tag` => n.incrementAndGet(); ()
+          case v if v == s"$tag-marker" => drained.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, tag)
+      try body finally sc.setLocalProperty(key, s"$tag-marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+    n.get
+  }
 }
 
 object SparkSpecBase {
