@@ -13,6 +13,8 @@ import graft.functions.SimHash
   *  - SimHash: 64-bit fingerprint + pigeonhole chunk blocking
   *    (Charikar '02 — public)
   *  - n-gram Jaccard: exact verified similarity on candidate pairs
+  *  - near-dup removal: connected components over a pair table, one
+  *    survivor (the minimum id) per cluster ([[dropClusterLosers]])
   *
   * Scale notes: every candidate-generation path is a shuffle on a
   * bucket key (band hash / chunk value), never a cross join; bucket
@@ -176,8 +178,7 @@ object Dedup {
     * what the maxBucket skew cap drops FROM THE QUERY ITSELF —
     * `rows_dropped` (bucket rows truncated) and `max_bucket_rows`
     * (hottest bucket observed) become available via `obs.get` after
-    * any action on the returned plan, with no second job (the
-    * standalone minhashBucketDiag re-scans; this doesn't). A non-zero
+    * any action on the returned plan, with no second job. A non-zero
     * rows_dropped means the cap cost candidate recall on this corpus.
     */
   def minhashCandidatesSigned(withSig: DataFrame, k: Int = 64,
@@ -191,8 +192,7 @@ object Dedup {
       s"native signature kernel is fixed at k=${graft.functions.MinHashSig.K}")
     val banded = bandedBuckets(withSig, k, nBands)
     // cap pathological buckets (boilerplate text floods a bucket);
-    // capObs reports what the cap drops (minhashBucketDiag is the
-    // standalone form)
+    // capObs reports what the cap drops
     val ranked = banded
       .withColumn("rn", row_number().over(
         org.apache.spark.sql.expressions.Window
@@ -221,18 +221,6 @@ object Dedup {
     }
   }
 
-  /** Exact-Jaccard verification of candidate id pairs against the
-    * documents: returns (id_a, id_b, jaccard) with jaccard >= threshold.
-    */
-  def minhashVerify(df: DataFrame, cand: DataFrame, idCol: String,
-                    textCol: String, shingleN: Int,
-                    threshold: Double): DataFrame = {
-    // one shingling pass, then the SAME verify body as the staged path
-    // (a hand-kept duplicate of that join/threshold block diverged
-    // silently once — delegate instead)
-    minhashVerifyShingled(shingled(df, idCol, textCol, shingleN), cand, threshold)
-  }
-
   /** Near-duplicate pairs via MinHash LSH banding + estimate
     * pre-filter + exact-Jaccard verification. Returns
     * (id_a, id_b, jaccard) with id_a < id_b and jaccard >= threshold.
@@ -241,26 +229,14 @@ object Dedup {
                    shingleN: Int = 3, k: Int = 64, bands: Int = 0,
                    threshold: Double = 0.7, maxBucket: Int = 64,
                    estMargin: Double = 0.18,
-                   capObs: Option[org.apache.spark.sql.Observation] = None): DataFrame =
-    minhashVerify(df,
-      minhashCandidatesSigned(withSignatures(df, idCol, textCol, shingleN),
-        k, bands, threshold, maxBucket, estMargin, capObs),
-      idCol, textCol, shingleN, threshold)
-
-  /** Near-duplicate REMOVAL: keep one representative per verified
-    * near-dup pair (the smaller id survives; transitive chains
-    * collapse toward their minimum because every non-minimal member
-    * loses at least one pairing). The composition CorpusPipelineCli
-    * runs, packaged: pairs -> loser ids -> anti-join.
-    */
-  def removeNearDuplicates(df: DataFrame, idCol: String, textCol: String,
-                           shingleN: Int = 3, k: Int = 64, bands: Int = 0,
-                           threshold: Double = 0.7,
-                           maxBucket: Int = 64): DataFrame = {
-    val losers = minhashPairs(df, idCol, textCol, shingleN, k, bands,
-      threshold, maxBucket)
-      .select(col("id_b").as(idCol)).distinct()
-    df.join(losers, Seq(idCol), "left_anti")
+                   capObs: Option[org.apache.spark.sql.Observation] = None): DataFrame = {
+    val cand = minhashCandidatesSigned(
+      withSignatures(df, idCol, textCol, shingleN),
+      k, bands, threshold, maxBucket, estMargin, capObs)
+    // one shingling pass, then the SAME verify body as the staged path
+    // (a hand-kept duplicate of that join/threshold block diverged
+    // silently once — delegate instead)
+    minhashVerifyShingled(shingled(df, idCol, textCol, shingleN), cand, threshold)
   }
 
   /** Transitive near-dup CLUSTERS from verified pairs: connected
@@ -478,77 +454,40 @@ object Dedup {
   val lastCcSweepMs =
     new java.util.concurrent.atomic.AtomicReference[List[Long]](Nil)
 
-  /** Near-dup removal with CANONICAL cluster semantics: one survivor
-    * (the minimum id) per transitive near-dup cluster — the
-    * fixed-point form of `removeNearDuplicates` (whose greedy
-    * pair-loser rule can over-remove on chains: in a path a-b-c the
-    * greedy form drops both b and c even though c never paired with
-    * the survivor a; this form keeps exactly one per component).
-    * Every non-minimal cluster member is a loser; the anti-join keeps
-    * the min-id survivors plus all singletons.
+  /** Near-dup removal: one survivor (the minimum id) per transitive
+    * near-dup cluster of `pairs` (id_a, id_b, ...). Every non-minimal
+    * [[connectedComponents]] member is a loser; the anti-join keeps
+    * the min-id survivors plus every id in no pair. A pair-loser rule
+    * would over-remove on chains: pairs (1,3),(2,3) form one cluster
+    * {1,2,3}, so only 1 survives, while dropping each pair's larger id
+    * keeps both 1 and 2. `maxIter` and `checkpointDir` pass through to
+    * [[connectedComponents]]. Returns the surviving rows of `df`
+    * unchanged.
     */
-  def removeNearDuplicatesCC(df: DataFrame, idCol: String, textCol: String,
-                             shingleN: Int = 3, k: Int = 64, bands: Int = 0,
-                             threshold: Double = 0.7,
-                             maxBucket: Int = 64,
-                             checkpointDir: Option[String] = None): DataFrame = {
-    val pairs = minhashPairs(df, idCol, textCol, shingleN, k, bands,
-      threshold, maxBucket)
-    val losers = connectedComponents(pairs, checkpointDir = checkpointDir)
+  def dropClusterLosers(df: DataFrame, idCol: String, pairs: DataFrame,
+                        maxIter: Int = 20,
+                        checkpointDir: Option[String] = None): DataFrame = {
+    // both connected-components arms emit one row per id, so the
+    // loser list needs no distinct before the anti-join
+    val losers = connectedComponents(pairs, maxIter, checkpointDir)
       .where(col("id") =!= col("cluster"))
-      .select(col("id").as(idCol)).distinct()
-    df.join(losers, Seq(idCol), "left_anti")
-  }
-
-  /** Diagnostic: what the maxBucket skew cap silently drops — bucket
-    * count, capped-bucket count, and rows over the cap. Surfaces the
-    * recall cost of the cap as a metric instead of a silent truncation.
-    */
-  def minhashBucketDiag(df: DataFrame, idCol: String, textCol: String,
-                        shingleN: Int = 3, k: Int = 64, bands: Int = 0,
-                        threshold: Double = 0.7,
-                        maxBucket: Int = 64): DataFrame = {
-    val nBands = if (bands > 0) bands else bandsForThreshold(k, threshold)
-    bandedBuckets(withSignatures(df, idCol, textCol, shingleN), k, nBands)
-      .groupBy("band", "bucket").agg(count(lit(1)).as("n"))
-      .agg(count(lit(1)).cast("long").as("n_buckets"),
-        sum(when(col("n") > maxBucket, 1L).otherwise(0L)).as("n_capped"),
-        sum(greatest(col("n") - maxBucket, lit(0L))).as("rows_dropped"))
+      .select(col("id").as("__loser"))
+    df.join(losers, df(idCol) === losers("__loser"), "left_anti")
   }
 
   /** Exact n-gram Jaccard for all pairs within a blocking key (small
-    * groups only — the caller picks the key).
+    * groups only — the caller picks the key), with jaccard >=
+    * `threshold`: (id_a, id_b, jaccard), id_a < id_b. The shingled
+    * (blk0, id, sh) projection is written ONCE to `stagePath`, then
+    * blocking and verification read the staged table: the probe sides
+    * and the two verify joins would otherwise each re-scan the corpus
+    * and recompute shingles (~8 corpus reads; at 100 TB one read plus
+    * one bounded write is the only affordable shape).
     */
   def jaccardWithin(df: DataFrame, idCol: String, textCol: String,
-                    blockCol: String, shingleN: Int = 3,
-                    threshold: Double = 0.0,
+                    blockCol: String, stagePath: String,
+                    shingleN: Int = 3, threshold: Double = 0.0,
                     lengthBucket: Boolean = true): DataFrame = {
-    // blocking on (key, log2 length bucket): jaccard >= t implies
-    // |small|/|large| >= t, so with buckets floor(log2 size) a
-    // qualifying pair's bucket gap is < log2(1/t) + 1, i.e. at most
-    // maxGap = ceil(log2(1/t)). Each doc probes its own bucket plus
-    // maxGap buckets UP; the smaller doc of any qualifying pair then
-    // reaches the larger doc's home bucket, so recall is exact at any
-    // t > 0 (round-1 probed only +1, silently dropping pairs at
-    // t < 0.5 — e.g. |A|=16, |B|=64, j=0.053 >= 0.05, buckets 4 vs 6).
-    // t = 0 bounds nothing, so bucketing is disabled there.
-    graft.functions.Shingles.register(df.sparkSession)
-    val blk0 = df.select(col(blockCol).as("blk0"), col(idCol).as("id"),
-      graft.functions.Shingles.shinglesNative(col(textCol), shingleN).as("sh"))
-    jaccardWithinShingled(blk0, threshold, lengthBucket)
-  }
-
-  /** Stage the shingled projection once, then block + verify against
-    * the staged table. The unstaged form's plan branches (two probe
-    * sides + two verify joins) each re-scan the corpus and recompute
-    * shingles — ~8 corpus reads; at 100 TB staging is not optional
-    * (one read + one bounded write, every branch reads the small
-    * staged table).
-    */
-  def jaccardWithinStaged(df: DataFrame, idCol: String, textCol: String,
-                          blockCol: String, stagePath: String,
-                          shingleN: Int = 3, threshold: Double = 0.0,
-                          lengthBucket: Boolean = true): DataFrame = {
     graft.functions.Shingles.register(df.sparkSession)
     df.select(col(blockCol).as("blk0"), col(idCol).as("id"),
         graft.functions.Shingles.shinglesNative(col(textCol), shingleN).as("sh"))
@@ -560,6 +499,16 @@ object Dedup {
   /** The (block, length-bucket) probe expansion jaccardWithinShingled
     * joins on — ONE definition shared with jaccardBlockDiag so the
     * diagnostic always counts exactly the pairs the join materializes.
+    *
+    * Blocking on (key, log2 length bucket): jaccard >= t implies
+    * |small|/|large| >= t, so with buckets floor(log2 size) a
+    * qualifying pair's bucket gap is < log2(1/t) + 1, i.e. at most
+    * maxGap = ceil(log2(1/t)). Each doc probes its own bucket plus
+    * maxGap buckets UP; the smaller doc of any qualifying pair then
+    * reaches the larger doc's home bucket, so recall is exact at any
+    * t > 0 (round-1 probed only +1, silently dropping pairs at
+    * t < 0.5 — e.g. |A|=16, |B|=64, j=0.053 >= 0.05, buckets 4 vs 6).
+    * t = 0 bounds nothing, so bucketing is disabled there.
     */
   private def lengthBucketBlocks(blk0: DataFrame, threshold: Double,
                                  lengthBucket: Boolean): DataFrame =
@@ -589,23 +538,15 @@ object Dedup {
     val cand = a.join(b, Seq("blk")).where(col("id_a") < col("id_b"))
       // a pair sharing two probed buckets would otherwise emit twice
       .dropDuplicates("id_a", "id_b")
-    // blk0 is one row per doc by construction (stageSignatures /
-    // jaccardWithin project the input rows; idCol is the doc key) —
-    // a defensive dropDuplicates(id) here cost a full exchange of the
-    // SHINGLE ARRAYS, the frame's heaviest column, to dedupe an
-    // already-unique table (guide §2.4: a distinct on unique data is
-    // an accidental shuffle). Under a violated-uniqueness input the
-    // verify joins now emit one row per duplicate instead of one per
-    // arbitrary survivor — the honest semantics anyway.
-    val docs = blk0.select(col("id"), col("sh"))
-    graft.functions.JaccardSim.register(blk0.sparkSession)
-    cand
-      .join(docs.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
-      .join(docs.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
-      .withColumn("jaccard",
-        graft.functions.JaccardSim.jaccardSim(col("sh_a"), col("sh_b")))
-      .where(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
+    // blk0 is one row per doc by construction (jaccardWithin projects
+    // the input rows; idCol is the doc key) — a defensive
+    // dropDuplicates(id) here cost a full exchange of the SHINGLE
+    // ARRAYS, the frame's heaviest column, to dedupe an already-unique
+    // table (guide §2.4: a distinct on unique data is an accidental
+    // shuffle). Under a violated-uniqueness input the verify joins
+    // emit one row per duplicate instead of one per arbitrary survivor
+    // — the honest semantics anyway.
+    minhashVerifyShingled(blk0, cand, threshold)
   }
 
   /** Hot-block diagnostic for the exact-jaccard path: per the same
@@ -793,11 +734,8 @@ object Dedup {
     // a reliable checkpointDir (localCheckpoint is executor-loss
     // fragile — see connectedComponents' own contract) and can raise
     // maxIter for long semantic chains
-    val losers = connectedComponents(pairs.select("id_a", "id_b"),
-        ccMaxIter, ccCheckpointDir)
-      .where(col("id") =!= col("cluster"))
-      .select(col("id").as("__loser"))
-    df.join(losers, df(idCol) === losers("__loser"), "left_anti")
+    dropClusterLosers(df, idCol, pairs.select("id_a", "id_b"),
+      ccMaxIter, ccCheckpointDir)
   }
 
   // ------------------------------------------------------------------

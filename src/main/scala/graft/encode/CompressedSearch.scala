@@ -170,6 +170,32 @@ object CompressedSearch {
     def holdsAll(ts: Array[Int]): Zone = Zone(Seq((ts.min, ts.max)))
   }
 
+  /** One block probe shape: the [[Zone]] a block's token range must
+    * meet (pushed to the parquet scan) paired with the `reject` that
+    * drops a block from its (codecId, symtab, bloomEnc) metadata
+    * alone. [[selectBlocks]] applies both before the payload scan, and
+    * the decode walks re-check `reject`, so each shape is written once.
+    */
+  private final case class Probe(zone: Zone,
+      reject: (Int, Array[Byte], Array[Byte]) => Boolean)
+
+  private object Probe {
+    /** Some token of the block lies in [lo, hi]. */
+    def range(lo: Int, hi: Int): Probe = Probe(Zone.intersects(lo, hi),
+      (cid, st, bloom) => dictRejects(cid, st, lo, hi) ||
+        !graft.codec.TokBloom.mayIntersectRange(bloom, lo, hi))
+
+    /** The block may hold every one of `ts`. */
+    def all(ts: Array[Int]): Probe = Probe(Zone.holdsAll(ts),
+      (cid, st, bloom) => dictRejectsAny(cid, st, ts) ||
+        !graft.codec.TokBloom.mayContainAll(bloom, ts))
+
+    /** The block may hold at least one of `ts`. */
+    def any(ts: Array[Int]): Probe = Probe(Zone.holdsAny(ts),
+      (cid, st, bloom) => dictRejectsEvery(cid, st, ts) ||
+        !graft.codec.TokBloom.mayContainAny(bloom, ts))
+  }
+
   /** Total number of tokens with value in [lo, hi] across the store —
     * one row (n_in_range). No row materialization anywhere: zone maps
     * prune blocks at the parquet scan, dict symtabs reject without
@@ -181,9 +207,7 @@ object CompressedSearch {
                   lo: Int, hi: Int): DataFrame = {
     import spark.implicits._
     selectBlocks(spark, outDir, TokenDecoder.liveBlocks(spark, outDir), None,
-        Zone.intersects(lo, hi),
-        (cid, st, bloom) => dictRejects(cid, st, lo, hi) ||
-          !graft.codec.TokBloom.mayIntersectRange(bloom, lo, hi))
+        Probe.range(lo, hi))
       .select("codecId", "postCodec", "symtab", "payload", "totalTokens",
         "bloomEnc")
       .as[(Int, Int, Array[Byte], Array[Byte], Long, Array[Byte])]
@@ -212,9 +236,7 @@ object CompressedSearch {
                      hi: Int = Int.MaxValue): DataFrame = {
     import spark.implicits._
     selectBlocks(spark, outDir, TokenDecoder.liveBlocks(spark, outDir), None,
-        Zone.intersects(lo, hi),
-        (cid, st, bloom) => dictRejects(cid, st, lo, hi) ||
-          !graft.codec.TokBloom.mayIntersectRange(bloom, lo, hi))
+        Probe.range(lo, hi))
       .select("codecId", "postCodec", "symtab", "payload", "totalTokens")
       .as[(Int, Int, Array[Byte], Array[Byte], Long)]
       .flatMap { case (cid, post, st, pay, nTokL) =>
@@ -687,7 +709,7 @@ object CompressedSearch {
   def readDocs(spark: SparkSession, outDir: String,
                lo: Int, hi: Int): org.apache.spark.sql.Dataset[graft.model.TokenRow] = {
     import spark.implicits._
-    scanRows(spark, outDir, None, lo, hi) { (docId, source, tokens, off, n) =>
+    scanRows(spark, outDir, None, Probe.range(lo, hi)) { (docId, source, tokens, off, n) =>
       var hit = false
       var k = off
       while (!hit && k < off + n) {
@@ -753,7 +775,7 @@ object CompressedSearch {
                        phrase: Array[Int]): DataFrame = {
     import spark.implicits._
     require(phrase.nonEmpty, "phraseSearchDocs: empty phrase")
-    scanRowsMulti(spark, outDir, phrase) { (docId, source, tokens, off, n) =>
+    scanRows(spark, outDir, None, Probe.all(phrase)) { (docId, source, tokens, off, n) =>
       var c = 0L
       var i = off
       val last = off + n - phrase.length
@@ -789,7 +811,7 @@ object CompressedSearch {
     // without this the countDistinct gate below could never reach
     // ts.length and every doc would silently drop
     val ts = ts0.distinct
-    scanRowsMulti(spark, outDir, ts) { (docId, source, tokens, off, n) =>
+    scanRows(spark, outDir, None, Probe.all(ts)) { (docId, source, tokens, off, n) =>
       val counts = new Array[Long](ts.length)
       var i = off
       while (i < off + n) {
@@ -923,7 +945,7 @@ object CompressedSearch {
     require(a != b,
       "proximitySearchDocs: tokens must differ (for self-proximity use " +
         "the repetition operators)")
-    scanRowsMulti(spark, outDir, Array(a, b)) { (docId, source, tokens, off, n) =>
+    scanRows(spark, outDir, None, Probe.all(Array(a, b))) { (docId, source, tokens, off, n) =>
       // collect positions (0-based within the doc) of each target
       var nA = 0; var nB = 0
       var i = off
@@ -1121,61 +1143,22 @@ object CompressedSearch {
       ts: Array[Int]): Dataset[(Int, Int, Array[Byte], Array[Byte],
       Array[Byte], Array[Byte], Array[Byte], Int, Long)] = {
     import spark.implicits._
-    selectBlocks(spark, outDir, live, None, Zone.holdsAny(ts),
-        (cid, st, bloom) => dictRejectsEvery(cid, st, ts) ||
-          !graft.codec.TokBloom.mayContainAny(bloom, ts))
+    val probe = Probe.any(ts)
+    val reject = probe.reject
+    selectBlocks(spark, outDir, live, None, probe)
       .select("codecId", "postCodec", "symtab", "payload", "lengthsEnc",
         "docIdsEnc", "sourcesEnc", "blockRows", "totalTokens", "bloomEnc")
       .as[(Int, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte],
         Array[Byte], Int, Long, Array[Byte])]
-      .filter(r => !dictRejectsEvery(r._1, r._3, ts) &&
-        graft.codec.TokBloom.mayContainAny(r._10, ts))
+      .filter(r => !reject(r._1, r._3, r._10))
       .map(r => (r._1, r._2, r._3, r._4, r._5, r._6, r._7, r._8, r._9))
-  }
-
-  /** Multi-token sibling of [[scanRows]]: zone CONTAINMENT of every
-    * query token + all-present symtab rejection, then the same
-    * decode-once row walk. Kept separate so the single-range path
-    * never pays the per-token loops.
-    */
-  private def scanRowsMulti[T](spark: SparkSession, outDir: String,
-                               ts: Array[Int])(
-      row: (String, String, Array[Int], Int, Int) => Iterator[T])(
-      implicit enc: org.apache.spark.sql.Encoder[T]): Dataset[T] = {
-    import spark.implicits._
-    selectBlocks(spark, outDir, TokenDecoder.liveBlocks(spark, outDir), None,
-        Zone.holdsAll(ts),
-        (cid, st, bloom) => dictRejectsAny(cid, st, ts) ||
-          !graft.codec.TokBloom.mayContainAll(bloom, ts))
-      .select("codecId", "postCodec", "symtab", "payload", "lengthsEnc",
-        "docIdsEnc", "sourcesEnc", "blockRows", "totalTokens", "bloomEnc")
-      .as[(Int, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte],
-        Array[Byte], Int, Long, Array[Byte])]
-      .flatMap { case (cid, post, st, pay, lensEnc, dEnc, sEnc, nRows, nTok,
-                       bloom) =>
-        if (dictRejectsAny(cid, st, ts) ||
-          !graft.codec.TokBloom.mayContainAll(bloom, ts)) Iterator.empty
-        else {
-          val tokens = BlockCodec.decode(cid, post, st, pay, nTok.toInt)
-          val docIds = graft.codec.StringCols.decodeDocIds(dEnc, nRows)
-          val sources = graft.codec.StringCols.decodeSources(sEnc, nRows)
-          val lens = new ByteReader(lensEnc)
-          var off = 0
-          (0 until nRows).iterator.flatMap { i =>
-            val n = lens.readVarInt()
-            val out = row(docIds(i), sources(i), tokens, off, n)
-            off += n
-            out
-          }
-        }
-      }
   }
 
   private def searchBlocks(spark: SparkSession, outDir: String,
                            partIds: Option[Set[Int]],
                            lo: Int, hi: Int): DataFrame = {
     import spark.implicits._
-    scanRows(spark, outDir, partIds, lo, hi) { (docId, source, tokens, off, n) =>
+    scanRows(spark, outDir, partIds, Probe.range(lo, hi)) { (docId, source, tokens, off, n) =>
       var c = 0L
       var k = off
       while (k < off + n) {
@@ -1233,9 +1216,11 @@ object CompressedSearch {
     * list, so that arm scans nothing.
     */
   private def selectBlocks(spark: SparkSession, outDir: String,
-      live: TokenDecoder.LiveBlocks, partIds: Option[Set[Int]], zone: Zone,
-      reject: (Int, Array[Byte], Array[Byte]) => Boolean): DataFrame = {
+      live: TokenDecoder.LiveBlocks, partIds: Option[Set[Int]],
+      probe: Probe): DataFrame = {
     import spark.implicits._
+    val zone = probe.zone
+    val reject = probe.reject
     val survivors = live match {
       case TokenDecoder.LiveRows(rows) =>
         Some(rows.collect {
@@ -1266,30 +1251,29 @@ object CompressedSearch {
   }
 
   /** The ONE zone-pruned, dict-rejected block walk behind every
-    * per-row consumer: hit blocks decode once, then each row is handed
-    * to `row` as (docId, source, blockTokens, off, n) — its tokens are
-    * blockTokens[off until off+n]. Keeping the 9-column select and the
-    * tuple decode in a single place means an EncodedBlock schema
-    * change cannot silently diverge the search and selective-decode
-    * paths.
+    * per-row consumer (range search and selective decode; phrase,
+    * conjunctive and proximity search): blocks `probe` keeps decode
+    * once, then each row is handed to `row` as (docId, source,
+    * blockTokens, off, n) — its tokens are blockTokens[off until
+    * off+n]. Keeping the 9-column select and the tuple decode in a
+    * single place means an EncodedBlock schema change cannot silently
+    * diverge the search and selective-decode paths.
     */
   private def scanRows[T](spark: SparkSession, outDir: String,
-                          partIds: Option[Set[Int]], lo: Int, hi: Int)(
+                          partIds: Option[Set[Int]], probe: Probe)(
       row: (String, String, Array[Int], Int, Int) => Iterator[T])(
       implicit enc: org.apache.spark.sql.Encoder[T]): org.apache.spark.sql.Dataset[T] = {
     import spark.implicits._
+    val reject = probe.reject
     selectBlocks(spark, outDir, TokenDecoder.liveBlocks(spark, outDir), partIds,
-        Zone.intersects(lo, hi),
-        (cid, st, bloom) => dictRejects(cid, st, lo, hi) ||
-          !graft.codec.TokBloom.mayIntersectRange(bloom, lo, hi))
+        probe)
       .select("codecId", "postCodec", "symtab", "payload", "lengthsEnc",
         "docIdsEnc", "sourcesEnc", "blockRows", "totalTokens", "bloomEnc")
       .as[(Int, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte],
         Array[Byte], Int, Long, Array[Byte])]
       .flatMap { case (cid, post, st, pay, lensEnc, dEnc, sEnc, nRows, nTok,
                        bloom) =>
-        if (dictRejects(cid, st, lo, hi) ||
-          !graft.codec.TokBloom.mayIntersectRange(bloom, lo, hi)) Iterator.empty
+        if (reject(cid, st, bloom)) Iterator.empty
         else {
           val tokens = BlockCodec.decode(cid, post, st, pay, nTok.toInt)
           val docIds = graft.codec.StringCols.decodeDocIds(dEnc, nRows)

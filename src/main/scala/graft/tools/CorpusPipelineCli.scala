@@ -81,10 +81,8 @@ object CorpusPipelineCli {
     val nearPairs = graft.dedup.Dedup.minhashPairs(exactDeduped,
       "doc_id", "text", shingleN = 2, k = 64, bands = 0, threshold = 0.6,
       capObs = Some(capObs))
-    val losers = graft.dedup.Dedup.connectedComponents(nearPairs)
-      .where(col("id") =!= col("cluster"))
-      .select(col("id").as("doc_id")).distinct()
-    val nearDeduped = exactDeduped.join(losers, Seq("doc_id"), "left_anti")
+    val nearDeduped = graft.dedup.Dedup.dropClusterLosers(exactDeduped,
+      "doc_id", nearPairs)
     println(s"STAGE near_dedup        rows=${nearDeduped.count()} " +
       s"cap_dropped=${capObs.get("rows_dropped")}")
 

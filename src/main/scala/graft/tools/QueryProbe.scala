@@ -29,16 +29,25 @@ object QueryProbe {
     val sfDir = args(1)
     // building a query in oracle mode already writes its side-channel
     // dumps (they are eager; bench mode dumps nothing), and both modes
-    // write signature/shingle stages there, so keep them away from
-    // Verify's oracle side files
-    sys.props("graft.side.dir") =
-      java.nio.file.Files.createTempDirectory("graft-qprobe-side").toString
+    // write signature/shingle stages and the encoded stores there, so
+    // keep them away from Verify's oracle side files; the dir goes
+    // when the probe ends
+    val side = java.nio.file.Files.createTempDirectory("graft-qprobe-side").toFile
+    sys.props("graft.side.dir") = side.toString
     val spark = Sessions.create("graft-qprobe", defaultCpus = "32",
       shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    try probe(spark, mode, sfDir, args.drop(2).headOption)
+    finally {
+      spark.stop()
+      graft.encode.TokenEncoder.rmTree(side)
+    }
+  }
+
+  private def probe(spark: org.apache.spark.sql.SparkSession, mode: String,
+                    sfDir: String, only: Option[String]): Unit = {
     val qmap = if (sys.env.get("SPARK_GRAFT_BENCH_MODE").contains("1"))
       graft.SparkEntry.benchQueries else graft.SparkEntry.queries
-    val names = if (args.length > 2) args(2).split(",").toSeq
-      else qmap.keys.toSeq.sorted
+    val names = only.fold(qmap.keys.toSeq.sorted)(_.split(",").toSeq)
     val unknown = names.filterNot(qmap.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
     names.foreach { n =>
@@ -67,6 +76,5 @@ object QueryProbe {
           } catch { case e: Throwable => print(s"(failed: ${e.getMessage})\n") }
       }
     }
-    spark.stop()
   }
 }

@@ -79,7 +79,7 @@ class BpeSpec extends SparkSpecBase {
     val m = Bpe.trainOn(docs, "text", maxWords = 100, numMerges = 30)
     val tt = Bpe.tokenTable(docs, "doc_id", "text", "source", m)
       .as[graft.model.TokenRow]
-    val out = java.nio.file.Files.createTempDirectory("bpe-enc").toString
+    val out = tmpDir("bpe-enc")
     graft.encode.TokenEncoder.run(tt, out)
     val back = graft.encode.TokenDecoder.read(s, out)
       .collect().map(r => r.doc_id -> r.tokens.toSeq).toMap

@@ -93,4 +93,39 @@ class ConnectedComponentsSpec extends SparkSpecBase {
     // the reliable path actually wrote checkpoint files
     assert(new java.io.File(dir).listFiles().nonEmpty)
   }
+
+  test("connectedComponents resolves chains and separate components") {
+    import spark.implicits._
+    // two components: a chain 1-2-3-4 and a pair 10-11; 99 is isolated
+    // (absent from pairs, so absent from output)
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L))
+      .toDF("id_a", "id_b")
+    val cc = Dedup.connectedComponents(pairs).orderBy("id").collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+    assert(cc.toSeq == Seq(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
+      10L -> 10L, 11L -> 10L))
+  }
+
+  test("connectedComponents converges on a component needing exactly maxIter sweeps") {
+    import spark.implicits._
+    // path 1-2-3-4: the min label needs 3 propagation sweeps to reach
+    // node 4, and convergence is only observable as a 4th unchanged
+    // sweep — maxIter=3 must still succeed (regression: the loop used
+    // to count the confirming sweep against the budget and refuse)
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("id_a", "id_b")
+    val cc = Dedup.connectedComponents(pairs, maxIter = 3).orderBy("id")
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(cc.toSeq == Seq(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L))
+    // a genuinely over-budget diameter still refuses — with the r7
+    // pointer-jumping hop reach roughly doubles per sweep, so the
+    // refusal chain must be long enough that 3 sweeps (maxIter=2 + the
+    // confirming one) cannot cover it
+    // smallGraphCap = 0 pins the ITERATIVE arm: the exact small-graph
+    // solve has no convergence budget to refuse on
+    val longChain = (1L until 64L).map(i => (i, i + 1L)).toDF("id_a", "id_b")
+    intercept[IllegalArgumentException] {
+      Dedup.connectedComponents(longChain, maxIter = 2,
+        smallGraphCap = 0).collect()
+    }
+  }
 }

@@ -145,7 +145,7 @@ class OpsSpec extends SparkSpecBase {
     val b = wordsB.mkString(" ")
     val df = Seq((1L, a, "g"), (2L, b, "g")).toDF("doc_id", "text", "grp")
     val out = Dedup.jaccardWithin(df, "doc_id", "text", "grp",
-      shingleN = 2, threshold = 0.5).collect()
+      tmpDir("jac-stage") + "/sh", shingleN = 2, threshold = 0.5).collect()
     assert(out.length == 1, out.mkString(","))
     assert(math.abs(out(0).getDouble(2) - 40.0 / 70.0) < 1e-3)
   }

@@ -89,11 +89,8 @@ class QueryMapSpec extends SparkSpecBase {
   test("bench forms write no oracle dump") {
     // side dumps are eager (written when the query is built), so
     // building every bench form is enough to catch one. Staging may
-    // write here: the signature/shingle stages and the encoded store's
-    // token table, which both modes share
-    val tmp = new File(System.getProperty("java.io.tmpdir"))
-    def stores = tmp.list().filter(_.startsWith("graft-qencstore-")).toSet
-    val storesBefore = stores
+    // write here: the signature/shingle stages, the encoded stores and
+    // the store's token table, which both modes share
     val fresh = tmpDir("graft-bench-forms-side")
     val prev = sys.props("graft.side.dir")
     sys.props("graft.side.dir") = fresh
@@ -104,11 +101,22 @@ class QueryMapSpec extends SparkSpecBase {
     finally sys.props("graft.side.dir") = prev
     val written = new File(fresh).list().toSeq.sorted
     val dumps = written.filterNot(n => n.contains("_stage") ||
-      n == "encsearch_tokens")
+      n.startsWith("graft-qencstore-") || n == "encsearch_tokens")
     assert(dumps.isEmpty, s"bench forms dumped: ${dumps.mkString(", ")}")
-    // the fresh side dir keyed a fresh set of staged stores
-    (stores -- storesBefore).foreach(n =>
-      graft.encode.TokenEncoder.rmTree(new File(tmp, n)))
-    graft.encode.TokenEncoder.rmTree(new File(fresh))
+  }
+
+  test("encoded-store queries stage their store under the side dir") {
+    // a fresh side dir keys a fresh store; it must land there, never
+    // directly under java.io.tmpdir, where nothing would remove it
+    val tmp = new File(System.getProperty("java.io.tmpdir"))
+    def stores = tmp.list().filter(_.startsWith("graft-qencstore-z2-")).toSet
+    val before = stores
+    val fresh = tmpDir("graft-encstore-side")
+    val prev = sys.props("graft.side.dir")
+    sys.props("graft.side.dir") = fresh
+    try assert(SparkEntry.benchQueries("q_encoded_count")(spark, dir).count() == 1)
+    finally sys.props("graft.side.dir") = prev
+    assert((stores -- before).isEmpty, stores -- before)
+    assert(new File(fresh).list().exists(_.startsWith("graft-qencstore-z2-")))
   }
 }

@@ -1,207 +1,14 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.dedup.Dedup
 import graft.operators.{Analyzer, UndatumOps}
 import graft.sim.Similarity
 
-/** Round-2 regression tests: the jaccard length-bucket recall fix,
-  * threshold-derived minhash banding (with a recall property test),
-  * batch sessionization, date-format scoring, scheme docs, and the
-  * pre-normalized cosine pair join.
+/** Round-2 regression tests: batch sessionization, date-format
+  * scoring, scheme docs, and the pre-normalized cosine pair join (the
+  * round's dedup tests live in DedupSpec).
   */
 class Round2Spec extends SparkSpecBase {
-
-  private def words(n: Int, offset: Int = 0): String =
-    (offset until offset + n).map(i => f"t$i%04d").mkString(" ")
-
-  test("native shingle kernel equals the declarative formulation bit-for-bit") {
-    val s = spark
-    import s.implicits._
-    graft.functions.Shingles.register(spark)
-    val rng = new scala.util.Random(13)
-    val alphabet = "abc XYZ   0189 \t\n кирилл ürsچ .,;!? \r "
-    val docs = (0 until 200).map { i =>
-      val len = rng.nextInt(120)
-      (i.toLong, (0 until len).map(_ => alphabet(rng.nextInt(alphabet.length))).mkString)
-    } ++ Seq((200L, ""), (201L, "one"), (202L, "  two words  "),
-      (203L, "ПРИВЕТ Мир ПРИВЕТ мир"), (204L, "a b a b a b"))
-    val df = docs.toDF("id", "text")
-    for (n <- Seq(1, 2, 3)) {
-      val native = df.select(col("id"),
-        graft.functions.Shingles.shinglesNative(col("text"), n).as("sh"))
-      val decl = df.select(col("id"), Dedup.shingles(col("text"), n).as("sh"))
-      val diff = native.exceptAll(decl).count() + decl.exceptAll(native).count()
-      assert(diff == 0, s"n=$n differs")
-    }
-  }
-
-  test("jaccardWithin at t<0.5 keeps pairs spanning distant length buckets") {
-    val s = spark
-    import s.implicits._
-    // |A| = 16 bigram shingles, |B| = 320, intersection 16 =>
-    // j = 16/320 = 0.05 >= t; buckets floor(log2)=4 vs 8 (gap 4) —
-    // exactly the pair round 1's +1 probing dropped
-    val a = words(17)
-    val b = words(321)
-    val df = Seq((1L, a, "blk"), (2L, b, "blk")).toDF("id", "text", "src")
-    val bucketed = Dedup.jaccardWithin(df, "id", "text", "src",
-      shingleN = 2, threshold = 0.05, lengthBucket = true)
-    val exact = Dedup.jaccardWithin(df, "id", "text", "src",
-      shingleN = 2, threshold = 0.05, lengthBucket = false)
-    val got = bucketed.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    assert(got.toSeq == exact.collect().map(r =>
-      (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq)
-    assert(got.toSeq == Seq((1L, 2L, 0.05)))
-  }
-
-  test("jaccardWithin bucketed equals exact on a mixed-size corpus (t=0.05)") {
-    val s = spark
-    import s.implicits._
-    val rng = new scala.util.Random(11)
-    // overlapping docs of wildly different lengths within one block
-    val docs = (0 until 40).map { i =>
-      val len = 5 + rng.nextInt(200)
-      val off = rng.nextInt(30) // shared vocabulary => nonzero overlaps
-      (i.toLong, words(len, off), s"b${i % 2}")
-    }
-    val df = docs.toDF("id", "text", "src")
-    def canon(d: org.apache.spark.sql.DataFrame) =
-      d.orderBy("id_a", "id_b").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    val bucketed = canon(Dedup.jaccardWithin(df, "id", "text", "src",
-      shingleN = 2, threshold = 0.05, lengthBucket = true))
-    val exact = canon(Dedup.jaccardWithin(df, "id", "text", "src",
-      shingleN = 2, threshold = 0.05, lengthBucket = false))
-    assert(bucketed == exact && exact.nonEmpty)
-  }
-
-  test("jaccardWithinStaged equals the unstaged form (one corpus read)") {
-    val s = spark
-    import s.implicits._
-    val rng = new scala.util.Random(17)
-    val docs = (0 until 30).map { i =>
-      (i.toLong, words(5 + rng.nextInt(80), rng.nextInt(20)), s"b${i % 2}")
-    }
-    val df = docs.toDF("id", "text", "src")
-    def canon(d: org.apache.spark.sql.DataFrame) =
-      d.orderBy("id_a", "id_b").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    val stage = tmpDir("jac-stage") + "/sh"
-    val staged = canon(Dedup.jaccardWithinStaged(df, "id", "text", "src",
-      stage, shingleN = 2, threshold = 0.05))
-    val direct = canon(Dedup.jaccardWithin(df, "id", "text", "src",
-      shingleN = 2, threshold = 0.05))
-    assert(staged == direct && direct.nonEmpty)
-    // and the staged plan reads the staged table, not the corpus
-    val plan = Dedup.jaccardWithinShingled(
-      spark.read.parquet(stage), 0.05, lengthBucket = true)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("shingleexpr"), plan.take(600))
-  }
-
-  test("bandsForThreshold picks the most selective >=95%-recall banding") {
-    // t=0.3, k=64: r=2 gives recall 1-(1-0.09)^32 ~ 0.951; r=4 ~ 0.12
-    assert(Dedup.bandsForThreshold(64, 0.3) == 32)
-    // t=0.7: r=4 -> 1-(1-0.24)^16 ~ 0.988; r=8 -> ~0.38
-    assert(Dedup.bandsForThreshold(64, 0.7) == 16)
-    // very low thresholds degrade to 1-row bands
-    assert(Dedup.bandsForThreshold(64, 0.05) == 64)
-  }
-
-  test("minhash recall property: >=95% of true j>=t+0.1 pairs found (seeded)") {
-    val s = spark
-    import s.implicits._
-    val rng = new scala.util.Random(7)
-    // 30 planted near-dup pairs: ~55% of words shared within a pair,
-    // every pair drawn from a disjoint vocabulary region (no
-    // cross-pair similarity)
-    val docs = (0 until 30).flatMap { p =>
-      val base = (0 until 40).map(_ => f"v${p}_${rng.nextInt(60)}%03d")
-      val variant = base.map(w =>
-        if (rng.nextDouble() < 0.25) f"v${p}_x${rng.nextInt(999)}%03d" else w)
-      Seq((p * 2L, base.mkString(" ")), (p * 2L + 1, variant.mkString(" ")))
-    }
-    val df = docs.toDF("id", "text")
-    // ground truth: exact jaccard on every planted pair
-    val truth = Dedup.jaccardWithin(
-      df.withColumn("blk", col("id") / 2 cast "int"),
-      "id", "text", "blk", shingleN = 2, threshold = 0.4,
-      lengthBucket = false).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assume(truth.size >= 10, s"need enough strong pairs, got ${truth.size}")
-    val found = Dedup.minhashPairs(df, "id", "text",
-      shingleN = 2, k = 64, bands = 0, threshold = 0.3)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val recall = truth.count(found.contains).toDouble / truth.size
-    assert(recall >= 0.95, s"recall $recall over ${truth.size} true pairs")
-  }
-
-  test("staged minhash step chain equals the unstaged pipeline") {
-    val s = spark
-    import s.implicits._
-    val rng = new scala.util.Random(23)
-    val docs = (0 until 20).flatMap { p =>
-      val base = (0 until 30).map(_ => f"w${p}_${rng.nextInt(40)}%02d")
-      val variant = base.map(w =>
-        if (rng.nextDouble() < 0.2) f"w${p}_x${rng.nextInt(99)}%02d" else w)
-      Seq((p * 2L, base.mkString(" ")), (p * 2L + 1, variant.mkString(" ")))
-    }
-    val df = docs.toDF("id", "text")
-    def canon(d: org.apache.spark.sql.DataFrame) =
-      d.orderBy("id_a", "id_b").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    // q_minhash_pairs' chain: stage once, band off the stage, verify
-    // off the stage
-    val sig = Dedup.stageSignatures(df, "id", "text", 2,
-      tmpDir("mh-stage") + "/sig")
-    val staged = canon(Dedup.minhashVerifyShingled(sig,
-      Dedup.minhashCandidatesSigned(sig, threshold = 0.3), threshold = 0.3))
-    val direct = canon(Dedup.minhashPairs(df, "id", "text",
-      shingleN = 2, threshold = 0.3))
-    assert(staged == direct && direct.nonEmpty)
-  }
-
-  test("minhashPairs shingles each page once per scan") {
-    val s = spark
-    import s.implicits._
-    val rng = new scala.util.Random(29)
-    val docs = (0 until 40).map { i =>
-      val text =
-        if (i == 0) null
-        else if (i == 1) ""
-        else if (i == 2) "single"
-        else (0 until 20).map(_ => f"w${i / 2}_${rng.nextInt(30)}%02d").mkString(" ")
-      (i.toLong, text)
-    }
-    val path = tmpDir("mh-pages") + "/pages"
-    docs.toDF("id", "text").write.parquet(path)
-    val pages = spark.read.parquet(path)
-    // Catalyst would push `size(sh) > 0` below the projection and
-    // inline `sh`: two shingle calls per scan
-    val plan = Dedup.minhashPairs(pages, "id", "text", shingleN = 2, threshold = 0.3)
-      .queryExecution.executedPlan.toString
-    val scans = "FileScan parquet".r.findAllIn(plan).size
-    val calls = "shingleexpr\\(".r.findAllIn(plan).size
-    assert(scans >= 3 && calls == scans, s"$calls shingle calls over $scans scans:\n$plan")
-    // the same rows survive: exactly the pages with at least one shingle
-    val want = pages.where(size(graft.functions.Shingles.shinglesNative(col("text"), 2)) > 0)
-      .select("id").as[Long].collect().toSet
-    val got = Dedup.stageSignatures(pages, "id", "text", 2, tmpDir("mh-once") + "/sig")
-      .select("id").as[Long].collect().toSet
-    assert(got == want && !got.contains(0L) && !got.contains(1L))
-  }
-
-  test("minhashBucketDiag surfaces what the skew cap drops") {
-    val s = spark
-    import s.implicits._
-    // 120 identical docs flood every band bucket; cap at 16
-    val df = (0 until 120).map(i => (i.toLong, words(30))).toDF("id", "text")
-    val d = Dedup.minhashBucketDiag(df, "id", "text", shingleN = 2,
-      threshold = 0.3, maxBucket = 16).collect()(0)
-    assert(d.getAs[Long]("n_capped") >= 1L)
-    assert(d.getAs[Long]("rows_dropped") >= (120 - 16).toLong)
-  }
 
   test("sessionizeBatch: gap splits, session stats, all sessions emitted") {
     val s = spark
@@ -346,19 +153,6 @@ class Round2Spec extends SparkSpecBase {
     val q = df.select(Similarity.quantizeInt8(col("v")).as("q")).schema("q")
     assert(q.dataType.asInstanceOf[org.apache.spark.sql.types.StructType]
       .apply("codes").dataType.toString.contains("ByteType"))
-  }
-
-  test("removeNearDuplicates keeps one representative per near-dup group") {
-    val s = spark
-    import s.implicits._
-    val base = (0 until 40).map(i => f"tok$i%03d").mkString(" ")
-    val near = base.replace("tok001", "changed")
-    val df = Seq((1L, base), (2L, near), (3L, words(40, 500)))
-      .toDF("id", "text")
-    val kept = Dedup.removeNearDuplicates(df, "id", "text",
-        shingleN = 2, threshold = 0.5)
-      .select("id").as[Long].collect().toSet
-    assert(kept == Set(1L, 3L)) // 2 lost to 1; 3 unrelated survives
   }
 
   test("renderReport emits text and json forms of the field profile") {

@@ -1,13 +1,12 @@
 package graft
 
-import org.apache.spark.sql.Observation
 import org.apache.spark.sql.functions._
-import graft.dedup.Dedup
 import graft.operators.UndatumOps
 import graft.sim.Similarity
 
-/** Round-3 behaviors: the exact-cosine hot-block guard and the
-  * in-query skew-cap drop metrics.
+/** Round-3 behaviors: the exact-cosine hot-block guard, kernels,
+  * bucketed operators and file analysis (the round's dedup tests live
+  * in DedupSpec and ConnectedComponentsSpec).
   */
 class Round3Spec extends SparkSpecBase {
 
@@ -121,33 +120,6 @@ class Round3Spec extends SparkSpecBase {
     assert(auto.toSeq == exact.toSeq)
   }
 
-  test("minhash cap drops are reported from the query itself") {
-    import spark.implicits._
-    // 100 IDENTICAL docs flood every (band, bucket) past maxBucket=16;
-    // plus distinct docs that stay under the cap
-    val flood = (0L until 100L).map(i => (i, "common prefix words repeated " * 5))
-    val distinct = (100L until 110L).map(i => (i, s"unique document $i with words ${i * 7}"))
-    val docs = (flood ++ distinct).toDF("doc_id", "text")
-    val obs = Observation("minhash_cap")
-    val pairs = Dedup.minhashPairs(docs, "doc_id", "text", shingleN = 2,
-      threshold = 0.3, maxBucket = 16, capObs = Some(obs))
-    pairs.count() // any action over the plan materializes the metrics
-    val m = obs.get
-    assert(m("rows_dropped").asInstanceOf[Long] > 0L)
-    assert(m("max_bucket_rows").asInstanceOf[Long] >= 100L)
-  }
-
-  test("minhash cap reports zero drops on an uncapped corpus") {
-    import spark.implicits._
-    val docs = (0L until 20L)
-      .map(i => (i, s"every doc here is fully distinct $i ${i * 13} ${i * 31}"))
-      .toDF("doc_id", "text")
-    val obs = Observation("minhash_cap_zero")
-    Dedup.minhashPairs(docs, "doc_id", "text", shingleN = 2,
-      threshold = 0.3, maxBucket = 64, capObs = Some(obs)).count()
-    assert(obs.get("rows_dropped").asInstanceOf[Long] == 0L)
-  }
-
   test("analyzeFile composes container + sniff + read + profile") {
     import spark.implicits._
     val dir = tmpDir("graft-analyze")
@@ -249,18 +221,6 @@ class Round3Spec extends SparkSpecBase {
     assert(stats.forall(r => r.getLong(1) > 0))
     val slivers = blocks.where(col("blockRows") < 10).count()
     assert(slivers <= stats.length) // at most one tail sliver per partId
-  }
-
-  test("connectedComponents resolves chains and separate components") {
-    import spark.implicits._
-    // two components: a chain 1-2-3-4 and a pair 10-11; 99 is isolated
-    // (absent from pairs, so absent from output)
-    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L))
-      .toDF("id_a", "id_b")
-    val cc = Dedup.connectedComponents(pairs).orderBy("id").collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    assert(cc.toSeq == Seq(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
-      10L -> 10L, 11L -> 10L))
   }
 
   test("packSequencesBucketed computes exactly the same spans as packSequences") {
@@ -421,64 +381,6 @@ class Round3Spec extends SparkSpecBase {
     assert(out.contains("\"bad\\ncol\""), out)
   }
 
-  test("connectedComponents converges on a component needing exactly maxIter sweeps") {
-    import spark.implicits._
-    // path 1-2-3-4: the min label needs 3 propagation sweeps to reach
-    // node 4, and convergence is only observable as a 4th unchanged
-    // sweep — maxIter=3 must still succeed (regression: the loop used
-    // to count the confirming sweep against the budget and refuse)
-    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("id_a", "id_b")
-    val cc = Dedup.connectedComponents(pairs, maxIter = 3).orderBy("id")
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(cc.toSeq == Seq(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L))
-    // a genuinely over-budget diameter still refuses — with the r7
-    // pointer-jumping hop reach roughly doubles per sweep, so the
-    // refusal chain must be long enough that 3 sweeps (maxIter=2 + the
-    // confirming one) cannot cover it
-    // smallGraphCap = 0 pins the ITERATIVE arm: the exact small-graph
-    // solve has no convergence budget to refuse on
-    val longChain = (1L until 64L).map(i => (i, i + 1L)).toDF("id_a", "id_b")
-    intercept[IllegalArgumentException] {
-      Dedup.connectedComponents(longChain, maxIter = 2,
-        smallGraphCap = 0).collect()
-    }
-  }
-
-  test("removeNearDuplicatesCC keeps exactly one survivor per cluster") {
-    import spark.implicits._
-    // three near-identical docs forming a transitive cluster + one
-    // distinct doc; CC keeps the min id of the cluster and the loner
-    val docs = Seq(
-      (1L, "the quick brown fox jumps over the lazy dog tonight"),
-      (2L, "the quick brown fox jumps over the lazy dog today"),
-      (3L, "the quick brown fox jumps over the lazy dog"),
-      (9L, "completely different content about columnar token encoding"))
-      .toDF("doc_id", "text")
-    val kept = Dedup.removeNearDuplicatesCC(docs, "doc_id", "text",
-      shingleN = 2, threshold = 0.5)
-      .select("doc_id").orderBy("doc_id").as[Long].collect()
-    assert(kept.toSeq == Seq(1L, 9L))
-  }
-
-  test("jaccardBlockDiag counts the exact candidate pairs a join makes") {
-    import spark.implicits._
-    graft.functions.Shingles.register(spark)
-    val docs = (0L until 12L)
-      .map(i => ("blkA", i, s"shared words plus token$i more shared filler"))
-      .toDF("blk0", "id", "text")
-      .select(col("blk0"), col("id"),
-        graft.functions.Shingles.shinglesNative(col("text"), 2).as("sh"))
-    val diag = Dedup.jaccardBlockDiag(docs, threshold = 0.05).collect()(0)
-    assert(diag.getLong(0) >= 1L)           // blocks
-    assert(diag.getLong(1) <= 12L)          // hottest block
-    assert(diag.getLong(2) >= 1L)           // candidate pairs
-    // with bucketing off, one block of 12 -> exactly 66 pairs
-    val flat = Dedup.jaccardBlockDiag(docs, threshold = 0.05,
-      lengthBucket = false).collect()(0)
-    assert(flat.getLong(0) == 1L && flat.getLong(1) == 12L
-      && flat.getLong(2) == 66L)
-  }
-
   test("rangeJoin: inclusive bounds, bucket straddle, key isolation") {
     import spark.implicits._
     import graft.operators.RangeJoin
@@ -628,18 +530,6 @@ class Round3Spec extends SparkSpecBase {
     assert(stats.getLong(3) == 1L) // one straddler
   }
 
-  test("simhash cap drops are reported from the query itself") {
-    import spark.implicits._
-    val flood = (0L until 50L).map(i => (i, "same text every time " * 8))
-    val docs = flood.toDF("doc_id", "text")
-    val obs = Observation("simhash_cap")
-    Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 3,
-      maxBucket = 8, capObs = Some(obs)).count()
-    val m = obs.get
-    assert(m("rows_dropped").asInstanceOf[Long] > 0L)
-    assert(m("max_bucket_rows").asInstanceOf[Long] == 50L)
-  }
-
   test("repetitionBp: repeated bigrams score, short/empty docs score 0") {
     import spark.implicits._
     graft.functions.Shingles.register(spark)
@@ -654,25 +544,6 @@ class Round3Spec extends SparkSpecBase {
         graft.text.TextOps.repetitionBp(col("text"), 2).as("rep_bp"))
       .orderBy("doc_id").as[(Long, Long)].collect().toSeq
     assert(got == Seq((1L, 6000L), (2L, 0L), (3L, 0L), (4L, 0L), (5L, 7500L)))
-  }
-
-  test("decontaminate counts benchmark n-gram overlap; removal drops flagged docs") {
-    import spark.implicits._
-    val bench = Seq((100L, "the quick brown fox")).toDF("doc_id", "text")
-    val docs = Seq(
-      (1L, "the quick brown fox jumps"), // 4 bigrams, 3 hit -> 7500
-      (2L, "quick brown cow"),           // 2 bigrams, 1 hit -> 5000
-      (3L, "nothing shared at all"),     // 0 hits
-      (4L, "one")                        // no bigrams -> 0/0 -> 0
-    ).toDF("doc_id", "text")
-    val scored = Dedup.decontaminate(docs, bench, "doc_id", "text", 2)
-      .orderBy("id").as[(Long, Long, Long, Long)].collect().toSeq
-    assert(scored == Seq(
-      (1L, 4L, 3L, 7500L), (2L, 2L, 1L, 5000L),
-      (3L, 3L, 0L, 0L), (4L, 0L, 0L, 0L)))
-    val kept = Dedup.removeContaminated(docs, bench, "doc_id", "text",
-      thresholdBp = 5000L, n = 2)
-    assert(kept.select("doc_id").as[Long].collect().sorted.toSeq == Seq(3L, 4L))
   }
 
   test("buildVocab ranks by frequency then word; tokenize maps OOV to the sentinel") {

@@ -109,4 +109,37 @@ class SemanticDedupSpec extends SparkSpecBase {
         assert(cs.head == one(r.getLong(0)))
       }
   }
+
+  test("SemDeDup cross-cell recall on planted clusters >= 0.9") {
+    val s = spark
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    // 16 tight clusters on orthogonal axes (cross-cluster cosine ~ 0),
+    // 5 members each — every true pair (>= 0.35) is within-cluster, so
+    // cell assignment should capture nearly all of them
+    val dim = 16
+    val rows = for (c <- 0 until 16; m <- 0 until 5) yield {
+      val v = new Array[Float](dim)
+      v(c) = 1f
+      v((c + 1) % dim) = 0.01f * m // tiny member jitter
+      Row((c * 5 + m).toLong, v.toSeq)
+    }
+    val schema = StructType(Seq(
+      StructField("vec_id", LongType, nullable = false),
+      StructField("embedding", ArrayType(FloatType), nullable = false)))
+    val emb = s.createDataFrame(s.sparkContext.parallelize(rows), schema)
+    val exact = graft.sim.Similarity.cosinePairsWithin(
+      emb.withColumn("__all", org.apache.spark.sql.functions.lit(0)),
+      "embedding", "vec_id", "__all", 0.35)
+      .select("id_a", "id_b").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(exact.size >= 16 * 10) // all within-cluster pairs found
+    val idx = graft.sim.Ivf.train(emb, "embedding", 8)
+    val cell = graft.sim.Ivf.assign(emb, "embedding", idx)
+      .select("vec_id", "ivf_cell").collect()
+      .map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val captured = exact.count { case (a, b) => cell(a) == cell(b) }
+    val recall = captured.toDouble / exact.size
+    assert(recall >= 0.9, s"semdedup cross-cell recall $recall < 0.9")
+  }
 }

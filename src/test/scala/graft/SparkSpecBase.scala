@@ -8,8 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 trait SparkSpecBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpecBase.session
-  def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  /** A fresh temp dir, removed when the test JVM exits. */
+  def tmpDir(prefix: String): String = SparkSpecBase.tmpDir(prefix)
   def dirSize(path: String): Long = {
     val f = new java.io.File(path)
     if (f.isFile) f.length()
@@ -52,10 +52,21 @@ trait SparkSpecBase extends AnyFunSuite {
 }
 
 object SparkSpecBase {
+  // every dir tmpDir made, the side dir included; one shutdown hook
+  // removes them all
+  private val made = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  sys.addShutdownHook(
+    made.forEach(d => graft.encode.TokenEncoder.rmTree(new java.io.File(d))))
+
+  def tmpDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toString
+    made.add(d)
+    d
+  }
+
   // tests exercising SparkEntry queries must not clobber the oracle
   // side-channel a pending Verify->DuckDB compare may still read
-  sys.props("graft.side.dir") =
-    java.nio.file.Files.createTempDirectory("graft-test-side").toString
+  sys.props("graft.side.dir") = tmpDir("graft-test-side")
 
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
