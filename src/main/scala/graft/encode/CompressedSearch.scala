@@ -1206,8 +1206,9 @@ object CompressedSearch {
     *  - over a cached frame ([[TokenDecoder.LiveFrame]]) it is a frame
     *    scan, the `reject` filter and a bounded `take`. A
     *    non-selective predicate (survivors exceed the driver cap) falls
-    *    back to the single-scan form — such a walk reads most payloads
-    *    anyway: committed blocks under the zone with the bloom adjoined.
+    *    back to joining the payload scan with the frame's rows under
+    *    the zone — such a walk reads most payloads anyway — so the
+    *    frame still carries the live set and the bloom.
     *
     * The pruned payload scan reads `blocks` ALONE: the survivors are
     * live blocks already, and a runId-prefixed blockId names exactly
@@ -1221,32 +1222,32 @@ object CompressedSearch {
     import spark.implicits._
     val zone = probe.zone
     val reject = probe.reject
-    val survivors = live match {
+    // the partId restriction and the zone, on the metadata or the payloads
+    def restrict(df: DataFrame): DataFrame =
+      partIds.fold(df)(ids => df.where(col("partId").isInCollection(ids.map(Int.box))))
+        .where(zone.column)
+    val blocks = StoreTables.read(spark, s"$outDir/blocks", StoreTables.Blocks)
+    def survivorScan(ids: Iterable[String]): DataFrame =
+      blocks.where(col("blockId").isInCollection(ids) && zone.column)
+        .withColumn("bloomEnc", lit(null).cast("binary"))
+    live match {
       case TokenDecoder.LiveRows(rows) =>
-        Some(rows.collect {
+        survivorScan(rows.collect {
           case b if partIds.forall(_.contains(b.partId)) &&
             zone.keeps(b.minTok, b.maxTok) &&
             !reject(b.codecId, b.symtab, b.bloomEnc) => b.blockId
         })
       case TokenDecoder.LiveFrame(frame) =>
-        val ids = partIds.fold(frame)(ids =>
-            frame.where(col("partId").isInCollection(ids.map(Int.box))))
-          .where(zone.column)
-          .select("blockId", "codecId", "symtab", "bloomEnc")
+        val kept = restrict(frame)
+        val ids = kept.select("blockId", "codecId", "symtab", "bloomEnc")
           .as[(String, Int, Array[Byte], Array[Byte])]
           .filter { case (_, cid, st, bloom) => !reject(cid, st, bloom) }
           .map(_._1)
           .take(MaxSelectedBlockIds + 1)
-        Some(ids).filter(_.length <= MaxSelectedBlockIds)
-    }
-    survivors match {
-      case Some(ids) =>
-        StoreTables.read(spark, s"$outDir/blocks", StoreTables.Blocks)
-          .where(col("blockId").isInCollection(ids.toSeq) && zone.column)
-          .withColumn("bloomEnc", lit(null).cast("binary"))
-      case None =>
-        TokenIndex.withBloom(spark, outDir,
-          TokenDecoder.committedBlocks(spark, outDir, partIds).where(zone.column))
+        if (ids.length <= MaxSelectedBlockIds) survivorScan(ids)
+        // over the cap: the cached frame's live rows, bloom included,
+        // restrict the payload scan
+        else restrict(blocks).join(kept.select("blockId", "bloomEnc"), Seq("blockId"))
     }
   }
 

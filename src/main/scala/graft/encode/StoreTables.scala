@@ -1,10 +1,18 @@
 package graft.encode
 
+import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroup
+import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
+import org.apache.parquet.io.ColumnIOFactory
+import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.SparkToParquetSchemaConverter
 import org.apache.spark.sql.types.{BinaryType, DoubleType, IntegerType, LongType,
@@ -111,6 +119,67 @@ private[graft] object StoreTables {
       throw new java.io.IOException(s"cannot rename $tmp to $dst")
   }
 
+  /** The `columns` (flat columns of `schema`) of the committed rows of
+    * the table dir `dir`, at most `limit` of them — read on the driver
+    * through parquet-mr, no Spark job: the read twin of [[writeFile]].
+    * The files are [[dataFiles]]' (crash artefacts skipped), in its
+    * order, opened through the Hadoop FileSystem with the session's
+    * Hadoop conf, so the read holds on every store filesystem; only the
+    * requested columns are decoded, and one a file lacks reads null, as
+    * under the fixed-schema [[read]].
+    */
+  def readRows(spark: SparkSession, dir: String, schema: StructType,
+               columns: Seq[String], limit: Int = Int.MaxValue): IndexedSeq[Row] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fields = columns.map(schema(_))
+    val out = scala.collection.mutable.ArrayBuffer[Row]()
+    val files = dataFiles(spark, dir).iterator
+    while (out.length < limit && files.hasNext) {
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(files.next(), conf),
+        HadoopReadOptions.builder(conf).build())
+      try {
+        val fileSchema = reader.getFooter.getFileMetaData.getSchema
+        val present = fields.filter(f => fileSchema.containsField(f.name))
+        val projection = new MessageType(fileSchema.getName,
+          present.map(f => fileSchema.getType(fileSchema.getFieldIndex(f.name))).asJava)
+        // each requested column's index in the projection, -1 when absent
+        val at = fields.map(f => present.indexWhere(_.name == f.name))
+        def value(g: Group, i: Int): Any = {
+          val j = at(i)
+          if (j < 0 || g == null || g.getFieldRepetitionCount(j) == 0) null
+          else fields(i).dataType match {
+            case IntegerType => g.getInteger(j, 0)
+            case LongType => g.getLong(j, 0)
+            case DoubleType => g.getDouble(j, 0)
+            case StringType => g.getString(j, 0)
+            case t => throw new IllegalArgumentException(
+              s"readRows: unsupported column ${fields(i).name}: $t")
+          }
+        }
+        if (present.isEmpty) {
+          // none of the columns is in this file: its rows read all-null
+          val n = math.min(reader.getRecordCount, (limit - out.length).toLong).toInt
+          out ++= Iterator.fill(n)(Row.fromSeq(fields.indices.map(value(null, _))))
+        } else {
+          reader.setRequestedSchema(projection)
+          val io = new ColumnIOFactory().getColumnIO(projection, fileSchema)
+          var pages = reader.readNextRowGroup()
+          while (pages != null && out.length < limit) {
+            val records = io.getRecordReader(pages, new GroupRecordConverter(projection))
+            var left = math.min(pages.getRowCount, (limit - out.length).toLong)
+            while (left > 0) {
+              val g = records.read()
+              out += Row.fromSeq(fields.indices.map(value(g, _)))
+              left -= 1
+            }
+            pages = reader.readNextRowGroup()
+          }
+        }
+      } finally reader.close()
+    }
+    out.toIndexedSeq
+  }
+
   /** The store's snapshot signature: (path, length, mtime) of every
     * entry of `blocks/`, `lineage/`, `completed/` and `tokidx/` — the
     * four tables the live-block answer depends on — in one Hadoop-FS
@@ -138,10 +207,6 @@ private[graft] object StoreTables {
                     schema: StructType): Option[DataFrame] =
     if (dataFiles(spark, path).isEmpty) None else Some(read(spark, path, schema))
 
-  /** An empty frame of the table's shape. */
-  def empty(spark: SparkSession, schema: StructType): DataFrame =
-    spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
-
   /** Whether the parquet footer of `file` declares `column` — one
     * driver-side footer read, no Spark job. The read options come from
     * the session's Hadoop conf: `ParquetFileReader.open(file)` alone
@@ -150,11 +215,9 @@ private[graft] object StoreTables {
     */
   def footerHasColumn(spark: SparkSession, file: Path, column: String): Boolean = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf),
-      org.apache.parquet.HadoopReadOptions.builder(conf)
-        .withMetadataFilter(org.apache.parquet.format.converter
-          .ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf),
+      HadoopReadOptions.builder(conf)
+        .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS)
         .build())
     try reader.getFooter.getFileMetaData.getSchema.containsField(column)
     finally reader.close()

@@ -398,20 +398,19 @@ object TokenEncoder {
     * run's blocks and lineage are never marked and readers filter on
     * the marked (partId, runId) pair.
     */
-  def committedPartIds(spark: SparkSession, outDir: String): Set[Int] = {
-    import spark.implicits._
-    StoreTables.readCommitted(spark, s"$outDir/completed", StoreTables.Completed)
-      .map(_.select("partId").as[Int].collect().toSet)
-      .getOrElse(Set.empty)
-  }
+  def committedPartIds(spark: SparkSession, outDir: String): Set[Int] =
+    StoreTables.readRows(spark, s"$outDir/completed", StoreTables.Completed, Seq("partId"))
+      .map(_.getInt(0)).toSet
 
-  /** The (partId, runId) commit markers — the reader-side filter. Not
-    * deduplicated: its consumers only test a pair's existence.
+  /** The (partId, runId) commit markers, read on the driver — the
+    * reader-side filter. Not deduplicated: its consumers only test a
+    * pair's existence. A legacy file's absent runId reads null.
     */
   private[encode] def completedPairs(spark: SparkSession,
-                                     outDir: String): DataFrame =
-    StoreTables.readCommitted(spark, s"$outDir/completed", StoreTables.Completed)
-      .getOrElse(StoreTables.empty(spark, StoreTables.Completed))
+                                     outDir: String): IndexedSeq[(Int, String)] =
+    StoreTables.readRows(spark, s"$outDir/completed", StoreTables.Completed,
+        Seq("partId", "runId"))
+      .map(r => (r.getInt(0), r.getString(1)))
 
   /** The partition plan is pinned to the output directory: computed
     * (from a sample) on the FIRST run and persisted as plan.json, then
@@ -737,19 +736,19 @@ object TokenEncoder {
     requireFreshDir(outDir, "mergeStores")
     val plans = inDirs.map(loadPlan)
     // plan check first — it's free (driver-side json reads), so the
-    // marker-collection jobs only run when it alone doesn't already
-    // force the fallback
+    // marker reads only run when it alone doesn't already force the
+    // fallback
     val planReason =
       if (plans.exists(_.isEmpty))
         Some("an input store has no pinned plan")
       else if (!plans.forall(_ == plans.head)) Some("plans differ")
       else None
     // commit markers are tiny metadata tables (one (partId, runId)
-    // pair per completed partition); collected ONCE per input and
+    // pair per completed partition); read ONCE per input and
     // reused for both the collision guard and the marker copy
-    val markerPairs: Seq[Array[(Int, String)]] =
+    val markerPairs: Seq[IndexedSeq[(Int, String)]] =
       if (planReason.isEmpty)
-        inDirs.map(d => completedPairs(spark, d).as[(Int, String)].collect())
+        inDirs.map(d => completedPairs(spark, d))
       else Seq.empty
     val reason = planReason.orElse {
       val runIdSets = markerPairs.map(_.iterator.map(_._2).toSet)
@@ -1177,8 +1176,20 @@ object TokenDecoder {
     * when that crash happened AFTER its lineage landed but before its
     * markers did (the resume then re-encoded those partIds — without
     * this filter readers would see both copies).
+    *
+    * The live set is resolved on the driver, with no Spark job, when
+    * `lineage/` holds at most [[CompressedSearch.MaxSelectedBlockIds]]
+    * rows ([[StoreTables.readRows]] stops at one past that): `blocks/`
+    * is then scanned once with `blockId IN (lineage ids)` pushed and
+    * the block row's own (partId, runId) checked against the markers
+    * of the lineage rows' partIds. A lineage row carries the partId of
+    * the block row it describes (`run` reads it back from the written
+    * blocks; the store copies move both verbatim), so those markers
+    * are all the ones the block rows can match, and the filter keeps
+    * exactly the rows the two left-semi joins keep. Above the bound
+    * the joins themselves run.
     */
-  private[encode] def committedBlocks(spark: SparkSession, outDir: String,
+  private[graft] def committedBlocks(spark: SparkSession, outDir: String,
                               partIds: Option[Set[Int]]): DataFrame = {
     // fail LOUDLY on a store whose lineage exists but whose commit
     // markers don't fit the (partId, runId) protocol — silently
@@ -1188,18 +1199,18 @@ object TokenDecoder {
     // pre-marker-protocol store; lineage with NO committed `completed`
     // file at all is either legacy or a first run crashed before its
     // markers — both need the same answer (re-encode / resume), never
-    // an empty read. Both checks are driver-side (a listing and one
-    // footer read); only the second, crash-shaped case runs a job.
+    // an empty read. Both checks are driver-side: a listing, one footer
+    // read, and the lineage rows read here.
     val lineagePath = s"$outDir/lineage"
+    val lineage = StoreTables.readRows(spark, lineagePath, StoreTables.Lineage,
+      Seq("partId", "blockId"), limit = CompressedSearch.MaxSelectedBlockIds + 1)
     StoreTables.dataFiles(spark, s"$outDir/completed").headOption match {
       case Some(f) if !StoreTables.footerHasColumn(spark, f, "runId") =>
         throw new IllegalStateException(
           s"token store at $outDir predates the commit-marker protocol: " +
           "completed/ lacks the runId column. Re-encode the store (or " +
           "backfill (partId, runId) markers from lineage) before reading.")
-      case None
-        if StoreTables.readCommitted(spark, lineagePath, StoreTables.Lineage)
-          .exists(!_.isEmpty) =>
+      case None if lineage.nonEmpty =>
         throw new IllegalStateException(
           s"token store at $outDir has lineage but no completed/ markers — " +
           "either it predates the commit-marker protocol or its first " +
@@ -1219,12 +1230,23 @@ object TokenDecoder {
     val blocks = StoreTables.read(spark, s"$outDir/blocks", StoreTables.Blocks)
     val pruned = partIds.fold(blocks)(ids =>
       blocks.where(col("partId").isInCollection(ids.map(Int.box))))
-    // left-semi right sides only test existence: no distinct needed
-    pruned
-      .join(StoreTables.read(spark, lineagePath, StoreTables.Lineage)
-        .select("blockId"), Seq("blockId"), "left_semi")
-      .join(broadcast(TokenEncoder.completedPairs(spark, outDir)),
-        Seq("partId", "runId"), "left_semi")
+    if (lineage.length <= CompressedSearch.MaxSelectedBlockIds) {
+      val parts = lineage.map(_.getInt(0)).toSet
+      // a null runId (a legacy marker file) never matches a block row
+      val marked = TokenEncoder.completedPairs(spark, outDir).collect {
+        case (p, r) if r != null && parts(p) => struct(lit(p), lit(r))
+      }
+      pruned.where(col("blockId").isInCollection(lineage.map(_.getString(1)).distinct) &&
+        struct(col("partId"), col("runId")).isInCollection(marked))
+    } else
+      // over the bound, lineage is non-empty, so the checks above found
+      // committed markers. Left-semi right sides only test existence: no
+      // distinct needed
+      pruned
+        .join(StoreTables.read(spark, lineagePath, StoreTables.Lineage)
+          .select("blockId"), Seq("blockId"), "left_semi")
+        .join(broadcast(StoreTables.read(spark, s"$outDir/completed", StoreTables.Completed)),
+          Seq("partId", "runId"), "left_semi")
   }
 
   /** Stores whose [[liveBlocks]] snapshot stays cached; the least

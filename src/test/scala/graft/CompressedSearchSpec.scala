@@ -1007,6 +1007,33 @@ class CompressedSearchSpec extends SparkSpecBase {
       rows.map(r => (r.doc_id, r.source) -> brute(r.tokens, lo, hi)).toMap)
   }
 
+  test("over-cap selection joins the payload scan with the cached frame") {
+    import spark.implicits._
+    val n = CompressedSearch.MaxSelectedBlockIds + 104
+    val rows = (0 until n).map { i =>
+      val toks = Array(i % 50, 7, 1000 + i)
+      TokenRow(f"cap-$i%05d", toks, toks.length, "s")
+    }
+    val dir = tmpDir("graft-overcap-frame")
+    TokenEncoder.run(spark.createDataset(rows), dir,
+      TokenEncoder.EncodeConfig(blockRows = 1))
+    assert(TokenDecoder.liveBlocks(spark, dir).isInstanceOf[TokenDecoder.LiveFrame])
+    val search = CompressedSearch.searchDocs(spark, dir, 0, 10)
+    // the plan's leaves: the payload scan of blocks/ and the cached
+    // frame, no second read of lineage/, completed/ or tokidx/
+    val leaves = search.queryExecution.optimizedPlan.collectLeaves()
+    val scanned = leaves.collect {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+        l.relation.asInstanceOf[org.apache.spark.sql.execution.datasources.HadoopFsRelation]
+          .location.rootPaths.map(_.getName)
+    }.flatten
+    assert(scanned == Seq("blocks"), leaves)
+    assert(leaves.exists(_.isInstanceOf[org.apache.spark.sql.execution.columnar.InMemoryRelation]),
+      leaves)
+    assert(search.collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap ==
+      rows.map(r => (r.doc_id, r.source) -> brute(r.tokens, 0, 10)).toMap)
+  }
+
   test("live-block frames are bounded and scoped to their session") {
     val sc = spark.sparkContext
     val bound = TokenDecoder.LiveFrameStores
