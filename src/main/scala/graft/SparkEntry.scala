@@ -231,12 +231,12 @@ object SparkEntry {
     * only after deleteDocs returns — a bare exists() check would
     * wedge forever on a crashed partial dir (the fresh-dir contract
     * would then refuse every retry); an undone partial dir is instead
-    * removed and the delete redone. d1 versions the delete code.
+    * removed and the delete redone. d2 versions the delete code.
     */
   private def stagedDeleted(s: SparkSession, d: String): String = {
     val store = encodedStore(s, d)
     memoStage(s"delete#$store", p => s"$p/_delete_done") {
-      val del = s"$store-deleted-d1-first3"
+      val del = s"$store-deleted-d2-first3"
       val done = new java.io.File(s"$del/_delete_done")
       if (!done.exists()) {
         val ids = graft.encode.TokenDecoder.read(s, store).toDF()
@@ -254,14 +254,14 @@ object SparkEntry {
     * half-stores pinned to ONE shared plan (savePlan exists precisely
     * for inheriting a master plan), mergeStores concatenates them at
     * the parquet ROW level. require(rowLevel) makes the staging also
-    * prove the zero-decode arm engaged. m1 versions the staging; DONE
+    * prove the zero-decode arm engaged. m2 versions the staging; DONE
     * sentinel as in [[stagedDeleted]]. Returns the base dir (merged
     * store at `<base>/m`).
     */
   private def stagedMerge(s: SparkSession, d: String): String = {
     val store = encodedStore(s, d) // ensures the oracle side dump
     memoStage(s"merge#$store", p => s"$p/_merge_done") {
-      val base = s"$store-merge-m1"
+      val base = s"$store-merge-m2"
       val done = new java.io.File(s"$base/_merge_done")
       if (!done.exists()) {
         graft.encode.TokenEncoder.rmTree(new java.io.File(base))
@@ -294,13 +294,13 @@ object SparkEntry {
     * row-level merge then yields a store where SOME partitions are
     * fragmented and some are not; compactStore must re-encode exactly
     * the fragmented share and strictly reduce the block count — the
-    * requires prove both paths engaged. c1 versions the staging.
+    * requires prove both paths engaged. c2 versions the staging.
     * Returns the base dir (compacted store at `<base>/c`).
     */
   private def stagedCompact(s: SparkSession, d: String): String = {
     val store = encodedStore(s, d) // ensures the oracle side dump
     memoStage(s"compact#$store", p => s"$p/_compact_done") {
-      val base = s"$store-compact-c1"
+      val base = s"$store-compact-c2"
       val done = new java.io.File(s"$base/_compact_done")
       if (!done.exists()) {
         graft.encode.TokenEncoder.rmTree(new java.io.File(base))
@@ -322,7 +322,7 @@ object SparkEntry {
         require(mr.rowLevel, "q_encoded_compact: staging merge must be " +
           s"row-level (fallback: ${mr.fallbackReason.getOrElse("?")})")
         val cr = graft.encode.TokenEncoder.compactStore(
-          s, s"$base/m", s"$base/c")
+          s, Seq(s"$base/m"), s"$base/c")
         require(cr.partsReencoded > 0 && cr.partsCopied > 0,
           s"q_encoded_compact: both paths must engage, got $cr")
         require(cr.blocksAfter < cr.blocksBefore,
@@ -1714,7 +1714,7 @@ object SparkEntry {
       // first doc_ids leave the store; bloom-clean partitions COPY at
       // the parquet row level (payload never decoded), only
       // may-contain partitions re-encode through run()'s own resume
-      // protocol. d1 versions the delete code. The guard is a DONE
+      // protocol. d2 versions the delete code. The guard is a DONE
       // sentinel written only after deleteDocs returns — a bare
       // exists() check would wedge forever on a crashed partial dir
       // (the fresh-dir contract would then refuse every retry); an
@@ -1733,7 +1733,7 @@ object SparkEntry {
       // silently pass through the re-encode arm otherwise). The
       // read-back aggregates per source with token-value sums, so a
       // payload corrupted by the byte-level move cannot hash-match.
-      // m1 versions the staging; DONE sentinel as in q_encoded_delete.
+      // m2 versions the staging; DONE sentinel as in q_encoded_delete.
       graft.encode.TokenDecoder.read(s, s"${stagedMerge(s, d)}/m").toDF()
         .groupBy("source")
         .agg(count(lit(1)).cast("long").as("n_docs"),
@@ -1752,7 +1752,7 @@ object SparkEntry {
       // fragmented share, move the rest verbatim at the parquet row
       // level, and strictly reduce the block count — the requires
       // prove both paths engaged, the oracle proves the content
-      // survived. c1 versions the staging; DONE sentinel as in
+      // survived. c2 versions the staging; DONE sentinel as in
       // q_encoded_delete.
       graft.encode.TokenDecoder.read(s, s"${stagedCompact(s, d)}/c").toDF()
         .groupBy("source")

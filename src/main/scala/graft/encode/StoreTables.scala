@@ -1,7 +1,7 @@
 package graft.encode
 
 import scala.jdk.CollectionConverters._
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroup
@@ -53,14 +53,30 @@ private[graft] object StoreTables {
   def read(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read.schema(schema).parquet(path)
 
+  /** `path` on its Hadoop FileSystem, under `spark`'s Hadoop conf. The
+    * store paths outside the parquet tables (plan.json, the fresh-dir
+    * check, vacuum's swap, dir removal, the batch-dir listing) resolve
+    * here, so they hold on every filesystem the tables do, `file:` URIs
+    * included. A lookup in the FileSystem cache: no Spark job.
+    */
+  def resolve(spark: SparkSession, path: String): (FileSystem, Path) = {
+    val p = new Path(path)
+    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+  }
+
+  /** [[resolve]] under the active session (else the default one), for
+    * the calls whose signature carries no session: `loadPlan`,
+    * `savePlan` and the fresh-dir check.
+    */
+  def resolve(path: String): (FileSystem, Path) = resolve(SparkSession.active, path)
+
   /** The committed data files of a table dir, in path order — empty when
     * the dir is missing or holds only crash artefacts. Listed through
     * the Hadoop FileSystem, so the check holds on every store
     * filesystem, not just file://.
     */
   def dataFiles(spark: SparkSession, path: String): Seq[Path] = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (fs, p) = resolve(spark, path)
     if (!fs.isDirectory(p)) Seq.empty
     else fs.listStatus(p).iterator
       .filter { s =>

@@ -20,8 +20,7 @@ import graft.model.{EncodedBlock, LineageRecord, TokenRow}
   * `completed/` holds the COMMIT MARKERS: a partId is complete iff a
   * (partId, runId) marker exists, written strictly after that run's
   * blocks and lineage (lineage alone is NOT commitment — a crash
-  * between the two commits leaves lineage without markers, and the
-  * row-level store copies append lineage as multi-file jobs). Readers
+  * between the two commits leaves lineage without markers). Readers
   * keep blocks that have a lineage row AND a marked (partId, runId);
   * resume re-encodes unmarked partitions — no duplicates, no skips.
   * This emulates Iceberg snapshot semantics on plain parquet (no
@@ -94,8 +93,9 @@ object TokenEncoder {
     */
   def hash64(s: String): Long = graft.codec.Hash.fnv64(s)
 
-  /** Recursive local-FS delete — THE one copy (vacuum's swap cleanup
-    * and SparkEntry's staging resets all share it). listFiles is
+  /** Recursive local-FS delete — THE one copy for local scratch dirs
+    * (SparkEntry's and QueryProbe's staging resets share it; store dirs
+    * are removed through the Hadoop FileSystem). listFiles is
     * null-guarded: it returns null on an I/O error or a non-directory
     * race, which must not abort a cleanup half-way.
     */
@@ -115,12 +115,11 @@ object TokenEncoder {
     * between the rewrites and the eligibility checks that mirror it.
     */
   private[graft] def isFreshDir(dir: String): Boolean = {
-    val f = new java.io.File(dir)
-    // listFiles returns null on an I/O error or a vanished-dir race:
-    // an unlistable existing dir is NOT fresh — refuse loudly rather
-    // than let a rewrite land on top of unknown contents
-    val kids = if (f.isDirectory) f.listFiles() else null
-    !f.exists() || (f.isDirectory && kids != null && kids.isEmpty)
+    val (fs, p) = StoreTables.resolve(dir)
+    // an unlistable existing dir throws: refuse loudly rather than let
+    // a rewrite land on top of unknown contents
+    try fs.getFileStatus(p).isDirectory && fs.listStatus(p).isEmpty
+    catch { case _: java.io.FileNotFoundException => true }
   }
 
   private[graft] def requireFreshDir(dir: String, op: String): Unit =
@@ -366,13 +365,6 @@ object TokenEncoder {
     )
   }
 
-  /** Partitions fully processed by earlier runs: the union of
-    * partitions with committed lineage and partitions recorded as
-    * completed-empty (overflow slots and empty salt slots produce no
-    * blocks, so they get an explicit completion marker instead —
-    * otherwise every idempotent re-run would re-scan the whole input
-    * just to rediscover they are empty).
-    */
   /** [[auditStore]]'s tolerant read: schema INFERRED from the files,
     * so the fsck can report on stores whose tables do not fit
     * [[StoreTables]]' schemas at all. A dir that exists with NO
@@ -380,12 +372,14 @@ object TokenEncoder {
     * as None. Every other reader uses the fixed schemas.
     */
   private[encode] def safeReadParquet(spark: SparkSession, path: String,
-      mergeSchema: Boolean = false): Option[org.apache.spark.sql.DataFrame] =
-    if (!new java.io.File(path).exists()) None
+      mergeSchema: Boolean = false): Option[org.apache.spark.sql.DataFrame] = {
+    val (fs, p) = StoreTables.resolve(spark, path)
+    if (!fs.exists(p)) None
     else {
       try Some(spark.read.option("mergeSchema", mergeSchema).parquet(path))
       catch { case _: org.apache.spark.sql.AnalysisException => None }
     }
+  }
 
   /** A partId is complete iff a (partId, runId) COMMIT MARKER exists
     * in `completed`, written only after that run's blocks AND lineage
@@ -431,11 +425,12 @@ object TokenEncoder {
     * the encoder's resume path and the pruned decoder.
     */
   def loadPlan(outDir: String): Option[Map[String, (Int, Int)]] = {
-    val f = new java.io.File(s"$outDir/plan.json")
-    if (!f.exists()) None
+    val (fs, f) = StoreTables.resolve(s"$outDir/plan.json")
+    if (!fs.exists(f)) None
     else {
-      val txt = new String(java.nio.file.Files.readAllBytes(f.toPath),
-        java.nio.charset.StandardCharsets.UTF_8)
+      val in = fs.open(f)
+      val txt = try new String(in.readAllBytes(),
+        java.nio.charset.StandardCharsets.UTF_8) finally in.close()
       // v2 files URL-encode the source (tab/newline safety); files
       // without the marker predate the escaping and are read verbatim
       // — decoding them would corrupt legacy names containing '+'/'%'
@@ -468,20 +463,23 @@ object TokenEncoder {
         s"$outDir already pins a DIFFERENT plan.json — refusing to remap partIds")
       case None => ()
     }
-    val f = new java.io.File(s"$outDir/plan.json")
-    f.getParentFile.mkdirs()
-    val tmp = new java.io.File(s"$outDir/plan.json.tmp")
+    val (fs, f) = StoreTables.resolve(s"$outDir/plan.json")
+    fs.mkdirs(f.getParent)
+    val tmp = new org.apache.hadoop.fs.Path(f.getParent, "plan.json.tmp")
     // URL-encode the source: a name containing '\t' or '\n' would
     // corrupt the line format and silently remap partIds on resume —
     // the exact failure the pinned plan exists to prevent. The v2
     // marker line lets loadPlan read pre-escaping files verbatim.
-    java.nio.file.Files.write(tmp.toPath,
-      (PlanMarker +: plan.toSeq.sortBy(_._1)
+    val out = fs.create(tmp, true)
+    try out.write((PlanMarker +: plan.toSeq.sortBy(_._1)
         .map { case (src, (b, s)) =>
           s"${java.net.URLEncoder.encode(src, "UTF-8")}\t$b\t$s" })
         .mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp.toPath, f.toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    finally out.close()
+    // a rename onto an existing file fails on some filesystems: only a
+    // concurrent writer's identical pin makes that a success
+    if (!fs.rename(tmp, f) && !loadPlan(outDir).contains(plan))
+      throw new IllegalStateException(s"$outDir: cannot pin plan.json")
   }
 
   /** Full encode with resume: skips partitions already committed
@@ -559,9 +557,11 @@ object TokenEncoder {
   }
 
   /** Garbage-collect blocks from crashed (uncommitted) runs: rewrite
-    * the blocks table keeping only blockIds present in lineage.
-    * Readers already ignore uncommitted blocks (semi-join), so vacuum
-    * is purely a space reclaim and safe to run any time after encode.
+    * the blocks table keeping only the live blocks. Readers already
+    * ignore uncommitted blocks ([[TokenDecoder.committedBlocks]]: a
+    * driver-resolved `blockId IN` filter within its bound, the
+    * lineage/marker semi-joins above it), so vacuum is purely a space
+    * reclaim and safe to run any time after encode.
     */
   def vacuum(spark: SparkSession, outDir: String): Long = {
     import spark.implicits._
@@ -582,15 +582,15 @@ object TokenEncoder {
     // two renames with checked results; on a failed second rename the
     // original table is restored — committed data is never the only
     // casualty of a partial swap
-    val fs = new java.io.File(blocksPath)
-    val bak = new java.io.File(s"$outDir/blocks_vacuum_old")
-    require(!bak.exists(), s"previous vacuum left $bak — resolve manually")
-    require(fs.renameTo(bak), s"cannot rename $blocksPath aside")
-    if (!new java.io.File(tmp).renameTo(fs)) {
-      require(bak.renameTo(fs), s"vacuum swap failed AND restore failed: blocks at $bak")
+    val (fs, cur) = StoreTables.resolve(spark, blocksPath)
+    val bak = new org.apache.hadoop.fs.Path(s"$outDir/blocks_vacuum_old")
+    require(!fs.exists(bak), s"previous vacuum left $bak — resolve manually")
+    require(fs.rename(cur, bak), s"cannot rename $blocksPath aside")
+    if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), cur)) {
+      require(fs.rename(bak, cur), s"vacuum swap failed AND restore failed: blocks at $bak")
       throw new IllegalStateException(s"vacuum swap failed; original restored at $blocksPath")
     }
-    rmTree(bak)
+    fs.delete(bak, true)
     total - keep
   }
 
@@ -604,97 +604,29 @@ object TokenEncoder {
     * verbatim, their payloads never decoded (the Bloom column is the
     * only thing read to classify them).
     *
-    * Protocol: the ORIGINAL plan.json is copied first, so surviving
-    * rows of dirty partitions re-route to their ORIGINAL partIds
-    * (partIdOf is a deterministic hash of doc_id) and the final
-    * [[run]] sees exactly the dirty partIds as pending — the delete
-    * rides the encoder's own commit-marker resume semantics for its
-    * re-encode half. Bloom false positives only cost a needless
-    * re-encode of one partition (content preserved); null-Bloom
-    * legacy blocks classify as may-contain (correct, just unpruned).
-    * A store with no plan.json (legacy) degrades to a full rewrite.
+    * The rewrite is [[rewrite]]'s: the ORIGINAL plan is pinned first,
+    * so surviving rows of dirty partitions re-route to their ORIGINAL
+    * partIds, and the delete rides the encoder's own commit-marker
+    * resume for its re-encode half. Bloom false positives only cost a
+    * needless re-encode of one partition (content preserved);
+    * null-Bloom legacy blocks classify as may-contain (correct, just
+    * unpruned). A store with no plan.json (legacy) degrades to a full
+    * rewrite, which counts every partition as re-encoded.
     *
-    * `outDir` must not exist (or be empty): like EncodeStream.compact,
-    * each delete targets a fresh dir — a crashed delete is retried by
-    * removing the partial dir, never by appending into it. Returns
-    * (parts_total, parts_copied, parts_reencoded, rows_deleted).
+    * Returns (parts_total, parts_copied, parts_reencoded,
+    * rows_deleted); the row counts come from block metadata and the
+    * re-encode's lineage, never from extra decode passes.
     */
   def deleteDocs(spark: SparkSession, inDir: String, outDir: String,
                  docIds: Seq[String],
                  cfg: EncodeConfig = EncodeConfig()): (Int, Int, Int, Long) = {
-    import spark.implicits._
-    require(inDir != outDir, "deleteDocs: outDir must differ from inDir")
-    requireFreshDir(outDir, "deleteDocs")
     require(docIds.exists(_.nonEmpty),
       "deleteDocs: empty doc-id list (a no-op delete would still burn " +
         "a full store copy — refuse loudly instead)")
-    val ids = docIds.toArray.toSeq
-    val idSet = ids.toSet
-    // row counts come from metadata (blockRows / the run's lineage),
-    // never from extra decode passes — the only payload decode a
-    // delete pays is the one run() needs for the dirty share
-    def rowsOf(blocks: DataFrame): Long = blocks
-      .agg(coalesce(sum("blockRows"), lit(0L))).first().getLong(0)
-    def rowsEncoded(lineage: Dataset[LineageRecord]): Long = lineage
-      .toDF().agg(coalesce(sum("rowCount"), lit(0L))).first().getLong(0)
-    TokenEncoder.loadPlan(inDir) match {
-      case None =>
-        // legacy store without a plan: no partId bands to preserve —
-        // honest fallback is the full decode-filter-reencode
-        val before = rowsOf(TokenDecoder.committedBlocks(spark, inDir, None))
-        val kept = TokenDecoder.read(spark, inDir)
-          .filter(r => !idSet.contains(r.doc_id))
-        val lineage = TokenEncoder.run(kept, outDir, cfg)
-        (1, 0, 1, before - rowsEncoded(lineage))
-      case Some(plan) =>
-        TokenEncoder.savePlan(plan, outDir)
-        val live = TokenDecoder.committedBlocks(spark, inDir, None)
-        // classify partIds from the Bloom column alone
-        val dirty = live.select("partId", "docBloomEnc")
-          .as[(Int, Array[Byte])]
-          .filter { case (_, bloom) =>
-            graft.codec.DocBloom.mayContainAny(bloom, ids)
-          }
-          .map(_._1).distinct().collect().toSet
-        val allParts = TokenEncoder.allPartIds(plan)
-        val cleanParts = allParts -- dirty
-        copyPartsVerbatim(spark, inDir, outDir, live, dirty)
-        // re-encode ONLY the dirty partitions' survivors; partIdOf
-        // routes them back to the same pending partIds under the
-        // copied plan, and run() marks exactly those complete
-        val before = rowsOf(live.where(col("partId").isInCollection(dirty)))
-        val kept = TokenDecoder.readBlocks(spark, inDir, Some(dirty),
-          verifyChecksums = false)
-          .filter(r => !idSet.contains(r.doc_id))
-        val lineage = TokenEncoder.run(kept, outDir, cfg)
-        (allParts.size, cleanParts.size, dirty.size,
-          before - rowsEncoded(lineage))
-    }
-  }
-
-  /** Verbatim row-level copy of a store's share EXCLUDING
-    * `reencodeParts`: their blocks, those blocks' lineage rows (keyed
-    * by blockId, so crashed-run orphans never travel), and ALL their
-    * commit markers (a marked-but-empty partId stays marked — run()
-    * must not re-encode it). Shared by deleteDocs (clean share) and
-    * compactStore (unfragmented share); payloads are never decoded.
-    */
-  private def copyPartsVerbatim(spark: SparkSession, inDir: String,
-                                outDir: String, live: DataFrame,
-                                reencodeParts: Set[Int]): Unit = {
-    val keep =
-      if (reencodeParts.isEmpty) lit(true)
-      else !col("partId").isInCollection(reencodeParts)
-    val cleanBlocks = live.where(keep)
-    cleanBlocks.write.mode("append")
-      .option("compression", "uncompressed")
-      .parquet(s"$outDir/blocks")
-    StoreTables.read(spark, s"$inDir/lineage", StoreTables.Lineage)
-      .join(cleanBlocks.select("blockId"), Seq("blockId"), "left_semi")
-      .write.mode("append").parquet(s"$outDir/lineage")
-    StoreTables.read(spark, s"$inDir/completed", StoreTables.Completed)
-      .where(keep)
-      .write.mode("append").parquet(s"$outDir/completed")
+    val r = rewrite(spark, "deleteDocs", Seq(inDir), outDir, cfg,
+      docIds.toSet, _.filter(_.hit).map(_.partId).toSet)
+    (r.partsTotal, r.partsTotal - r.partsReencoded, r.partsReencoded,
+      r.rowsReencodedIn - r.rowsReencoded)
   }
 
   /** Zero-decode UNION of committed stores that share one pinned
@@ -704,10 +636,9 @@ object TokenEncoder {
     * into its own dir; merge then concatenates the stores at the
     * parquet ROW level — blocks, their lineage rows and commit
     * markers move verbatim, payloads never decoded, cost O(bytes
-    * moved) with no shuffle at all. The row-level complement of
-    * [[graft.streaming.EncodeStream.compact]], which pays a full
-    * decode+re-encode to obtain a FRESH right-sized plan; merge keeps
-    * the shared plan and just moves bytes.
+    * moved) with no shuffle at all. It is [[rewrite]] with nothing to
+    * re-encode; [[compactStore]] is the same copy with the fragmented
+    * partitions re-encoded.
     *
     * Readers are union-safe by construction: commit markers are
     * (partId, runId) pairs and blockIds are runId-prefixed, so blocks
@@ -721,180 +652,187 @@ object TokenEncoder {
     *
     * Inputs with missing or differing plans — or the astronomically
     * rare runId collision between stores, which would make blockIds
-    * ambiguous — fall back to the honest full decode+union+re-encode
-    * under a fresh plan sized for the union (the compact shape).
-    *
-    * `outDir` must be fresh (the deleteDocs/compact contract): a
-    * crashed merge is retried by removing the partial dir.
+    * ambiguous — take [[rewrite]]'s fallback: the full
+    * decode+union+re-encode under a fresh plan sized for the union.
     */
   def mergeStores(spark: SparkSession, inDirs: Seq[String], outDir: String,
                   cfg: EncodeConfig = EncodeConfig()): MergeResult = {
-    import spark.implicits._
     require(inDirs.size >= 2, "mergeStores: need at least two input stores")
-    require(!inDirs.contains(outDir),
-      "mergeStores: outDir must differ from every input store")
-    requireFreshDir(outDir, "mergeStores")
-    val plans = inDirs.map(loadPlan)
-    // plan check first — it's free (driver-side json reads), so the
-    // marker reads only run when it alone doesn't already force the
-    // fallback
-    val planReason =
-      if (plans.exists(_.isEmpty))
-        Some("an input store has no pinned plan")
-      else if (!plans.forall(_ == plans.head)) Some("plans differ")
-      else None
-    // commit markers are tiny metadata tables (one (partId, runId)
-    // pair per completed partition); read ONCE per input and
-    // reused for both the collision guard and the marker copy
-    val markerPairs: Seq[IndexedSeq[(Int, String)]] =
-      if (planReason.isEmpty)
-        inDirs.map(d => completedPairs(spark, d))
-      else Seq.empty
-    val reason = planReason.orElse {
-      val runIdSets = markerPairs.map(_.iterator.map(_._2).toSet)
-      // a runId collision between stores would make blockIds ambiguous
-      if (runIdSets.map(_.size).sum != runIdSets.reduce(_ ++ _).size)
-        Some("runId collision between stores")
-      else None
-    }
-    reason match {
-      case None =>
-        savePlan(plans.head.get, outDir)
-        inDirs.zip(markerPairs).foreach { case (d, pairs) =>
-          // committedBlocks reads the fixed blocks schema, so mixed-era
-          // inputs merge into one uniform schema (a legacy file's absent
-          // zone/bloom columns land as null: no pruning)
-          val live = TokenDecoder.committedBlocks(spark, d, None)
-          // payloads are already codec+zstd compressed (same reasoning
-          // as run()'s block write)
-          live.write.mode("append").option("compression", "uncompressed")
-            .parquet(s"$outDir/blocks")
-          // lineage keyed by blockId: crashed-run orphan rows never travel
-          StoreTables.read(spark, s"$d/lineage", StoreTables.Lineage)
-            .join(live.select("blockId"), Seq("blockId"), "left_semi")
-            .write.mode("append").parquet(s"$outDir/lineage")
-          // markers from the already-collected pairs — a marked-but-empty
-          // partId stays marked, so run()-resume over the merge is a no-op
-          StoreTables.writeFile(spark, s"$outDir/completed",
-            StoreTables.Completed, pairs.map { case (p, r) => Row(p, r) })
-        }
-        // counts from the COPIED lineage (one row per live block,
-        // rowCount = blockRows): a single agg over the merged store's
-        // small lineage table — a readback validation of the copy —
-        // instead of re-executing the committedBlocks scan+joins per
-        // input just to count
-        val sm = StoreTables.read(spark, s"$outDir/lineage", StoreTables.Lineage)
-          .agg(count(lit(1)), coalesce(sum("rowCount"), lit(0L))).first()
-        MergeResult(sm.getLong(0), sm.getLong(1), rowLevel = true, None)
-      case Some(why) =>
-        // fallback: full decode+union+re-encode; run() sizes a fresh
-        // plan for the union
-        val rows = inDirs.map(d => TokenDecoder.read(spark, d))
-          .reduce(_ union _)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val lineage = run(rows, outDir, cfg.copy(cacheInput = false))
-          val sm = lineage.toDF()
-            .agg(coalesce(sum("rowCount"), lit(0L))).first()
-          MergeResult(0L, sm.getLong(0), rowLevel = false, Some(why))
-        } finally { rows.unpersist(blocking = false); () }
-    }
+    val r = rewrite(spark, "mergeStores", inDirs, outDir, cfg, Set.empty, _ => Set.empty)
+    MergeResult(r.blocksCopied, r.rowsCopied + r.rowsReencoded,
+      rowLevel = r.fallback.isEmpty, r.fallback)
   }
 
-  /** Selective compaction: rewrite ONLY the fragmented partitions of a
-    * store into full-size blocks; everything else moves verbatim at
-    * the parquet row level. Fragmentation accrues from the zero-decode
-    * paths that deliberately never repack — mergeStores concatenates
-    * each input's remainder blocks per partId, streaming ingest lands
-    * one remainder per micro-batch — and each undersized block costs a
-    * symtab + dictionary probe + task overhead per read forever after.
+  /** Selective compaction: rewrite ONLY the fragmented partitions of
+    * the union of `inDirs` into full-size blocks; everything else moves
+    * verbatim at the parquet row level. Fragmentation accrues from the
+    * zero-decode paths that deliberately never repack — mergeStores
+    * concatenates each input's remainder blocks per partId, streaming
+    * ingest lands one remainder per micro-batch — and each undersized
+    * block costs a symtab + dictionary probe + task overhead per read
+    * forever after. Several same-plan inputs fold in this one pass
+    * (streaming compaction's batch dirs): no merged staging store, so
+    * every clean block is written once.
     *
     * Classification is METADATA-ONLY (blockRows/totalTokens per
-    * partId): a partId is fragmented when its block count exceeds
-    * what one sequential pack of the same content could legitimately
-    * produce, floor(rows/blockRows) + floor(tokens/blockTokens) + 1
-    * (each sealed block consumed a full row-cap OR token-cap, plus
-    * one trailing remainder) — a remainder block is NORMAL, never a
-    * compaction trigger, and re-compacting a compacted store is a
-    * no-op by construction.
-    * Per-partId stats collect to the driver: bounded by the partition
-    * plan's size, the same envelope loadPlan already holds.
+    * partId, over all inputs): a partId is fragmented when its block
+    * count exceeds what one sequential pack of the same content could
+    * legitimately produce, floor(rows/blockRows) +
+    * floor(tokens/blockTokens) + 1 (each sealed block consumed a full
+    * row-cap OR token-cap, plus one trailing remainder) — a remainder
+    * block is NORMAL, never a compaction trigger, and re-compacting a
+    * compacted store is a no-op by construction. A tighter
+    * max(ceil, ceil) bound would re-flag alternating-seal partitions
+    * forever and compaction would never converge. Caveat:
+    * a store encoded with noShuffle=true legitimately emits one
+    * remainder block per task partition per partId, so such stores
+    * exceed this bound and compact fully on the FIRST pass (correct
+    * output; the no-op-by-construction convergence holds from the
+    * second compaction on, once the store is sequentially packed).
     *
     * Fragmented partitions decode ONCE and re-encode through run()'s
-    * own resume protocol under the store's pinned plan (partIdOf
+    * own resume protocol under the inputs' pinned plan (partIdOf
     * routes every row back to its own partId); a crash resumes by
     * removing the partial dir, exactly the deleteDocs/merge contract.
-    * A store with no plan.json (legacy) degrades to a full rewrite.
+    * Inputs with no plan.json (legacy) or differing plans degrade to
+    * a full rewrite, which counts every partition as re-encoded.
     */
-  def compactStore(spark: SparkSession, inDir: String, outDir: String,
+  def compactStore(spark: SparkSession, inDirs: Seq[String], outDir: String,
                    cfg: EncodeConfig = EncodeConfig()): CompactResult = {
+    require(inDirs.nonEmpty, "compactStore: need at least one input store")
+    val r = rewrite(spark, "compactStore", inDirs, outDir, cfg, Set.empty,
+      _.collect {
+        case p if p.blocks > p.rows / cfg.blockRows + p.tokens / cfg.blockTokens + 1 =>
+          p.partId
+      }.toSet)
+    CompactResult(r.partsTotal, r.partsTotal - r.partsReencoded, r.partsReencoded,
+      r.blocksIn, r.blocksCopied + r.lineage.size, r.rowsCopied + r.rowsReencoded)
+  }
+
+  /** One partId's live blocks over a rewrite's inputs: their count,
+    * rows and tokens, and whether any block's doc-id Bloom may hold a
+    * doc the rewrite drops.
+    */
+  private final case class PartShape(partId: Int, blocks: Long, rows: Long,
+                                     tokens: Long, hit: Boolean)
+
+  /** What [[rewrite]] did: the live blocks it read (`blocksIn`), the
+    * blocks and rows it copied verbatim, the input rows of the partIds
+    * it re-encoded and the re-encode's lineage (empty when none ran).
+    * `fallback` names the trigger of a full re-encode.
+    */
+  private final case class Rewritten(partsTotal: Int, partsReencoded: Int,
+                                     blocksIn: Long, blocksCopied: Long,
+                                     rowsCopied: Long, rowsReencodedIn: Long,
+                                     lineage: Seq[LineageRecord],
+                                     fallback: Option[String]) {
+    def rowsReencoded: Long = lineage.map(_.rowCount.toLong).sum
+  }
+
+  /** The ONE store rewrite behind [[deleteDocs]], [[mergeStores]] and
+    * [[compactStore]]: the inputs' live blocks land in the FRESH store
+    * `outDir`, those of the partIds `pick` names re-encoded without the
+    * docs in `drop`, the rest copied verbatim. In protocol order:
+    *  1. the fresh-dir check — a crashed rewrite is retried by removing
+    *     the partial dir, never by appending into it;
+    *  2. the plan check: every input pins the same plan.json, and no
+    *     runId occurs in two inputs (blockIds are runId-prefixed, so a
+    *     collision would make them ambiguous);
+    *  3. one metadata-only job over the union of the inputs'
+    *     [[TokenDecoder.committedBlocks]]: per live block its blockId,
+    *     partId, rows, tokens and the doc-id Bloom probe for `drop`,
+    *     collected to the driver (about one lineage row's worth per
+    *     block, as [[run]] collects its own lineage);
+    *  4. the shared plan pinned to `outDir`, so re-encoded rows route
+    *     back to their ORIGINAL partIds (partIdOf hashes doc_id);
+    *  5. `pick` over the per-partId [[PartShape]]s: the re-encode set;
+    *  6. every other partId copied VERBATIM, payloads never decoded:
+    *     its blocks in ONE Spark append over the union, then its
+    *     lineage rows (by live blockId, so a crashed run's orphans
+    *     never travel) and ALL its commit markers (a marked-but-empty
+    *     partId stays marked), each as one driver-written file
+    *     ([[StoreTables.writeFile]]) — lineage before markers, as
+    *     [[run]] commits;
+    *  7. [[run]] over the re-encode set's decoded rows minus `drop`:
+    *     its resume sees exactly those partIds pending and commits
+    *     them under a fresh runId. The pinned plan means run() never
+    *     samples, so the decode has one consumer and is not cached.
+    *
+    * A missing plan, differing plans or a runId collision take the ONE
+    * fallback in place of 4–7: every input decoded, `drop` removed, and
+    * [[run]] re-encodes the rest under a fresh plan sized for it;
+    * `fallback` names the trigger.
+    */
+  private def rewrite(spark: SparkSession, op: String, inDirs: Seq[String],
+                      outDir: String, cfg: EncodeConfig, drop: Set[String],
+                      pick: Seq[PartShape] => Set[Int]): Rewritten = {
     import spark.implicits._
-    require(inDir != outDir, "compactStore: outDir must differ from inDir")
-    requireFreshDir(outDir, "compactStore")
-    def storeShape(dir: String): (Long, Long) = {
-      val live = TokenDecoder.committedBlocks(spark, dir, None)
-      val r = live.agg(count(lit(1)),
-        coalesce(sum("blockRows"), lit(0L))).first()
-      (r.getLong(0), r.getLong(1))
-    }
-    loadPlan(inDir) match {
+    require(!inDirs.contains(outDir), s"$op: outDir must differ from every input store")
+    requireFreshDir(outDir, op)
+    val plans = inDirs.map(loadPlan)
+    val planReason =
+      if (plans.exists(_.isEmpty)) Some("an input store has no pinned plan")
+      else if (plans.distinct.size > 1) Some("plans differ")
+      else None
+    // the commit markers, read on the driver once: the collision check
+    // and the marker copy both use them
+    val markers =
+      if (planReason.isEmpty) inDirs.map(completedPairs(spark, _)) else Nil
+    val runIds = markers.map(_.iterator.map(_._2).toSet)
+    val fallback = planReason.orElse(
+      if (runIds.map(_.size).sum != runIds.flatten.toSet.size)
+        Some("runId collision between stores")
+      else None)
+    // committedBlocks reads the fixed blocks schema, so mixed-era inputs
+    // union into one uniform schema (a legacy file's absent zone/bloom
+    // columns land as null: no pruning). By name: its join form (a
+    // store over the driver bound) puts the join keys first
+    val live = inDirs.map(TokenDecoder.committedBlocks(spark, _, None))
+      .reduce(_ unionByName _)
+    val ids = drop.toSeq
+    val hit =
+      if (ids.isEmpty) lit(false)
+      else udf((bloom: Array[Byte]) => graft.codec.DocBloom.mayContainAny(bloom, ids))
+        .apply(col("docBloomEnc"))
+    val blocks = live.select(col("blockId"), col("partId"), col("blockRows"),
+        col("totalTokens"), hit)
+      .as[(String, Int, Int, Long, Boolean)].collect()
+    val shapes = blocks.groupBy(_._2).map { case (p, bs) =>
+      PartShape(p, bs.length.toLong, bs.map(_._3.toLong).sum, bs.map(_._4).sum,
+        bs.exists(_._5))
+    }.toSeq
+    def minusDrop(rows: Dataset[TokenRow]): Dataset[TokenRow] =
+      if (drop.isEmpty) rows else rows.filter(r => !drop.contains(r.doc_id))
+    fallback match {
+      case Some(why) =>
+        val rows = minusDrop(inDirs.map(TokenDecoder.read(spark, _)).reduce(_ union _))
+        val parts = math.max(shapes.size, 1)
+        Rewritten(parts, parts, blocks.length.toLong, 0L, 0L, shapes.map(_.rows).sum,
+          run(rows, outDir, cfg).collect().toSeq, Some(why))
       case None =>
-        // legacy store without a plan: no partId bands to preserve —
-        // honest fallback is the full decode+re-encode (run() samples
-        // a fresh plan AND encodes = two passes, so its default input
-        // caching stands here, unlike the pinned-plan arm below)
-        val (blocksBefore, _) = storeShape(inDir)
-        // report the ACTUAL partition count rewritten (operator-facing
-        // compactenc output), not a hard-coded 1 — the committed scan
-        // below is metadata-only and plan-bounded
-        val partsIn = TokenDecoder.committedBlocks(spark, inDir, None)
-          .select("partId").distinct().count().toInt
-        run(TokenDecoder.read(spark, inDir), outDir, cfg)
-        val (blocksAfter, rows) = storeShape(outDir)
-        CompactResult(math.max(partsIn, 1), 0, math.max(partsIn, 1),
-          blocksBefore, blocksAfter, rows)
-      case Some(plan) =>
+        val plan = plans.head.get
         savePlan(plan, outDir)
-        val live = TokenDecoder.committedBlocks(spark, inDir, None)
-        val perPart = live.groupBy("partId")
-          .agg(count(lit(1)).as("k"),
-            coalesce(sum("blockRows"), lit(0L)).as("rows"),
-            coalesce(sum("totalTokens"), lit(0L)).as("toks"))
-          .as[(Int, Long, Long, Long)].collect()
-        // sequential packing seals a block when EITHER cap is reached,
-        // so a fresh encode can legitimately produce up to
-        // floor(rows/blockRows) + floor(tokens/blockTokens) + 1 blocks
-        // (each sealed block consumed a full row-cap OR a full
-        // token-cap, plus one trailing remainder). Only counts ABOVE
-        // that bound are true fragmentation — a tighter max(ceil,ceil)
-        // bound would re-flag alternating-seal partitions forever and
-        // compaction would never converge. Caveat (ADVICE r6): a
-        // store encoded with noShuffle=true legitimately emits one
-        // remainder block per task partition per partId, so such
-        // stores exceed this bound and compact fully on the FIRST
-        // pass (correct output; the no-op-by-construction convergence
-        // holds from the second compaction on, once the store is
-        // sequentially packed).
-        val frag = perPart.filter { case (_, k, rows, toks) =>
-          k > rows / cfg.blockRows.toLong +
-            toks / cfg.blockTokens.toLong + 1L
-        }.map(_._1).toSet
-        val allParts = allPartIds(plan)
-        copyPartsVerbatim(spark, inDir, outDir, live, frag)
-        if (frag.nonEmpty) {
-          // decode ONLY the fragmented partitions; checksums are
-          // re-derived by the re-encode, so skip the verify decode
-          val rows = TokenDecoder.readBlocks(spark, inDir, Some(frag),
-            verifyChecksums = false)
-          // the pinned plan is already saved, so run() never samples:
-          // the decode stream has exactly ONE consumer — caching it
-          // would materialize the fragmented share for nothing
-          run(rows, outDir, cfg.copy(cacheInput = false))
-          ()
-        }
-        val (blocksAfter, rowsTotal) = storeShape(outDir)
-        CompactResult(allParts.size, (allParts -- frag).size, frag.size,
-          perPart.map(_._2).sum, blocksAfter, rowsTotal)
+        val reencode = pick(shapes)
+        // payloads are already codec+zstd compressed (as in run()'s
+        // block write)
+        live.where(!col("partId").isInCollection(reencode)).write.mode("append")
+          .option("compression", "uncompressed")
+          .parquet(s"$outDir/blocks")
+        val copied = blocks.iterator.collect { case (b, p, _, _, _) if !reencode(p) => b }.toSet
+        val at = StoreTables.Lineage.fieldIndex("blockId")
+        StoreTables.writeFile(spark, s"$outDir/lineage", StoreTables.Lineage,
+          inDirs.flatMap(d => StoreTables.readRows(spark, s"$d/lineage", StoreTables.Lineage,
+            StoreTables.Lineage.fieldNames.toSeq)).filter(r => copied(r.getString(at))))
+        StoreTables.writeFile(spark, s"$outDir/completed", StoreTables.Completed,
+          markers.flatten.collect { case (p, r) if !reencode(p) => Row(p, r) })
+        val lineage =
+          if (reencode.isEmpty) Nil
+          else run(minusDrop(inDirs
+              .map(TokenDecoder.readBlocks(spark, _, Some(reencode), verifyChecksums = false))
+              .reduce(_ union _)), outDir, cfg.copy(cacheInput = false)).collect().toSeq
+        val (redone, kept) = shapes.partition(s => reencode(s.partId))
+        Rewritten(allPartIds(plan).size, reencode.size, blocks.length.toLong,
+          copied.size.toLong, kept.map(_.rows).sum, redone.map(_.rows).sum, lineage, None)
     }
   }
 }
@@ -1123,6 +1061,13 @@ object TokenDecoder {
       }
   }
 
+  /** Driver cap on the may-contain list: past it (a degenerate store —
+    * null-bloom legacy blocks, or a bloom fp share at 10^9 blocks) the
+    * survivor set stays DISTRIBUTED as a semi-join on blockId, so the
+    * driver never holds a list proportional to store size.
+    */
+  private[encode] val MaxPointLookupBlockIds = 65536
+
   /** Point lookup: full TokenRows for exactly the requested doc ids.
     * Two phases so rejected blocks' PAYLOAD BYTES are never read:
     * (1) a metadata-only scan of (blockId, docBloomEnc) — a few
@@ -1137,13 +1082,6 @@ object TokenDecoder {
     * CompressedSearch for those). Legacy blocks with a null filter
     * are kept — correct, just unpruned.
     */
-  /** Driver cap on the may-contain list: past it (a degenerate store —
-    * null-bloom legacy blocks, or a bloom fp share at 10^9 blocks) the
-    * survivor set stays DISTRIBUTED as a semi-join on blockId, so the
-    * driver never holds a list proportional to store size.
-    */
-  private[encode] val MaxPointLookupBlockIds = 65536
-
   def readDocsById(spark: SparkSession, outDir: String,
                    docIds: Seq[String]): Dataset[TokenRow] = {
     import spark.implicits._

@@ -2,7 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
-import graft.encode.{TokenDecoder, TokenEncoder}
+import org.apache.hadoop.fs.Path
+import graft.encode.{StoreTables, TokenDecoder, TokenEncoder}
 import graft.encode.TokenEncoder.EncodeConfig
 import graft.model.TokenRow
 
@@ -20,17 +21,17 @@ import graft.model.TokenRow
   * correctness. Periodic [[compact]]ion of many small batch dirs into
   * one store is an offline maintenance job, not part of the ingest
   * path — and because every batch pins the stream's master plan, it
-  * folds at the parquet ROW level (mergeStores + compactStore): only
-  * each batch's remainder blocks re-encode, clean blocks move as
-  * bytes.
+  * folds at the parquet ROW level in one compactStore pass over all
+  * the batch dirs: only each batch's remainder blocks re-encode, clean
+  * blocks move as bytes, written once.
   */
 object EncodeStream {
 
   /** The stream's ONE pinned partition plan, created from the first
     * nonempty micro-batch and stored at `outDir/plan.json`: every
     * batch dir pins it, so [[compact]] takes the zero-decode row-level
-    * path (mergeStores + compactStore) instead of re-encoding clean
-    * data. Sources first seen in LATER batches route to the overflow
+    * path (one compactStore over the batch dirs) instead of re-encoding
+    * clean data. Sources first seen in LATER batches route to the overflow
     * band — still exact, occasionally skewed; a re-plan compaction
     * into a fresh target is the repair. Idempotent across micro-batch
     * retries: once written the plan is only ever read.
@@ -168,16 +169,17 @@ object EncodeStream {
     * after the listing is untouched and survives for the next
     * compaction.
     *
-    * When every batch pins the stream's master plan (what
-    * [[streamingEncode]] arranges) and `targetDir` is fresh, the fold
-    * is ZERO-DECODE on the encode side: a row-level mergeStores union
-    * followed by compactStore, so only fragmented partitions (each
-    * batch's remainder blocks) re-encode and clean blocks move as
-    * parquet bytes. Otherwise (differing plans, or a crashed prior
-    * attempt left a partial `targetDir`) it falls back to the classic
-    * decode + run() re-encode, whose resume protocol makes the rerun
-    * idempotent. The containment verify always decodes the target
-    * once — the byte-moved fast path earns no verification discount.
+    * A fresh `targetDir` gets ONE compactStore over all the batch
+    * dirs: when every batch pins the stream's master plan (what
+    * [[streamingEncode]] arranges) the fold is ZERO-DECODE on the
+    * encode side — only fragmented partitions (each batch's remainder
+    * blocks) re-encode, and clean blocks move as parquet bytes straight
+    * into the target, with no staging store; differing plans take
+    * compactStore's full re-encode. A non-empty `targetDir` is a
+    * crashed prior attempt: the classic decode + run() re-encode
+    * finishes it, its resume protocol making the rerun idempotent. The
+    * containment verify always decodes the target once — the
+    * byte-moved fast path earns no verification discount.
     *
     * Verify-before-delete + containment (not equality) makes a crash
     * mid-delete re-runnable: the rerun reads the surviving batches,
@@ -193,37 +195,17 @@ object EncodeStream {
               cfg: EncodeConfig = EncodeConfig()): Long = {
     val dirs = committedBatchDirs(spark, outDir)
     if (dirs.isEmpty) return 0L
-    // NOT persisted up front: only the legacy branch consumes the
-    // union twice (run + verify) and persists it there — the fast
-    // paths read it exactly once, for the containment verify
+    // NOT persisted up front: only the resume branch consumes the
+    // union twice (run + verify) and persists it there — compactStore
+    // reads the batches itself, and the union once, for the verify
     val rows = readDirs(spark, dirs, verifyChecksums = true)
     try {
-      val plans = dirs.map(TokenEncoder.loadPlan)
-      // a crashed prior fast-path attempt may have stranded a full
-      // row-level copy at the staging path; reclaim it up front,
-      // whichever branch runs now
-      val staging = s"$targetDir.merge"
-      TokenEncoder.rmTree(new java.io.File(staging))
       // freshness = the same contract compactStore itself enforces; a
       // NON-empty target is a crashed prior attempt, which only the
-      // legacy run()-resume path can finish
-      val fastEligible = TokenEncoder.isFreshDir(targetDir) &&
-        plans.head.isDefined && plans.forall(_ == plans.head)
-      if (fastEligible && dirs.size == 1) {
-        TokenEncoder.compactStore(spark, dirs.head, targetDir, cfg)
+      // run()-resume path can finish
+      if (TokenEncoder.isFreshDir(targetDir)) {
+        TokenEncoder.compactStore(spark, dirs, targetDir, cfg)
         ()
-      } else if (fastEligible) {
-        val mr = TokenEncoder.mergeStores(spark, dirs, staging, cfg)
-        if (mr.rowLevel) {
-          TokenEncoder.compactStore(spark, staging, targetDir, cfg)
-          TokenEncoder.rmTree(new java.io.File(staging))
-        } else {
-          // a runId collision (the one remaining fallback trigger)
-          // already re-encoded the union into staging — adopt it
-          require(new java.io.File(staging)
-            .renameTo(new java.io.File(targetDir)),
-            s"compact: could not move $staging to $targetDir")
-        }
       } else {
         // persist here — run() and the verify below both consume the
         // union (run()'s own cacheInput stays off: one cache, not two)
@@ -238,11 +220,12 @@ object EncodeStream {
           s"$targetDir — batch dirs kept")
       val n = back.count()
       dirs.foreach { d =>
+        val (fs, p) = StoreTables.resolve(spark, d)
         // drop the COMMIT MARKERS first: a crash mid-delete then
         // leaves an uncommitted-looking dir that the rerun's listing
         // skips, instead of a "committed" dir with half its data gone
-        TokenEncoder.rmTree(new java.io.File(s"$d/completed"))
-        TokenEncoder.rmTree(new java.io.File(d))
+        fs.delete(new Path(p, "completed"), true)
+        fs.delete(p, true)
       }
       n
     } finally { rows.unpersist(blocking = false); () }
@@ -255,21 +238,26 @@ object EncodeStream {
     * have not would otherwise be listed, read as zero rows, trivially
     * "verified", and DELETED by compact while its stream still thinks
     * the batch succeeded — permanent loss. One listing: the unit
-    * compact reads AND later deletes, same snapshot.
+    * compact reads AND later deletes, same snapshot. Listed through the
+    * Hadoop FileSystem, so a stream on any store filesystem (a `file:`
+    * URI included) lists its batches; a missing `outDir` lists none.
     */
   private def committedBatchDirs(spark: SparkSession,
-                                 outDir: String): Seq[String] =
-    Option(new java.io.File(outDir).listFiles())
-      .getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("batch="))
-      .map(_.getAbsolutePath)
+                                 outDir: String): Seq[String] = {
+    val (fs, root) = StoreTables.resolve(spark, outDir)
+    val listed =
+      try fs.listStatus(root).toSeq
+      catch { case _: java.io.FileNotFoundException => Seq.empty }
+    listed
+      .filter(f => f.isDirectory && f.getPath.getName.startsWith("batch="))
+      .map(_.getPath.toString)
       .filter { d =>
         TokenEncoder.loadPlan(d).exists { plan =>
           TokenEncoder.allPartIds(plan)
             .subsetOf(TokenEncoder.committedPartIds(spark, d))
         }
       }
-      .toSeq
+  }
 
   private def readDirs(spark: SparkSession, dirs: Seq[String],
                        verifyChecksums: Boolean): Dataset[TokenRow] = {

@@ -393,7 +393,7 @@ object UndatumCli {
       // dir (fresh-dir contract), so the generic epilogue must not fire
       val out = flags.getOrElse("output",
         argError("compactenc needs --output <newStoreDir>"))
-      val cr = graft.encode.TokenEncoder.compactStore(spark, input, out)
+      val cr = graft.encode.TokenEncoder.compactStore(spark, Seq(input), out)
       println(s"compacted: $out parts=${cr.partsTotal} " +
         s"copied=${cr.partsCopied} reencoded=${cr.partsReencoded} " +
         s"blocks=${cr.blocksBefore}->${cr.blocksAfter} rows=${cr.rowsTotal}")

@@ -30,6 +30,19 @@ class PipelineSpec extends SparkSpecBase {
   private val CountJobBudget = 4
   private val WarmCountJobBudget = 2
 
+  /** Measured Spark jobs per store rewrite (the shapes of the
+    * rewrite-budget test below). Every rewrite is one metadata collect
+    * over the inputs' live blocks and one append of the copied blocks
+    * (lineage and markers are driver-written files), plus run()'s jobs
+    * for the re-encoded partitions; streaming compaction adds its
+    * checksum-verified containment check. Before the shared rewrite
+    * body: delete 14, merge 8, compact 11, streaming compact 27.
+    */
+  private val DeleteJobBudget = 5
+  private val MergeJobBudget = 2
+  private val CompactJobBudget = 5
+  private val StreamCompactJobBudget = 10
+
   private def synth = TokenSynth.dataset(spark, N, parallelism = 4)
 
   private def assertSameTable(a: org.apache.spark.sql.Dataset[TokenRow],
@@ -762,7 +775,7 @@ class PipelineSpec extends SparkSpecBase {
     val merged = s"${tmpDir("cp-m")}/st"
     assert(TokenEncoder.mergeStores(s, Seq(dirA, dirB), merged).rowLevel)
     val out = s"${tmpDir("cp-out")}/st"
-    val cr = TokenEncoder.compactStore(s, merged, out)
+    val cr = TokenEncoder.compactStore(s, Seq(merged), out)
     assert(cr.partsReencoded > 0, s"tiny-block partitions must rewrite: $cr")
     assert(cr.partsCopied > 0, s"full-block partitions must copy: $cr")
     assert(cr.blocksAfter < cr.blocksBefore, s"block count must drop: $cr")
@@ -784,7 +797,7 @@ class PipelineSpec extends SparkSpecBase {
       EncodeConfig(targetRowsPerPart = 300)).count() == 0,
       "compacted store must read as fully committed (resume no-op)")
     intercept[IllegalArgumentException] {
-      TokenEncoder.compactStore(s, merged, out)
+      TokenEncoder.compactStore(s, Seq(merged), out)
     }
   }
 
@@ -794,7 +807,7 @@ class PipelineSpec extends SparkSpecBase {
     val in = tmpDir("cpn-in")
     TokenEncoder.run(full, in, EncodeConfig(targetRowsPerPart = 150))
     val out = s"${tmpDir("cpn-out")}/st"
-    val cr = TokenEncoder.compactStore(s, in, out)
+    val cr = TokenEncoder.compactStore(s, Seq(in), out)
     assert(cr.partsReencoded == 0, s"nothing is fragmented: $cr")
     assert(cr.blocksAfter == cr.blocksBefore)
     def blkSet(d: String) = s.read.parquet(s"$d/blocks")
@@ -812,7 +825,7 @@ class PipelineSpec extends SparkSpecBase {
       EncodeConfig(targetRowsPerPart = 100, blockRows = 16))
     assert(new java.io.File(s"$in/plan.json").delete())
     val out = s"${tmpDir("cpl-out")}/st"
-    val cr = TokenEncoder.compactStore(s, in, out)
+    val cr = TokenEncoder.compactStore(s, Seq(in), out)
     // the legacy arm reports the ACTUAL distinct-partition count it
     // rewrote (ADVICE r6: a hard-coded 1 understated the work)
     val partsIn = s.read.parquet(s"$in/blocks")
@@ -821,5 +834,51 @@ class PipelineSpec extends SparkSpecBase {
       cr.partsTotal == partsIn && partsIn > 1)
     assert(cr.blocksAfter < cr.blocksBefore)
     assertSameTable(full, TokenDecoder.read(s, out))
+  }
+
+  test("store rewrites stay within their Spark-job budgets") {
+    val s = spark
+    val full = TokenSynth.dataset(s, 900, parallelism = 4)
+    val plan = TokenEncoder.partitionPlan(full, targetRowsPerPart = 300)
+    // split by source: half A with tiny blocks (fragmented), half B
+    // with full ones, so delete and compact each copy some partIds and
+    // re-encode others
+    val sa = Set("web", "books", "code", "wiki")
+    def pinned(d: String, rows: org.apache.spark.sql.Dataset[TokenRow],
+               cfg: EncodeConfig): String = {
+      TokenEncoder.savePlan(plan, d)
+      TokenEncoder.run(rows, d, cfg)
+      d
+    }
+    val dirA = pinned(tmpDir("rwj-a"), full.filter(r => sa.contains(r.source)),
+      EncodeConfig(targetRowsPerPart = 300, blockRows = 16))
+    val dirB = pinned(tmpDir("rwj-b"), full.filter(r => !sa.contains(r.source)),
+      EncodeConfig(targetRowsPerPart = 300))
+    val victim = TokenDecoder.read(s, dirB).first().doc_id
+    val deleteJobs = jobsOf {
+      TokenEncoder.deleteDocs(s, dirB, s"${tmpDir("rwj-del")}/st", Seq(victim)); ()
+    }
+    val merged = s"${tmpDir("rwj-m")}/st"
+    val mergeJobs = jobsOf { TokenEncoder.mergeStores(s, Seq(dirA, dirB), merged); () }
+    val compactJobs = jobsOf {
+      TokenEncoder.compactStore(s, Seq(merged), s"${tmpDir("rwj-c")}/st"); ()
+    }
+    // three micro-batch dirs pinned to one master plan, as
+    // EncodeStream.streamingEncode lands them
+    val stream = tmpDir("rwj-stream")
+    (0 until 3).foreach { b =>
+      pinned(s"$stream/batch=$b", full.filter(r => math.abs(r.doc_id.hashCode % 3) == b),
+        EncodeConfig(targetRowsPerPart = 300, blockRows = 64))
+    }
+    val streamJobs = jobsOf {
+      graft.streaming.EncodeStream.compact(s, stream, s"${tmpDir("rwj-sc")}/st",
+        EncodeConfig(targetRowsPerPart = 300)); ()
+    }
+    info(s"delete $deleteJobs, merge $mergeJobs, compact $compactJobs, " +
+      s"streaming compact $streamJobs jobs")
+    assert(deleteJobs <= DeleteJobBudget, s"deleteDocs ran $deleteJobs jobs")
+    assert(mergeJobs <= MergeJobBudget, s"mergeStores ran $mergeJobs jobs")
+    assert(compactJobs <= CompactJobBudget, s"compactStore ran $compactJobs jobs")
+    assert(streamJobs <= StreamCompactJobBudget, s"streaming compact ran $streamJobs jobs")
   }
 }

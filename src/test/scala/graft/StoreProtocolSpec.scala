@@ -74,19 +74,15 @@ class StoreProtocolSpec extends SparkSpecBase {
       Seq("partId", "runId")) == Seq(Row(4, null), Row(5, null)))
     assert(StoreTables.readRows(spark, s"$dir/completed", StoreTables.Completed,
       Seq("runId")) == Seq(Row(null), Row(null)))
-    // a Spark-written multi-file lineage: a same-plan merge's
-    val full = graft.synth.TokenSynth.dataset(spark, 300, parallelism = 2)
-    val plan = TokenEncoder.partitionPlan(full, targetRowsPerPart = 60)
-    val ins = Seq(0, 1).map { h =>
-      val d = tmpDir(s"read-rows-in-$h")
-      TokenEncoder.savePlan(plan, d)
-      TokenEncoder.run(full.filter(r => (r.doc_id.hashCode & 1) == h), d,
-        EncodeConfig(targetRowsPerPart = 60))
-      d
-    }
-    val merged = s"${tmpDir("read-rows-merged")}/st"
-    assert(TokenEncoder.mergeStores(spark, ins, merged).rowLevel)
-    val lineage = s"$merged/lineage"
+    // a Spark-written multi-file lineage: an encoded store's lineage
+    // rows appended by a two-task write job, as pre-driver-commit
+    // stores and a crash-test's hand-landed runs hold them
+    val enc = tmpDir("read-rows-enc")
+    TokenEncoder.run(graft.synth.TokenSynth.dataset(spark, 300, parallelism = 2), enc,
+      EncodeConfig(targetRowsPerPart = 60))
+    val lineage = s"${tmpDir("read-rows-spark")}/lineage"
+    StoreTables.read(spark, s"$enc/lineage", StoreTables.Lineage).repartition(2)
+      .write.parquet(lineage)
     assert(StoreTables.dataFiles(spark, lineage).size > 1)
     def sparkRows = StoreTables.read(spark, lineage, StoreTables.Lineage).collect()
       .map(_.toString).sorted.toSeq
@@ -197,7 +193,7 @@ class StoreProtocolSpec extends SparkSpecBase {
     assert(TokenEncoder.mergeStores(spark, Seq(dir, other), merged, cfg).rowLevel)
     sameAsJoins(merged, "a merged store")
     val compacted = s"${tmpDir("live-shapes-compacted")}/st"
-    TokenEncoder.compactStore(spark, merged, compacted)
+    TokenEncoder.compactStore(spark, Seq(merged), compacted)
     sameAsJoins(compacted, "a compacted store")
   }
 
@@ -226,5 +222,43 @@ class StoreProtocolSpec extends SparkSpecBase {
     val plan = read.queryExecution.executedPlan.toString
     for (op <- Seq("Join", "BroadcastExchange"))
       assert(!plan.contains(op), s"full decode plans a $op:\n$plan")
+  }
+
+  test("a file: URI store encodes, resumes, streams, compacts and vacuums") {
+    val s = spark
+    import s.implicits._
+    implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
+    import graft.streaming.EncodeStream
+    val root = s"file://${tmpDir("uri-store")}"
+    val rows = synth.collect().toSeq
+    val ds = s.createDataset(rows)
+    val cfg = EncodeConfig(targetRowsPerPart = 100)
+    def same(got: org.apache.spark.sql.Dataset[TokenRow]): Unit = {
+      val (want, back) = (ds.toDF(), got.toDF())
+      assert(want.exceptAll(back).count() == 0 && back.exceptAll(want).count() == 0)
+    }
+    val enc = s"$root/enc"
+    TokenEncoder.run(ds, enc, cfg)
+    assert(TokenEncoder.loadPlan(enc).isDefined)
+    assert(TokenEncoder.run(ds, enc, cfg).count() == 0, "resume must be a no-op")
+    same(TokenDecoder.read(s, enc))
+    val stream = s"$root/stream"
+    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[TokenRow]
+    val q = EncodeStream.streamingEncode(mem.toDS(), stream, cfg)
+    try {
+      mem.addData(rows.take(150): _*); q.processAllAvailable()
+      mem.addData(rows.drop(150): _*); q.processAllAvailable()
+    } finally q.stop()
+    same(EncodeStream.readAll(s, stream))
+    val target = s"$root/compacted"
+    assert(EncodeStream.compact(s, stream, target, cfg) == rows.size)
+    assert(EncodeStream.readAll(s, stream).isEmpty, "compacted batches must be dropped")
+    same(TokenDecoder.read(s, target))
+    // a crashed run's blocks: vacuum swaps them out
+    TokenEncoder.encodeBlocks(ds, TokenEncoder.loadPlan(target).get, cfg)
+      .write.mode("append").parquet(s"$target/blocks")
+    assert(TokenEncoder.vacuum(s, target) > 0L)
+    same(TokenDecoder.read(s, target))
+    assert(!new java.io.File("file:").exists(), "a store path landed under the working dir")
   }
 }

@@ -353,4 +353,51 @@ class StreamingSpec extends SparkSpecBase {
     assert(sessions(0).user_id == 1L && sessions(0).events == 2 &&
       sessions(0).session_secs == 300)
   }
+
+  test("one compactStore over the batch dirs equals merge-to-staging then compact") {
+    val s = spark
+    import graft.encode.{TokenDecoder, TokenEncoder}
+    import graft.encode.TokenEncoder.EncodeConfig
+    val full = graft.synth.TokenSynth.dataset(s, 900, parallelism = 4)
+    val plan = TokenEncoder.partitionPlan(full, targetRowsPerPart = 300)
+    // three batch dirs pinned to one master plan: batches 0 and 2 split
+    // four sources' rows in tiny blocks (those partIds fragment), batch
+    // 1 holds the other sources in full blocks (those stay clean)
+    val sa = Set("web", "books", "code", "wiki")
+    val src = tmpDir("fold-src")
+    val shares = Seq(
+      (full.filter(r => sa.contains(r.source) && (r.doc_id.hashCode & 1) == 0), 16),
+      (full.filter(r => !sa.contains(r.source)), 1 << 16),
+      (full.filter(r => sa.contains(r.source) && (r.doc_id.hashCode & 1) == 1), 16))
+    val dirs = shares.zipWithIndex.map { case ((rows, blockRows), b) =>
+      val d = s"$src/batch=$b"
+      TokenEncoder.savePlan(plan, d)
+      TokenEncoder.run(rows, d, EncodeConfig(targetRowsPerPart = 300, blockRows = blockRows))
+      d
+    }
+    // the same batch dirs twice: a byte copy keeps every blockId
+    val copy = tmpDir("fold-copy")
+    java.nio.file.Files.walk(java.nio.file.Paths.get(src)).forEach { p =>
+      val to = java.nio.file.Paths.get(copy).resolve(java.nio.file.Paths.get(src).relativize(p))
+      if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(to)
+      else java.nio.file.Files.copy(p, to)
+    }
+    val t1 = s"${tmpDir("fold-one")}/st"
+    val fused = TokenEncoder.compactStore(s, dirs, t1)
+    val staging = s"${tmpDir("fold-staging")}/m"
+    assert(TokenEncoder.mergeStores(s, dirs.map(_.replace(src, copy)), staging).rowLevel)
+    val t2 = s"${tmpDir("fold-two")}/st"
+    val staged = TokenEncoder.compactStore(s, Seq(staging), t2)
+    assert(fused == staged)
+    assert(fused.partsCopied > 0 && fused.partsReencoded > 0, s"both paths must engage: $fused")
+    val (r1, r2) = (TokenDecoder.read(s, t1).toDF(), TokenDecoder.read(s, t2).toDF())
+    assert(r1.exceptAll(r2).count() == 0 && r2.exceptAll(r1).count() == 0)
+    assert(r1.count() == full.count())
+    def blkSet(d: String) = s.read.parquet(s"$d/blocks")
+      .select("blockId", "checksum").collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSet
+    val batchBlocks = dirs.map(blkSet).reduce(_ ++ _)
+    val verbatim = blkSet(t1).intersect(batchBlocks)
+    assert(verbatim.nonEmpty && verbatim == blkSet(t2).intersect(batchBlocks))
+  }
 }
