@@ -1198,7 +1198,7 @@ object CompressedSearch {
     * correctness dependency.
     *
     * The pre-selection reads the store's snapshot, so an unchanged
-    * store pays no lineage/marker/index join per call:
+    * store pays no marker read or index join per call:
     *  - over driver rows ([[TokenDecoder.LiveRows]], a store within
     *    the snapshot bounds) it is a driver loop, with no Spark job;
     *    there are at most [[MaxSelectedBlockIds]] rows, so the

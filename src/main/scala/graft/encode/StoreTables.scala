@@ -198,11 +198,11 @@ private[graft] object StoreTables {
 
   /** The store's snapshot signature: (path, length, mtime) of every
     * entry of `blocks/`, `lineage/`, `completed/` and `tokidx/` — the
-    * four tables the live-block answer depends on — in one Hadoop-FS
-    * listing per dir, so it holds on every store filesystem. graft
-    * never rewrites a data file in place (every write job names fresh
-    * files), so any commit, resume, index build, vacuum or re-encode
-    * changes it. A missing dir lists as empty.
+    * four tables the live-block answer and its protocol checks read —
+    * in one Hadoop-FS listing per dir, so it holds on every store
+    * filesystem. graft never rewrites a data file in place (every write
+    * job names fresh files), so any commit, resume, index build, vacuum
+    * or re-encode changes it. A missing dir lists as empty.
     */
   def signature(spark: SparkSession, outDir: String): Seq[(String, Long, Long)] = {
     val root = new Path(outDir)

@@ -21,8 +21,8 @@ import graft.model.{EncodedBlock, LineageRecord, TokenRow}
   * (partId, runId) marker exists, written strictly after that run's
   * blocks and lineage (lineage alone is NOT commitment — a crash
   * between the two commits leaves lineage without markers). Readers
-  * keep blocks that have a lineage row AND a marked (partId, runId);
-  * resume re-encodes unmarked partitions — no duplicates, no skips.
+  * keep exactly the blocks whose own (partId, runId) is marked; resume
+  * re-encodes unmarked partitions — no duplicates, no skips.
   * This emulates Iceberg snapshot semantics on plain parquet (no
   * Iceberg jar ships in this environment — SURVEY.md §7.0); the seam
   * is confined to `run`'s commit tail and `committedPartIds`.
@@ -369,14 +369,17 @@ object TokenEncoder {
     * so the fsck can report on stores whose tables do not fit
     * [[StoreTables]]' schemas at all. A dir that exists with NO
     * committed files (only _temporary from a killed write job) reads
-    * as None. Every other reader uses the fixed schemas.
+    * as None. A file that is not readable parquet (truncated, say) is
+    * skipped, so its rows count as missing and the fsck flags them
+    * instead of failing. Every other reader uses the fixed schemas.
     */
   private[encode] def safeReadParquet(spark: SparkSession, path: String,
       mergeSchema: Boolean = false): Option[org.apache.spark.sql.DataFrame] = {
     val (fs, p) = StoreTables.resolve(spark, path)
     if (!fs.exists(p)) None
     else {
-      try Some(spark.read.option("mergeSchema", mergeSchema).parquet(path))
+      try Some(spark.read.option("mergeSchema", mergeSchema)
+        .option("ignoreCorruptFiles", "true").parquet(path))
       catch { case _: org.apache.spark.sql.AnalysisException => None }
     }
   }
@@ -558,19 +561,19 @@ object TokenEncoder {
 
   /** Garbage-collect blocks from crashed (uncommitted) runs: rewrite
     * the blocks table keeping only the live blocks. Readers already
-    * ignore uncommitted blocks ([[TokenDecoder.committedBlocks]]: a
-    * driver-resolved `blockId IN` filter within its bound, the
-    * lineage/marker semi-joins above it), so vacuum is purely a space
-    * reclaim and safe to run any time after encode.
+    * ignore uncommitted blocks ([[TokenDecoder.committedBlocks]]: the
+    * block row's (partId, runId) checked against the commit markers),
+    * so vacuum is purely a space reclaim and safe to run any time after
+    * encode.
     */
   def vacuum(spark: SparkSession, outDir: String): Long = {
     import spark.implicits._
     val blocksPath = s"$outDir/blocks"
     val blocks = StoreTables.read(spark, blocksPath, StoreTables.Blocks)
     val total = blocks.count()
-    // the reader's own "live" definition (lineage + commit marker), so
-    // vacuum also reclaims a crashed run's blocks whose lineage landed
-    // but whose markers never did
+    // the reader's own "live" definition (a commit marker), so vacuum
+    // also reclaims a crashed run's blocks whose lineage landed but
+    // whose markers never did
     val live = TokenDecoder.committedBlocks(spark, outDir, None)
     val keep = live.count()
     if (keep == total) return 0L
@@ -785,10 +788,9 @@ object TokenEncoder {
       else None)
     // committedBlocks reads the fixed blocks schema, so mixed-era inputs
     // union into one uniform schema (a legacy file's absent zone/bloom
-    // columns land as null: no pruning). By name: its join form (a
-    // store over the driver bound) puts the join keys first
+    // columns land as null: no pruning)
     val live = inDirs.map(TokenDecoder.committedBlocks(spark, _, None))
-      .reduce(_ unionByName _)
+      .reduce(_ union _)
     val ids = drop.toSeq
     val hit =
       if (ids.isEmpty) lit(false)
@@ -1109,23 +1111,22 @@ object TokenDecoder {
 
   /** Committed blocks, optionally partId-pruned — the ONE definition
     * of "live block" every decode path (and vacuum) shares: the block
-    * has a lineage row AND its (partId, runId) carries a commit
-    * marker. The marker filter excludes a crashed run's orphans even
-    * when that crash happened AFTER its lineage landed but before its
-    * markers did (the resume then re-encoded those partIds — without
-    * this filter readers would see both copies).
+    * row's own (partId, runId) carries a commit marker. The markers are
+    * written strictly after the run's blocks and lineage, so the filter
+    * excludes a crashed run's orphans even when that crash happened
+    * AFTER its lineage landed but before its markers did (the resume
+    * then re-encoded those partIds — without this filter readers would
+    * see both copies). Lineage membership adds nothing to it: `run`
+    * collects lineage as the readback of every block file of its runId
+    * before it writes the markers, and the store rewrites copy the live
+    * blocks' lineage rows before their markers (StoreFaultSpec checks
+    * the two rules agree in every crash state).
     *
-    * The live set is resolved on the driver, with no Spark job, when
-    * `lineage/` holds at most [[CompressedSearch.MaxSelectedBlockIds]]
-    * rows ([[StoreTables.readRows]] stops at one past that): `blocks/`
-    * is then scanned once with `blockId IN (lineage ids)` pushed and
-    * the block row's own (partId, runId) checked against the markers
-    * of the lineage rows' partIds. A lineage row carries the partId of
-    * the block row it describes (`run` reads it back from the written
-    * blocks; the store copies move both verbatim), so those markers
-    * are all the ones the block rows can match, and the filter keeps
-    * exactly the rows the two left-semi joins keep. Above the bound
-    * the joins themselves run.
+    * One form at every store size: `blocks/` scanned once, partId-pruned
+    * when `partIds` is given, with the block row's (partId, runId)
+    * looked up in the set of markers read on the driver
+    * ([[TokenEncoder.completedPairs]], O(#partIds) as resume already
+    * holds them). No Spark job, no join.
     */
   private[graft] def committedBlocks(spark: SparkSession, outDir: String,
                               partIds: Option[Set[Int]]): DataFrame = {
@@ -1138,17 +1139,15 @@ object TokenDecoder {
     // file at all is either legacy or a first run crashed before its
     // markers — both need the same answer (re-encode / resume), never
     // an empty read. Both checks are driver-side: a listing, one footer
-    // read, and the lineage rows read here.
-    val lineagePath = s"$outDir/lineage"
-    val lineage = StoreTables.readRows(spark, lineagePath, StoreTables.Lineage,
-      Seq("partId", "blockId"), limit = CompressedSearch.MaxSelectedBlockIds + 1)
+    // read, and (only with no marker file) one lineage row.
     StoreTables.dataFiles(spark, s"$outDir/completed").headOption match {
       case Some(f) if !StoreTables.footerHasColumn(spark, f, "runId") =>
         throw new IllegalStateException(
           s"token store at $outDir predates the commit-marker protocol: " +
           "completed/ lacks the runId column. Re-encode the store (or " +
           "backfill (partId, runId) markers from lineage) before reading.")
-      case None if lineage.nonEmpty =>
+      case None if StoreTables.readRows(spark, s"$outDir/lineage", StoreTables.Lineage,
+          Seq("blockId"), limit = 1).nonEmpty =>
         throw new IllegalStateException(
           s"token store at $outDir has lineage but no completed/ markers — " +
           "either it predates the commit-marker protocol or its first " +
@@ -1168,23 +1167,14 @@ object TokenDecoder {
     val blocks = StoreTables.read(spark, s"$outDir/blocks", StoreTables.Blocks)
     val pruned = partIds.fold(blocks)(ids =>
       blocks.where(col("partId").isInCollection(ids.map(Int.box))))
-    if (lineage.length <= CompressedSearch.MaxSelectedBlockIds) {
-      val parts = lineage.map(_.getInt(0)).toSet
-      // a null runId (a legacy marker file) never matches a block row
-      val marked = TokenEncoder.completedPairs(spark, outDir).collect {
-        case (p, r) if r != null && parts(p) => struct(lit(p), lit(r))
-      }
-      pruned.where(col("blockId").isInCollection(lineage.map(_.getString(1)).distinct) &&
-        struct(col("partId"), col("runId")).isInCollection(marked))
-    } else
-      // over the bound, lineage is non-empty, so the checks above found
-      // committed markers. Left-semi right sides only test existence: no
-      // distinct needed
-      pruned
-        .join(StoreTables.read(spark, lineagePath, StoreTables.Lineage)
-          .select("blockId"), Seq("blockId"), "left_semi")
-        .join(broadcast(StoreTables.read(spark, s"$outDir/completed", StoreTables.Completed)),
-          Seq("partId", "runId"), "left_semi")
+    // a null runId (a legacy marker file) never matches a block row.
+    // A set lookup, not an IN list of (partId, runId) literals: Catalyst
+    // folds and rewrites such a list on every call, ~3 s at 2×10^4
+    // markers and ~15 s at 10^5, while the set is one expression
+    val marked = TokenEncoder.completedPairs(spark, outDir).iterator.collect {
+      case m @ (p, r) if r != null && partIds.forall(_.contains(p)) => m
+    }.toSet
+    pruned.where(udf((p: Int, r: String) => marked((p, r))).apply(col("partId"), col("runId")))
   }
 
   /** Stores whose [[liveBlocks]] snapshot stays cached; the least
@@ -1268,9 +1258,9 @@ object TokenDecoder {
     * codecId, symtab, minTok, maxTok, blockRows, totalTokens, bloomEnc`
     * ([[liveMeta]]) — the snapshot a table format keeps between
     * queries (Delta's log snapshot, Iceberg's cached manifests), so a
-    * search selects blocks without re-running the lineage/marker/index
-    * joins per call. It IS committedBlocks plus the bloom, not a second
-    * liveness rule.
+    * search selects blocks without re-reading the markers or re-running
+    * the index join per call. It IS committedBlocks plus the bloom, not
+    * a second liveness rule.
     *
     * Kept in one of two arms, per (session, outDir), for at most
     * [[LiveFrameStores]] stores:
@@ -1301,8 +1291,8 @@ object TokenDecoder {
     *
     * Both arms read through a sibling of `spark` ([[frameSession]]):
     * the same runtime conf with adaptive execution off. Under AQE, a
-    * scan of a cached plan that holds exchanges (the commit joins'
-    * broadcasts) first materializes the whole cache in a job of its
+    * scan of a cached plan that holds exchanges (the index join's
+    * broadcast) first materializes the whole cache in a job of its
     * own; without it the build's job fills the cache as it reads.
     */
   private[graft] def liveBlocks(spark: SparkSession, outDir: String): LiveBlocks = {

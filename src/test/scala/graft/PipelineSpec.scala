@@ -21,14 +21,22 @@ class PipelineSpec extends SparkSpecBase {
     * cold (it builds the store's live-block snapshot), then warm (the
     * unchanged store's snapshot is reused: block selection runs on the
     * driver, so only the payload scan's jobs are left). The committed
-    * block set is resolved on the driver (lineage and markers read
-    * with no job), so neither decode nor the snapshot build runs a
-    * join's broadcast job.
+    * block set is the blocks scan filtered by the markers, read on the
+    * driver with no job, so neither decode nor the snapshot build runs
+    * a join's broadcast job.
     */
   private val EncodeJobBudget = 6
   private val DecodeJobBudget = 2
   private val CountJobBudget = 4
   private val WarmCountJobBudget = 2
+
+  /** The same decode and cold countTokens over a store with more live
+    * blocks than MaxSelectedBlockIds. The committed block set is one
+    * marker-filtered scan at every size; with the lineage and marker
+    * semi-joins it took over that bound, these were 4 and 7.
+    */
+  private val OverBoundDecodeJobBudget = 2
+  private val OverBoundCountJobBudget = 5
 
   /** Measured Spark jobs per store rewrite (the shapes of the
     * rewrite-budget test below). Every rewrite is one metadata collect
@@ -215,6 +223,30 @@ class PipelineSpec extends SparkSpecBase {
     }
     info(s"countTokens, warm: $warmJobs jobs")
     assert(warmJobs <= WarmCountJobBudget, s"warm countTokens ran $warmJobs jobs")
+  }
+
+  test("an over-bound store's decode and cold countTokens stay within their Spark-job budgets") {
+    // one row per block, about one partId per row: more live blocks
+    // than MaxSelectedBlockIds, so the search snapshot is a cached frame
+    val s = spark
+    import s.implicits._
+    val rows = (0 until CompressedSearch.MaxSelectedBlockIds + 104).map { i =>
+      val toks = Array(i % 50, 7, 100 + i % 30)
+      TokenRow(f"ob-$i%05d", toks, toks.length, "s")
+    }
+    val out = tmpDir("job-budget-over")
+    TokenEncoder.run(s.createDataset(rows), out,
+      EncodeConfig(targetRowsPerPart = 1, blockRows = 1))
+    TokenIndex.build(spark, out)
+    val decodeJobs = jobsOf { assert(TokenDecoder.read(spark, out).count() == rows.size); () }
+    info(s"decode, over the bound: $decodeJobs jobs")
+    assert(decodeJobs <= OverBoundDecodeJobBudget, s"decode ran $decodeJobs jobs")
+    val want = rows.map(_.tokens.count(t => t >= 100 && t <= 116).toLong).sum
+    val countJobs = jobsOf {
+      assert(CompressedSearch.countTokens(spark, out, 100, 116).first().getLong(0) == want); ()
+    }
+    info(s"countTokens, cold, over the bound: $countJobs jobs")
+    assert(countJobs <= OverBoundCountJobBudget, s"countTokens ran $countJobs jobs")
   }
 
   test("savePlan refuses to replace a different pinned plan") {

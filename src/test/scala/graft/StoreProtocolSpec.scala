@@ -5,10 +5,11 @@ package graft
   * definition.
   */
 class StoreProtocolSpec extends SparkSpecBase {
+  import StoreProtocolSpec.{joinedBlocks, rowsOf}
   import graft.encode.{CompressedSearch, StoreTables, TokenDecoder, TokenEncoder}
   import graft.encode.TokenEncoder.EncodeConfig
   import graft.model.TokenRow
-  import org.apache.spark.sql.{DataFrame, Row}
+  import org.apache.spark.sql.Row
   import org.apache.spark.sql.functions._
 
   private def synth = graft.synth.TokenSynth.dataset(spark, 400, parallelism = 4)
@@ -103,40 +104,21 @@ class StoreProtocolSpec extends SparkSpecBase {
     assert(driverRows == sparkRows)
   }
 
-  /** The live-block set as its definition spells it: blocks ⋉ lineage
-    * on blockId, then ⋉ the completed/ markers on (partId, runId).
-    */
-  private def joinedBlocks(dir: String, partIds: Option[Set[Int]]): DataFrame = {
-    val blocks = StoreTables.read(spark, s"$dir/blocks", StoreTables.Blocks)
-    partIds.fold(blocks)(ids => blocks.where(col("partId").isInCollection(ids)))
-      .join(StoreTables.read(spark, s"$dir/lineage", StoreTables.Lineage).select("blockId"),
-        Seq("blockId"), "left_semi")
-      .join(StoreTables.read(spark, s"$dir/completed", StoreTables.Completed),
-        Seq("partId", "runId"), "left_semi")
-  }
-
-  private def rowsOf(df: DataFrame): Seq[String] =
-    df.select(StoreTables.Blocks.fieldNames.toSeq.map(col): _*).collect().toSeq
-      .map(_.toSeq.map {
-        case b: Array[Byte] => java.util.Base64.getEncoder.encodeToString(b)
-        case v => String.valueOf(v)
-      }.mkString("|"))
-      .sorted
-
   /** committedBlocks(dir, partIds) holds the two joins' rows, row for
-    * row, and runs as a single filtered scan exactly when lineage holds
-    * at most MaxSelectedBlockIds rows. Returns the live row count.
+    * row, and runs as a single filtered scan with no join at every
+    * store size. Returns the live row count.
     */
   private def sameAsJoins(dir: String, step: String,
                           partIds: Option[Set[Int]] = None): Int = {
     val lineageRows = spark.read.parquet(s"$dir/lineage").count()
-    val driverArm = lineageRows <= CompressedSearch.MaxSelectedBlockIds
+    val markers = spark.read.parquet(s"$dir/completed").count()
     val got = TokenDecoder.committedBlocks(spark, dir, partIds)
     val plan = got.queryExecution.executedPlan.toString
-    assert(plan.contains("Join") != driverArm,
-      s"$step ($lineageRows lineage rows) took the wrong form:\n$plan")
-    val want = rowsOf(joinedBlocks(dir, partIds))
+    assert(!plan.contains("Join"), s"$step ($lineageRows lineage rows) plans a join:\n$plan")
+    val want = rowsOf(joinedBlocks(spark, dir, partIds))
     assert(rowsOf(got) == want, s"$step: committed blocks differ from the two-join form")
+    info(s"${step.take(60)}: $lineageRows lineage rows, $markers markers, " +
+      s"${want.size} live blocks")
     want.size
   }
 
@@ -205,23 +187,48 @@ class StoreProtocolSpec extends SparkSpecBase {
   test("committedBlocks = the two-join form on every store shape, over the bound") {
     // one-row blocks: the resumed store holds more than
     // MaxSelectedBlockIds lineage rows, the half-committed one fewer
-    val n = CompressedSearch.MaxSelectedBlockIds + 104
-    val rows = (0 until n).map { i =>
-      val toks = Array(i % 50, 7, 1000 + i)
-      TokenRow(f"cap-$i%05d", toks, toks.length, "s")
-    }
-    eachStoreShape(rows, EncodeConfig(targetRowsPerPart = 1000, blockRows = 1))
+    eachStoreShape(overBound("cap"), EncodeConfig(targetRowsPerPart = 1000, blockRows = 1))
   }
 
-  test("a within-bound full decode plans one filtered scan: no join, no broadcast") {
+  test("committedBlocks = the two-join form on every store shape, over 4,096 markers") {
+    // about one partId per row, twice MaxSelectedBlockIds rows: from
+    // the resume on, the store holds more (partId, runId) markers than
+    // MaxSelectedBlockIds
+    eachStoreShape(overBound("mark", 2), EncodeConfig(targetRowsPerPart = 1))
+  }
+
+  /** `times` × MaxSelectedBlockIds rows and 104 more, each with its own
+    * doc id.
+    */
+  private def overBound(tag: String, times: Int = 1): Seq[TokenRow] =
+    (0 until times * CompressedSearch.MaxSelectedBlockIds + 104).map { i =>
+      val toks = Array(i % 50, 7, 1000 + i)
+      TokenRow(f"$tag-$i%05d", toks, toks.length, "s")
+    }
+
+  /** A full decode of `ds` encoded under `cfg` plans one filtered scan. */
+  private def decodesInOneScan(ds: org.apache.spark.sql.Dataset[TokenRow],
+                               cfg: EncodeConfig): Unit = {
     val out = tmpDir("decode-plan")
-    val ds = synth
-    TokenEncoder.run(ds, out, EncodeConfig(targetRowsPerPart = 100))
+    TokenEncoder.run(ds, out, cfg)
     val read = TokenDecoder.read(spark, out)
     assert(read.count() == ds.count())
     val plan = read.queryExecution.executedPlan.toString
     for (op <- Seq("Join", "BroadcastExchange"))
       assert(!plan.contains(op), s"full decode plans a $op:\n$plan")
+  }
+
+  test("a within-bound full decode plans one filtered scan: no join, no broadcast") {
+    decodesInOneScan(synth, EncodeConfig(targetRowsPerPart = 100))
+  }
+
+  test("an over-bound full decode plans one filtered scan: no join, no broadcast") {
+    // one-row blocks: more lineage rows than MaxSelectedBlockIds, where
+    // the lineage and marker joins used to take over
+    val s = spark
+    import s.implicits._
+    decodesInOneScan(s.createDataset(overBound("dec")),
+      EncodeConfig(targetRowsPerPart = 1, blockRows = 1))
   }
 
   test("a file: URI store encodes, resumes, streams, compacts and vacuums") {
@@ -261,4 +268,31 @@ class StoreProtocolSpec extends SparkSpecBase {
     same(TokenDecoder.read(s, target))
     assert(!new java.io.File("file:").exists(), "a store path landed under the working dir")
   }
+}
+
+object StoreProtocolSpec {
+  import graft.encode.StoreTables
+  import org.apache.spark.sql.{DataFrame, SparkSession}
+  import org.apache.spark.sql.functions.col
+
+  /** The live-block set as its definition spells it: blocks ⋉ lineage
+    * on blockId, then ⋉ the completed/ markers on (partId, runId).
+    */
+  def joinedBlocks(spark: SparkSession, dir: String, partIds: Option[Set[Int]]): DataFrame = {
+    val blocks = StoreTables.read(spark, s"$dir/blocks", StoreTables.Blocks)
+    partIds.fold(blocks)(ids => blocks.where(col("partId").isInCollection(ids)))
+      .join(StoreTables.read(spark, s"$dir/lineage", StoreTables.Lineage).select("blockId"),
+        Seq("blockId"), "left_semi")
+      .join(StoreTables.read(spark, s"$dir/completed", StoreTables.Completed),
+        Seq("partId", "runId"), "left_semi")
+  }
+
+  /** `df`'s block rows as sorted strings, payload bytes included. */
+  def rowsOf(df: DataFrame): Seq[String] =
+    df.select(StoreTables.Blocks.fieldNames.toSeq.map(col): _*).collect().toSeq
+      .map(_.toSeq.map {
+        case b: Array[Byte] => java.util.Base64.getEncoder.encodeToString(b)
+        case v => String.valueOf(v)
+      }.mkString("|"))
+      .sorted
 }

@@ -6,7 +6,8 @@ Reads <out>/<query>/ parquet (Spark results) + <out>/oracle_sql.json,
 registers each <sf_dir>/*.parquet as a bare-named DuckDB view, runs the
 oracle SQL, and compares: row count, column names, and values (columns
 sorted by name, rows sorted by all columns, floats rounded to 9 sig
-digits before hashing).
+digits before hashing). Every oracle_sql.json query counts: one with no
+output dir (Verify writes none for a query that failed) is a FAIL.
 """
 import json, os, sys, math
 import duckdb
@@ -37,9 +38,13 @@ def main():
             name = f[:-8]
             con.sql(f"CREATE VIEW {name} AS SELECT * FROM '{sf_dir}/{f}'")
     n_pass = n_fail = 0
-    for q in sorted(os.listdir(out_dir)):
+    queries = set(oracle) | {d for d in os.listdir(out_dir)
+                             if os.path.isdir(os.path.join(out_dir, d))}
+    for q in sorted(queries):
         qdir = os.path.join(out_dir, q)
         if not os.path.isdir(qdir):
+            print(f"FAIL {q}: no output")
+            n_fail += 1
             continue
         try:
             spark_rel = con.sql(f"SELECT * FROM '{qdir}/*.parquet'")
